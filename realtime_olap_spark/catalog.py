@@ -426,8 +426,8 @@ def _derived_doc_signals(cat: "Catalog") -> DataFrame:
     t = F.col("text")
     return docs.select(
         "doc_id", "source", "lang",
-        T.detect_language(t).alias("detected_lang"),
-        T.quality_score(t).alias("quality_score"),
+        T.detect_language("text").alias("detected_lang"),
+        T.quality_score("text").alias("quality_score"),
         T.token_count(t).alias("n_tokens"),
         T.bpe_ish_token_count(t).alias("n_bpe_tokens"),
         F.length(t).alias("n_chars"),

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.text import words
+from realtime_olap_spark import sqlexpr as X
 
 #: End-of-word marker symbol (kept distinct from any character so merges
 #: crossing word boundaries are impossible and decoding is unambiguous).
@@ -48,7 +48,8 @@ def word_counts(df: DataFrame, text_col: str,
     """``(word, n)`` corpus vocabulary — the one corpus-wide shuffle of
     BPE training. ``max_vocab`` keeps the most frequent words
     (count desc, word asc: deterministic)."""
-    wc = (df.select(F.explode(words(F.col(text_col))).alias("word"))
+    wc = (df.select(F.explode(F.expr(X.words_sql(X.col_sql(text_col))))
+                    .alias("word"))
           .groupBy("word").agg(F.count(F.lit(1)).alias("n")))
     if max_vocab is not None:
         wc = wc.orderBy(F.col("n").desc(), F.col("word").asc()) \

@@ -26,31 +26,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.text import words
+from realtime_olap_spark import sqlexpr as X
 
 
-def chunk_spans(text: Column, chunk_tokens: int,
+def chunk_spans(text: str, chunk_tokens: int,
                 overlap_tokens: int = 0) -> Column:
     """Array of ``struct<chunk_text, chunk_ntok>`` sliding windows over the
-    whitespace tokens of ``text``."""
+    whitespace tokens of the column named ``text``."""
     if not 0 <= overlap_tokens < chunk_tokens:
         raise ValueError(
             f"need 0 <= overlap ({overlap_tokens}) < chunk ({chunk_tokens})")
     stride = chunk_tokens - overlap_tokens
-    ws = words(text)
-    n = F.size(ws)
-    n_chunks = (F.lit(1)
-                + F.ceil(F.greatest(n - chunk_tokens, F.lit(0))
-                         / F.lit(stride)).cast("int"))
-    starts = F.when(n > 0, F.sequence(F.lit(0), n_chunks - 1)) \
-        .otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        starts,
-        lambda i: F.struct(
-            F.concat_ws(" ", F.slice(ws, i * stride + 1, chunk_tokens))
-            .alias("chunk_text"),
-            F.least(F.lit(chunk_tokens), n - i * stride)
-            .cast("long").alias("chunk_ntok")))
+    ws = X.words_sql(X.col_sql(text))
+    n = f"size({ws})"
+    n_chunks = (f"(1 + CAST(ceil(greatest({n} - {chunk_tokens}, 0) "
+                f"/ {stride}) AS INT))")
+    starts = (f"CASE WHEN {n} > 0 THEN sequence(0, {n_chunks} - 1) "
+              f"ELSE CAST(array() AS ARRAY<INT>) END")
+    return F.expr(
+        f"transform({starts}, i -> struct("
+        f"concat_ws(' ', slice({ws}, i * {stride} + 1, {chunk_tokens})) "
+        f"AS chunk_text, "
+        f"CAST(least({chunk_tokens}, {n} - i * {stride}) AS BIGINT) "
+        f"AS chunk_ntok))")
 
 
 def chunk_documents(df: DataFrame, id_col: str, text_col: str,
@@ -58,7 +56,7 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
     """One row per chunk: ``(id, chunk_idx, chunk_text, chunk_ntok)``.
     ``chunk_idx`` is 0-based within the document; ``(id, chunk_idx)`` is
     the deterministic chunk key downstream embedding tables join on."""
-    spans = chunk_spans(F.col(text_col), chunk_tokens, overlap_tokens)
+    spans = chunk_spans(text_col, chunk_tokens, overlap_tokens)
     return (df.select(F.col(id_col),
                       F.posexplode(spans).alias("chunk_idx", "c"))
             .select(id_col, "chunk_idx",

@@ -39,6 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from realtime_olap_spark import sqlexpr as X
 from realtime_olap_spark.operators.importance import gram_buckets
 
 #: Default feature-space size: small enough that the weight LUT is one
@@ -106,7 +107,7 @@ def _features(df: DataFrame, text_col: str, label: int,
     # contribute their bias/loss sentinel row — otherwise they'd count
     # in n_docs but emit no gradient rows (explode(NULL) = nothing),
     # silently shrinking every step and desyncing the numpy twin
-    b = F.coalesce(gram_buckets(F.col(text_col), n_buckets),
+    b = F.coalesce(gram_buckets(text_col, n_buckets),
                    F.array().cast("array<int>"))
     return df.select(b.alias("bk"), F.size(b).alias("ng"),
                      F.lit(float(label)).alias("y"))
@@ -189,19 +190,21 @@ def _gd_loop(feats: DataFrame, n_docs: int, w: list[float], b0: float,
     return w, b0
 
 
-def quality_score(text: Column, model: QualityModel) -> Column:
-    """P(high-quality | doc) — the zero-shuffle scoring fold. Zero-gram
-    docs score ``sigmoid(bias)`` (the class prior)."""
+def quality_score(text: str, model: QualityModel) -> Column:
+    """P(high-quality | doc) of the column named ``text`` — the
+    zero-shuffle scoring fold. Zero-gram docs score ``sigmoid(bias)``
+    (the class prior)."""
     b = gram_buckets(text, model.n_buckets)
     m = _margin(b, F.size(b), list(model.weights), model.bias)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
 
 
-def quality_margin_portable(text: Column, n_buckets: int = 1024,
+def quality_margin_portable(text: str, n_buckets: int = 1024,
                             bias: float = 0.0) -> Column:
-    """The scoring fold in ORACLE-CHECKABLE form: the linear margin
+    """The scoring fold over the column named ``text`` in
+    ORACLE-CHECKABLE form: the linear margin
     ``bias + (Σ_grams w[bucket(gram)]) / n_grams`` over the PORTABLE md5
-    bucket space (``importance.gram_buckets_md5`` — byte-identical in any
+    bucket space (``sqlexpr.gram_buckets_md5_sql`` — byte-identical in any
     engine with md5), with DETERMINISTIC weights computed inline from the
     bucket id, ``w[b] = ((3·b) mod 7 − 3) / 5`` — exact integer
     arithmetic then one correctly-rounded division, so any SQL engine
@@ -210,15 +213,12 @@ def quality_margin_portable(text: Column, n_buckets: int = 1024,
     sigmoid is deliberately omitted: engine ``exp`` is not cross-engine
     reproducible (the log2 lesson), and the margin's SIGN already is the
     keep decision. Zero shuffle; zero-gram docs carry the bias alone."""
-    from realtime_olap_spark.operators.importance import gram_buckets_md5
-    b = gram_buckets_md5(text, n_buckets)
-    s = F.aggregate(
-        b, F.lit(0.0),
-        lambda acc, bk: acc + ((bk * F.lit(3)) % F.lit(7) - F.lit(3))
-        .cast("double") / F.lit(5.0))
-    n = F.size(b)
-    return F.lit(float(bias)) + F.when(
-        n > 0, s / n.cast("double")).otherwise(F.lit(0.0))
+    b = X.gram_buckets_md5_sql(X.col_sql(text), n_buckets)
+    s = (f"aggregate({b}, 0.0D, (acc, bk) -> "
+         f"acc + CAST((bk * 3) % 7 - 3 AS DOUBLE) / 5.0D)")
+    return F.expr(f"CAST('{float(bias)!r}' AS DOUBLE) + "
+                  f"CASE WHEN size({b}) > 0 "
+                  f"THEN {s} / CAST(size({b}) AS DOUBLE) ELSE 0.0D END")
 
 
 def quality_filter(df: DataFrame, text_col: str, model: QualityModel,
@@ -227,7 +227,7 @@ def quality_filter(df: DataFrame, text_col: str, model: QualityModel,
     """Keep rows scoring ≥ threshold (or, with ``score_col``, attach the
     score and keep every row) — pure scan, composes with the rest of the
     curation pipeline like the mixture / decontam gates."""
-    s = quality_score(F.col(text_col), model)
+    s = quality_score(text_col, model)
     if score_col is not None:
         return df.withColumn(score_col, s)
     return df.where(s >= F.lit(float(threshold)))

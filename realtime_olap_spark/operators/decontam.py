@@ -27,38 +27,17 @@ Spark shape mirrors the MinHash band join in ``operators/dedup.py``.
 
 from __future__ import annotations
 
-import re as _re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.text import word_ngrams
+from realtime_olap_spark import sqlexpr as X
 
 
-_PLAIN_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def ngram_hash_set(text: Column | str, n: int) -> Column:
-    """Distinct xxhash64 codes of the text's word n-grams (order-free set,
-    8 bytes/gram) — the per-row unit both sides of decontamination share.
-    A ``str`` argument is a COLUMN NAME under ``F.col`` semantics (the
-    convention every operator's str argument follows, e.g.
-    ``dedup.word_set`` — so dots still mean struct-field access; r17
-    narrowed this from the short-lived r16 treat-as-SQL-expression
-    behavior per ADVICE #1: pass a Column for expressions). Plain
-    identifiers route through the single-parse sqlexpr twin — the
-    identical tree at ~1/70th the construction cost (plan+value-pinned
-    in tests/test_sqlexpr.py), backtick-quoted so reserved words parse
-    as names — and anything else takes the F.col path, so a name
-    containing operators cannot be parsed as an expression."""
-    if isinstance(text, str):
-        if _PLAIN_IDENT.match(text):
-            # backtick-quoted so even a reserved word parses as a name
-            from realtime_olap_spark.sqlexpr import ngram_hash_set_sql  # noqa: PLC0415
-            return F.expr(ngram_hash_set_sql(f"`{text}`", n))
-        text = F.col(text)
-    return F.array_distinct(
-        F.transform(word_ngrams(text, n), lambda g: F.xxhash64(g)))
+def ngram_hash_set(text: str, n: int) -> Column:
+    """``sqlexpr.ngram_hash_set_sql`` of the column named ``text`` — a
+    name under ``F.col`` semantics (dots mean struct-field access;
+    reserved words and operator characters stay names)."""
+    return F.expr(X.ngram_hash_set_sql(X.col_sql(text), n))
 
 
 def benchmark_gram_hashes(bench: DataFrame, text_col: str, n: int) -> DataFrame:
@@ -121,10 +100,10 @@ def contaminated_positions(docs: DataFrame, bench_hashes: DataFrame,
     contaminated docs appear. One scan-side posexplode of the doc's
     window hashes, one (broadcast) semi-join against the benchmark hash
     set, one per-id aggregation of the (tiny) hit lists."""
+    grams = X.word_ngrams_sql(X.col_sql(text_col), n)
     occ = (docs.select(
         F.col(id_col),
-        F.posexplode(F.transform(word_ngrams(F.col(text_col), n),
-                                 lambda g: F.xxhash64(g)))
+        F.posexplode(F.expr(f"transform({grams}, g -> xxhash64(g))"))
         .alias("pos", "h")))
     hits = occ.join(
         F.broadcast(bench_hashes.select(F.col("gram_hash").alias("h"))),
@@ -152,17 +131,11 @@ def remove_contaminated_spans(docs: DataFrame, bench: DataFrame,
     never shuffled — the marks table is contaminated-docs-small and
     broadcasts back, the token filter is the same scan-side positional
     exists-probe as span dedup (operators/spans.py)."""
-    from realtime_olap_spark.operators.text import words  # noqa: PLC0415
     bcol = bench_text_col or text_col
     marks = contaminated_positions(
         docs, benchmark_gram_hashes(bench, bcol, n), id_col, text_col, n)
-    empty = F.array().cast("array<int>")
-    hit_pos = F.coalesce(F.col("hit_pos"), empty)
-    kept = F.filter(
-        words(F.col(text_col)),
-        lambda x, i: ~F.exists(hit_pos,
-                               lambda p: (p <= i) & (i < p + F.lit(n))))
+    kept = X.uncovered_text_sql(X.col_sql(text_col), "hit_pos", n)
     out = out_col or text_col
     return (docs.join(F.broadcast(marks), id_col, "left")
-            .withColumn(out, F.array_join(kept, " "))
+            .withColumn(out, F.expr(kept))
             .drop("hit_pos"))

@@ -24,13 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def word_set(text: Column | str) -> Column:
-    """Distinct lowercase word shingles (k=1 word shingling — the shingle
-    builder both engines can express identically; larger k is a transform
-    on this array)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.array_distinct(F.split(F.lower(c), " "))
+from realtime_olap_spark import sqlexpr as X
 
 
 # ---------------------------------------------------------------------------
@@ -135,10 +129,11 @@ def hashed_word_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     set size — the verify-side table every Jaccard stage consumes (and
     the ``corpus_words`` contract of ``minhash_lsh_pairs_against``). At
     ingest scale, materialize this once next to the band table."""
+    text = X.col_sql(text_col)
     return df.select(
         F.col(id_col),
-        F.transform(word_set(text_col), lambda w: word_hash60(w)).alias("wh"),
-        F.size(word_set(text_col)).alias("nw"))
+        F.expr(X.word_hashes_sql(text)).alias("wh"),
+        F.expr(f"size({X.word_set_sql(text)})").alias("nw"))
 
 
 def jaccard_verify(cands: DataFrame, words: DataFrame, id_col: str,
@@ -205,12 +200,6 @@ def minhash_lsh_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def word_hash60(w: Column) -> Column:
-    """60-bit word hash from the md5 hex prefix — parses identically as
-    Spark conv(hex,16,10) and SQL '0x…'::UBIGINT (fits in a signed 64-bit)."""
-    return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
     """SimHash fingerprint: bit j of the fingerprint is the sign of
     Σ_words (±1 per word's hash bit j) — equivalently, set iff more than
@@ -227,15 +216,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     scan-side: no explode, no shuffle, one md5 per word; at 100 TB the
     operator costs exactly one pass over the text column.
     """
-    # sqlexpr twins of the hash projection and the bits-fold fingerprint
-    # (plan+value pinned in tests/test_sqlexpr.py): the Column-API build
-    # of the 16 aggregate folds costs ~0.2 s of py4j round trips per
-    # construction; the two single-parse expressions build in ~2 ms.
-    from realtime_olap_spark import sqlexpr as X  # noqa: PLC0415
     hashed = df.select(
         F.col(id_col),
-        F.expr(f"transform({X.word_set_sql(text_col)}, "
-               f"w -> {X.word_hash60_sql('w')})").alias("__wh"))
+        F.expr(X.word_hashes_sql(X.col_sql(text_col))).alias("__wh"))
     return hashed.select(F.col(id_col),
                          F.expr(X.simhash_fp_sql("__wh", bits))
                          .alias("simhash"))
@@ -322,8 +305,8 @@ def minhash_bands(df: DataFrame, id_col: str, text_col: str,
     unit of INCREMENTAL dedup: persist this for the corpus once (partition
     or bucket by ``band_key``), and each new ingest batch joins its own
     (tiny) band table against it instead of re-pairing the corpus."""
-    sigs = df.select(F.col(id_col),
-                     *minhash_signature(word_set(text_col), num_hashes))
+    sigs = df.select(F.col(id_col), *minhash_signature(
+        F.expr(X.word_set_sql(X.col_sql(text_col))), num_hashes))
     return sigs.select(
         F.col(id_col),
         F.explode(F.array(*lsh_band_keys([f"mh{i}" for i in range(num_hashes)],
@@ -348,7 +331,7 @@ def minhash_lsh_pairs_against(new_df: DataFrame, corpus_bands: DataFrame,
     of corpus docs would otherwise amplify every new doc that hits it).
 
     ``corpus_words`` must carry ``(id_col, wh)`` where ``wh`` is
-    ``transform(word_set(text), word_hash60)`` — the same encoding the
+    ``sqlexpr.word_hashes_sql(text)`` — the same encoding the
     verify phase uses everywhere."""
     nb = minhash_bands(new_df, id_col, text_col, num_hashes, band_size)
     cb = corpus_bands

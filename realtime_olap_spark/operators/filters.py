@@ -97,12 +97,6 @@ def mv_isin(col: Column | str, values: Sequence) -> Column:
     return F.arrays_overlap(_c(col), F.array(*[F.lit(v) for v in values]))
 
 
-def mv_not_eq(col: Column | str, value) -> Column:
-    """NOT on MV (outside reference test surface — QueryGenerator.java:33-36):
-    no element equals."""
-    return ~F.array_contains(_c(col), value)
-
-
 def mv_between(col: Column | str, low, high) -> Column:
     """RANGE on an MV column: any element in [low, high]."""
     return F.exists(_c(col), lambda x: x.between(F.lit(low), F.lit(high)))
@@ -122,13 +116,3 @@ def or_(*conds: Column) -> Column:
     for c in conds[1:]:
         out = out | c
     return out
-
-
-def match_all() -> Column:
-    """MatchAllFilterOperator.java:25 — the no-filter shortcut."""
-    return F.lit(True)
-
-
-def match_none() -> Column:
-    """EmptyFilterOperator.java:28."""
-    return F.lit(False)

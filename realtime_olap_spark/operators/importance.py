@@ -39,32 +39,25 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.text import bigrams_from, words
+from realtime_olap_spark import sqlexpr as X
 
 #: Default feature-space size. DSIR uses 10k buckets; small enough that
 #: the log-ratio LUT is one literal array in the plan.
 DEFAULT_BUCKETS = 8192
 
 
-def doc_grams(text: Column) -> Column:
-    """The doc's hashed-feature grams: unigrams + word bigrams (the DSIR
-    feature set), one scan-side array — tokenized once."""
-    ws = words(text)
-    return F.concat(ws, bigrams_from(ws))
-
-
-def gram_buckets(text: Column, n_buckets: int = DEFAULT_BUCKETS) -> Column:
-    """Bucket ids for every gram: ``pmod(xxhash64(gram), B)``."""
-    return F.transform(doc_grams(text),
-                       lambda g: F.pmod(F.xxhash64(g), F.lit(n_buckets))
-                       .cast("int"))
+def gram_buckets(text: str, n_buckets: int = DEFAULT_BUCKETS) -> Column:
+    """Bucket ids for every ``sqlexpr.doc_grams_sql`` gram of the column
+    named ``text``: ``pmod(xxhash64(gram), B)``."""
+    return F.expr(f"transform({X.doc_grams_sql(X.col_sql(text))}, "
+                  f"g -> CAST(pmod(xxhash64(g), {n_buckets}) AS INT))")
 
 
 def bucket_counts(df: DataFrame, text_col: str,
                   n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Corpus bucket histogram ``(bucket, n)`` — one count shuffle of at
     most B rows (map-side combined)."""
-    return (df.select(F.explode(gram_buckets(F.col(text_col), n_buckets))
+    return (df.select(F.explode(gram_buckets(text_col, n_buckets))
                       .alias("bucket"))
               .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
 
@@ -109,7 +102,7 @@ def importance_weights(df: DataFrame, id_col: str, text_col: str,
     from realtime_olap_spark.litarray import lit_doubles  # noqa: PLC0415
     lut_arr = lit_doubles(lut)
     w = F.aggregate(
-        gram_buckets(F.col(text_col), b),
+        gram_buckets(text_col, b),
         F.lit(0.0),
         lambda acc, bk: acc + F.element_at(lut_arr, bk + 1))
     return df.withColumn(weight_col, w)
@@ -147,23 +140,11 @@ def dsir_resample(df: DataFrame, id_col: str, k: int, seed: int = 0,
 PORTABLE_BUCKETS = 1024
 
 
-def gram_buckets_md5(text: Column,
-                     n_buckets: int = PORTABLE_BUCKETS) -> Column:
-    """Bucket ids from the first 8 hex chars of md5 — slower than
-    xxhash64 but byte-identical in any engine with md5 (DuckDB renders
-    it as ``('0x' || substr(md5(g),1,8))::BIGINT % B``), which is what
-    puts the DSIR feature space under a differential oracle."""
-    return F.transform(
-        doc_grams(text),
-        lambda g: (F.conv(F.substring(F.md5(g), 1, 8), 16, 10)
-                   .cast("long") % F.lit(n_buckets)).cast("int"))
-
-
 def bucket_counts_md5(df: DataFrame, text_col: str,
                       n_buckets: int = PORTABLE_BUCKETS) -> DataFrame:
     """``bucket_counts`` over the portable md5 buckets."""
-    return (df.select(F.explode(gram_buckets_md5(F.col(text_col),
-                                                 n_buckets))
+    return (df.select(F.explode(F.expr(X.gram_buckets_md5_sql(
+                          X.col_sql(text_col), n_buckets)))
                       .alias("bucket"))
               .groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
 
@@ -183,15 +164,3 @@ def favored_buckets(target_counts: DataFrame, source_counts: DataFrame,
     return [1 if (tc.get(b, 0) + 1) * (st + n_buckets)
             > (sc.get(b, 0) + 1) * (tt + n_buckets) else 0
             for b in range(n_buckets)]
-
-
-def favored_hits(text: Column, favored: list[int]) -> Column:
-    """Per-doc count of grams landing in favored buckets — an integer
-    scan-side fold against the literal bitmap (same zero-shuffle shape
-    as ``importance_weights``; same one-call literal construction)."""
-    from realtime_olap_spark.litarray import lit_ints  # noqa: PLC0415
-    bitmap = lit_ints(favored)
-    return F.aggregate(
-        gram_buckets_md5(text, len(favored)),
-        F.lit(0).cast("long"),
-        lambda acc, bk: acc + F.element_at(bitmap, bk + 1).cast("long"))

@@ -33,14 +33,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.text import words
+from realtime_olap_spark import sqlexpr as X
 
 
 def train_unigram_freqs(df: DataFrame, text_col: str) -> DataFrame:
     """Corpus unigram table ``(word, n_occ)`` + the grand total attached
     as a constant column ``n_total`` (1-row broadcast cross join — the
     scorer needs both). One count shuffle; persist the result at ingest."""
-    toks = df.select(F.explode(words(F.col(text_col))).alias("word"))
+    toks = df.select(F.explode(F.expr(X.words_sql(X.col_sql(text_col))))
+                     .alias("word"))
     freqs = toks.groupBy("word").agg(F.count(F.lit(1)).alias("n_occ"))
     total = freqs.agg(F.sum("n_occ").alias("n_total"))
     return freqs.crossJoin(F.broadcast(total))
@@ -61,7 +62,8 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
     if freqs is None:
         freqs = train_unigram_freqs(df, text_col)
     toks = df.select(F.col(id_col),
-                     F.explode(words(F.col(text_col))).alias("word"))
+                     F.explode(F.expr(X.words_sql(X.col_sql(text_col))))
+                     .alias("word"))
     # n_total rides along on every freq row (constant column), so OOV rows
     # from the left join need it re-derived: take the max over the table
     # once and attach as a literal-free 1-row broadcast.
@@ -147,9 +149,8 @@ def train_bigram_freqs(df: DataFrame, text_col: str) -> DataFrame:
     (prev, word) pairs (map-side combined, vocabulary²-bounded but in
     practice Zipf-sparse). Persist alongside the unigram table at
     ingest; both are reusable across scoring batches."""
-    from realtime_olap_spark.operators.text import bigrams_from  # noqa: PLC0415
-    pairs = df.select(F.explode(bigrams_from(words(F.col(text_col))))
-                      .alias("pair"))
+    pairs = df.select(F.explode(F.expr(X.bigrams_sql(
+        X.words_sql(X.col_sql(text_col))))).alias("pair"))
     return (pairs
             .select(F.split(F.col("pair"), " ").getItem(0).alias("w1"),
                     F.split(F.col("pair"), " ").getItem(1).alias("w2"))
@@ -176,7 +177,6 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
     Docs with < 2 tokens have no bigrams: they come back with
     ``n_scored = 0`` and NULL score (same every-doc-appears contract as
     ``unigram_logprob``)."""
-    from realtime_olap_spark.operators.text import bigrams_from  # noqa: PLC0415
     if unigram_freqs is None:
         unigram_freqs = train_unigram_freqs(df, text_col)
     if bigram_freqs is None:
@@ -188,7 +188,8 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
     total = unigram_freqs.agg(F.max("n_total").alias("__nt"))
     pairs = df.select(
         F.col(id_col),
-        F.explode(bigrams_from(words(F.col(text_col)))).alias("pair"))
+        F.explode(F.expr(X.bigrams_sql(X.words_sql(X.col_sql(text_col)))))
+        .alias("pair"))
     scored = (pairs
               .select(id_col,
                       F.split(F.col("pair"), " ").getItem(0).alias("w1"),

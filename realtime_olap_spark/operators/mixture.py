@@ -53,7 +53,7 @@ def temperature_mixture_rates(df: DataFrame, group_col: str,
             .drop("__z"))
 
 
-def apply_mixture_rates(df: DataFrame, group_col: str, key: Column | str,
+def apply_mixture_rates(df: DataFrame, group_col: str, key: str,
                         rates: DataFrame,
                         decision_col: str | None = None) -> DataFrame:
     """Filter (or, with ``decision_col``, flag) the corpus by its group's
@@ -76,7 +76,7 @@ def apply_mixture_rates(df: DataFrame, group_col: str, key: Column | str,
 
 
 def temperature_mixture_sample(df: DataFrame, group_col: str,
-                               key: Column | str, token_col: Column | str,
+                               key: str, token_col: Column | str,
                                alpha: float,
                                target_tokens: float) -> DataFrame:
     """One-call mix construction: rates from the corpus itself, then the

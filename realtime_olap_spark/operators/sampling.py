@@ -22,45 +22,45 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.dedup import word_hash60
+from realtime_olap_spark import sqlexpr as X
 
 # hash space for rate decisions: 60-bit hash mod 1e6 → rate granularity 1e-6
 _MOD = 1_000_000
 
 
-def _bucket(key: Column | str) -> Column:
-    """Deterministic per-row bucket in [0, 1e6): md5-based 60-bit hash of
-    the key column's string form — identical in any engine with md5.
+def _bucket(key: str) -> Column:
+    """Deterministic per-row bucket in [0, 1e6): md5-based 60-bit hash
+    (``sqlexpr.word_hash60_sql``) of the string form of the column named
+    ``key`` — identical in any engine with md5.
 
     NULL keys hash a fixed sentinel instead of propagating NULL, so all
     three samplers share one policy: a NULL-key row is an ordinary member
     of the universe (previously hash_sample silently dropped it — NULL <
     cut is never true — while train_test_split routed it to 'train')."""
-    c = F.col(key) if isinstance(key, str) else key
-    return word_hash60(F.coalesce(c.cast("string"),
-                                  F.lit("\x00__null_key__"))) % F.lit(_MOD)
+    k = (f"coalesce(CAST({X.col_sql(key)} AS STRING), "
+         f"{X._sql_str(chr(0) + '__null_key__')})")
+    return F.expr(f"{X.word_hash60_sql(k)} % {_MOD}")
 
 
-def sample_flag(key: Column | str, fraction: float) -> Column:
+def sample_flag(key: str, fraction: float) -> Column:
     """Boolean membership column for the hash sample — the decision
     ``hash_sample`` filters on, exposed so curation audits can carry the
     in/out bit alongside the row instead of dropping rows."""
     return _bucket(key) < F.lit(int(round(fraction * _MOD)))
 
 
-def hash_sample(df: DataFrame, key: Column | str, fraction: float) -> DataFrame:
+def hash_sample(df: DataFrame, key: str, fraction: float) -> DataFrame:
     """Keep ~``fraction`` of rows, decided by the key's hash — stable under
     re-runs, engine changes, and repartitioning (unlike df.sample)."""
     return df.where(sample_flag(key, fraction))
 
 
-def stratified_rank(strata: Sequence[str], key: Column | str) -> Column:
+def stratified_rank(strata: Sequence[str], key: str) -> Column:
     """1-based deterministic rank of a row within its stratum, in hash
     order of the key (string form breaks hash ties): ``rank <= n`` is the
     ``stratified_take`` membership decision."""
-    kc = F.col(key) if isinstance(key, str) else key
     w = Window.partitionBy(*strata).orderBy(_bucket(key).asc(),
-                                            kc.cast("string").asc())
+                                            F.col(key).cast("string").asc())
     return F.row_number().over(w)
 
 
@@ -106,7 +106,7 @@ def stratified_rank_probe(universe: DataFrame, probes: DataFrame,
             .agg(F.count(F.lit(1)).cast("int").alias(rank_name)))
 
 
-def stratified_take(df: DataFrame, strata: Sequence[str], key: Column | str,
+def stratified_take(df: DataFrame, strata: Sequence[str], key: str,
                     n: int) -> DataFrame:
     """At most ``n`` rows per stratum, chosen in hash order of the key —
     the deterministic analog of per-group reservoir sampling (balanced
@@ -116,7 +116,7 @@ def stratified_take(df: DataFrame, strata: Sequence[str], key: Column | str,
             .where(F.col("__rn") <= n).drop("__rn"))
 
 
-def mixture_sample(df: DataFrame, strata_col: str, key: Column | str,
+def mixture_sample(df: DataFrame, strata_col: str, key: str,
                    fractions: dict[str, float],
                    default_fraction: float = 0.0) -> DataFrame:
     """Per-stratum hash-fraction sampling — the training-mix construction
@@ -132,7 +132,7 @@ def mixture_sample(df: DataFrame, strata_col: str, key: Column | str,
     return df.where(_bucket(key) < cut)
 
 
-def train_test_split(df: DataFrame, key: Column | str,
+def train_test_split(df: DataFrame, key: str,
                      test_fraction: float = 0.1,
                      col_name: str = "split") -> DataFrame:
     """Adds a 'train'/'test' column by key hash: membership is a property
@@ -161,6 +161,7 @@ def leakage_safe_split(df: DataFrame, id_col: str, pairs: DataFrame,
         .withColumnRenamed("node", "__node")
     joined = df.join(clusters,
                      F.col(id_col).cast("long") == F.col("__node"), "left")
-    key = F.coalesce(F.col("component"), F.col(id_col).cast("long"))
-    return train_test_split(joined, key, test_fraction, col_name) \
-        .drop("__node", "component")
+    keyed = joined.withColumn(
+        "__key", F.coalesce(F.col("component"), F.col(id_col).cast("long")))
+    return train_test_split(keyed, "__key", test_fraction, col_name) \
+        .drop("__node", "component", "__key")

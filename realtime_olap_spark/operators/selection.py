@@ -25,18 +25,6 @@ from pyspark.sql import functions as F
 DEFAULT_LIMIT = 10  # request.thrift:130-131
 
 
-def select_only(df: DataFrame, columns: Sequence[Column | str],
-                where: Column | None = None, limit: int = DEFAULT_LIMIT) -> DataFrame:
-    """SELECT cols FROM t [WHERE ...] LIMIT n — SelectionOnlyOperator.
-
-    Note the reference returns an arbitrary subset of matching rows; for
-    differential testing callers should add a deterministic ORDER BY.
-    """
-    if where is not None:
-        df = df.where(where)
-    return df.select(*columns).limit(limit)
-
-
 def select_order_by(df: DataFrame, columns: Sequence[Column | str],
                     order_by: Sequence[Column], where: Column | None = None,
                     limit: int = DEFAULT_LIMIT, offset: int = 0) -> DataFrame:

@@ -97,13 +97,6 @@ def _query_bucket(query_vec: list[float], planes: list[list[float]]) -> int:
 # IVF (inverted-file / coarse quantizer)
 # ---------------------------------------------------------------------------
 
-def squared_l2(a: Column, b: Column) -> Column:
-    """||a-b||² = a·a − 2·a·b + b·b — three sequential-fold dot products, so
-    the float op order is reproducible in any engine with an inner-product
-    primitive (oracle-comparable, unlike a resummed list_sum)."""
-    return dot(a, a) - F.lit(2.0) * dot(a, b) + dot(b, b)
-
-
 def _self_dot(v: list[float]) -> float:
     """Driver-side b·b with the executors' sequential-fold order."""
     acc = 0.0

@@ -12,7 +12,7 @@ spans without ever building a global index.
 
 Scale design (100 TB):
 
-- Window hashing is scan-side: the shared ``ngrams_from`` slices
+- Window hashing is scan-side: the ``sqlexpr.ngrams_sql`` shifted slices
   (O(tokens) array work per row) + one ``xxhash64`` per window — no
   UDF, no shuffle.
 - The ONE shuffle carries ``(window_hash, id, pos)`` tuples — 8-byte
@@ -34,25 +34,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.text import words
-
-
-def window_hashes(text: Column, k: int) -> Column:
-    """A 64-bit hash of every sliding k-token window, in position order.
-
-    Each token is xxhash64'd ONCE, then the k token hashes are combined
-    pairwise with ``xxhash64(acc, next)`` over k shifted slices of the
-    token-hash array — the ``ngrams_from`` zip_with shape, but over
-    longs instead of building a k-word string per window (overflow-free
-    under ANSI mode, unlike a wrapping polynomial mix). Two windows are
-    equal ⇔ their token sequences are equal, up to 64-bit collision —
-    the same conservative contract as a string-hash formulation."""
-    return window_hashes_from(
-        F.transform(words(text), lambda w: F.xxhash64(w)), k)
+from realtime_olap_spark import sqlexpr as X
 
 
 def window_hashes_from(th: Column, k: int) -> Column:
-    """Window hashes from a token-hash array column. NOTE: ``th``
+    """A 64-bit hash of every sliding k-token window, in position order,
+    from a token-hash array column: the k token hashes are combined
+    pairwise with ``xxhash64(acc, next)`` over k shifted slices — the
+    ``sqlexpr.ngrams_sql`` zip_with shape, but over longs instead of
+    building a k-word string per window (overflow-free under ANSI mode,
+    unlike a wrapping polynomial mix). Two windows are equal ⇔ their
+    token sequences are equal, up to 64-bit collision. NOTE: ``th``
     appears k+1 times at the top level of this expression and
     interpreted evaluation does no common-subexpression sharing — pass
     a staged column reference (see ``_occurrences``), not a heavy
@@ -70,10 +62,10 @@ def _occurrences(docs: DataFrame, id_col: str, text_col: str,
     """(id, pos, h): every window occurrence, 0-based token position.
     The per-token hash array is staged as a projection alias so the
     split+hash pass runs ONCE per row, not once per shifted slice."""
+    ws = X.words_sql(X.col_sql(text_col))
     staged = docs.select(
         F.col(id_col),
-        F.transform(words(F.col(text_col)),
-                    lambda w: F.xxhash64(w)).alias("__th"))
+        F.expr(f"transform({ws}, w -> xxhash64(w))").alias("__th"))
     return (staged.select(
         F.col(id_col),
         F.posexplode(window_hashes_from(F.col("__th"), k))
@@ -143,8 +135,7 @@ def span_dup_stats(docs: DataFrame, id_col: str, text_col: str,
         marks = F.broadcast(marks)
     elif broadcast_marks is False:
         marks = marks.hint("merge")
-    ws = words(F.col(text_col))
-    n_tokens = F.size(ws)
+    n_tokens = F.expr(f"size({X.words_sql(X.col_sql(text_col))})")
     n_windows = F.greatest(n_tokens - (k - 1), F.lit(0))
     empty = F.array().cast("array<int>")
     dup_pos = F.coalesce(F.col("dup_pos"), empty)
@@ -218,13 +209,8 @@ def remove_duplicated_spans(docs: DataFrame, id_col: str, text_col: str,
         marks = F.broadcast(marks)
     elif broadcast_marks is False:
         marks = marks.hint("merge")
-    empty = F.array().cast("array<int>")
-    dup_pos = F.coalesce(F.col("dup_pos"), empty)
-    kept = F.filter(
-        words(F.col(text_col)),
-        lambda x, i: ~F.exists(dup_pos,
-                               lambda p: (p <= i) & (i < p + F.lit(k))))
+    kept = X.uncovered_text_sql(X.col_sql(text_col), "dup_pos", k)
     out = out_col or text_col
     return (docs.join(marks, id_col, "left")
-            .withColumn(out, F.array_join(kept, " "))
+            .withColumn(out, F.expr(kept))
             .drop("dup_pos"))

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from realtime_olap_spark import sqlexpr as X
+
 # Tiny per-language stopword marker sets: the n-gram-heuristic language ID
 # (score = how many of the language's markers appear as words). Real
 # pipelines use fastText/CLD3; the *Spark shape* — per-row scoring against
@@ -31,11 +33,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def words(text: Column) -> Column:
-    """Whitespace tokens of the lowercased text (empty-token free)."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
-
-
 def lang_score_from(distinct_words: Column, markers: list[str]) -> Column:
     """Number of marker words present (distinct markers hit), over an
     already-distinct word array — share ONE split+distinct across all
@@ -45,11 +42,6 @@ def lang_score_from(distinct_words: Column, markers: list[str]) -> Column:
         score = score + F.when(F.array_contains(distinct_words, m), 1) \
             .otherwise(0)
     return score
-
-
-def lang_score(text: Column, markers: list[str]) -> Column:
-    """Number of marker words present in the text (distinct markers hit)."""
-    return lang_score_from(F.array_distinct(words(text)), markers)
 
 
 def detect_language_from(distinct_words: Column,
@@ -68,21 +60,22 @@ def detect_language_from(distinct_words: Column,
     return F.when(best >= min_score, pick).otherwise(F.lit("und"))
 
 
-def detect_language(text: Column, profiles: dict[str, list[str]] | None = None,
+def detect_language(text: str, profiles: dict[str, list[str]] | None = None,
                     min_score: int = 1) -> Column:
-    """Argmax language over marker profiles; ties go to the first profile
-    in (sorted-key) order; below ``min_score`` → 'und' (undetermined)."""
-    return detect_language_from(F.array_distinct(words(text)), profiles,
-                                min_score)
+    """Argmax language of the column named ``text`` over marker
+    profiles; ties go to the first profile in (sorted-key) order; below
+    ``min_score`` → 'und' (undetermined)."""
+    distinct = F.expr(f"array_distinct({X.words_sql(X.col_sql(text))})")
+    return detect_language_from(distinct, profiles, min_score)
 
 
 def token_count(text: Column) -> Column:
     """Whitespace token count — the number of ``\\S+`` runs, which equals
-    ``size(words(text))`` for every string (non-empty split segments ARE
-    the non-space runs, and lowercasing moves no token boundary; parity
-    pinned in tests/test_opt_r17.py). ``regexp_count`` counts matches
-    without materializing a token array per row (r17, guide §1.2 step 2:
-    ~10%% off the text_token_budget scan at sf0.1)."""
+    the size of ``sqlexpr.words_sql(text)`` for every string (non-empty
+    split segments ARE the non-space runs, and lowercasing moves no token
+    boundary; parity pinned in tests/test_opt_r17.py). ``regexp_count``
+    counts matches without materializing a token array per row (r17,
+    guide §1.2 step 2: ~10%% off the text_token_budget scan at sf0.1)."""
     return F.regexp_count(text, F.lit(r"\S+"))
 
 
@@ -97,37 +90,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     ``regexp_count`` (no per-row match-array materialization; value-
     identical to ``size(regexp_extract_all(...))``, pinned)."""
     return F.regexp_count(text, F.lit(BPE_ISH_PATTERN))
-
-
-def quality_features(text: Column) -> list[Column]:
-    """Curation-style quality signals: length, token stats, punctuation and
-    stopword ratios, uppercase ratio. Convenience over
-    ``quality_features_from``; the pasted ``words(text)`` subtrees are
-    deduplicated by codegen subexpression elimination WITHIN this one
-    projection (measured: staging the array as a projection alias is
-    perf-neutral here), unlike interpreted HOF lambdas where the paste
-    is a real per-element cost."""
-    return quality_features_from(text, words(text))
-
-
-def quality_features_from(text: Column, ws: Column) -> list[Column]:
-    """``quality_features`` over a caller-supplied word array (e.g. a
-    projection alias shared with other word-consuming expressions)."""
-    n_tok = F.size(ws)
-    n_chars = F.length(text)
-    n_stop = stopword_occurrences(ws, LANG_MARKERS["en"])
-    n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    n_upper = F.length(text) - F.length(F.regexp_replace(text, r"[A-Z]", ""))
-    # integer total → one exact division; no float fold order to match
-    mean_word_len = total_word_chars(ws).cast("double") / n_tok.cast("double")
-    return [
-        n_chars.alias("n_chars_m"),
-        n_tok.alias("n_tokens"),
-        mean_word_len.alias("mean_word_len"),
-        (n_stop.cast("double") / n_tok.cast("double")).alias("stopword_ratio"),
-        (n_punct.cast("double") / n_chars.cast("double")).alias("punct_ratio"),
-        (n_upper.cast("double") / n_chars.cast("double")).alias("upper_ratio"),
-    ]
 
 
 def total_word_chars(ws: Column) -> Column:
@@ -176,43 +138,11 @@ def quality_score_from(text: Column, ws: Column) -> Column:
     return F.when(n_tok > 0, score).otherwise(F.lit(0.0))
 
 
-def quality_score(text: Column) -> Column:
-    """`quality_score_from` with its own split (single-use convenience)."""
-    return quality_score_from(text, words(text))
-
-
-def ngrams_from(ws: Column, n: int) -> Column:
-    """Sliding word n-grams from a word array, space-joined, as n−1 nested
-    ``zip_with`` calls over n shifted slices. ``ws`` appears n times at
-    the TOP level of the expression — evaluated n times per ROW. The
-    previous ``transform(starts, i -> concat_ws(slice(ws, i, n)))``
-    formulation placed ``ws`` INSIDE the lambda, and interpreted HOF
-    evaluation does no loop-invariant hoisting: the whole split-and-
-    filter re-ran per gram START, O(tokens²) work per document (measured:
-    the decontamination scan dropped 3.3 s → ~0.4 s at sf0.1 from this
-    rewrite alone)."""
-    m = F.greatest(F.size(ws) - (n - 1), F.lit(0))
-    out = F.slice(ws, 1, m)
-    for j in range(1, n):
-        out = F.zip_with(out, F.slice(ws, j + 1, m),
-                         lambda a, b: F.concat(a, F.lit(" "), b))
-    return out
-
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """Sliding word n-grams of the text, space-joined — the unit of the
-    Gopher/C4-style repetition signals. Pure per-row array expression,
-    scan-side at any scale (see ``ngrams_from`` for the shape)."""
-    return ngrams_from(words(text), n)
-
-
-def bigrams_from(ws: Column) -> Column:
-    """Adjacent word pairs from a shared word array, via TWO slices and one
-    zip_with — O(1) array allocations per row, vs the generic
-    ``word_ngrams`` path's per-start slice allocation."""
-    m = F.greatest(F.size(ws) - 1, F.lit(0))
-    return F.zip_with(F.slice(ws, 1, m), F.slice(ws, 2, m),
-                      lambda a, b: F.concat(a, F.lit(" "), b))
+def quality_score(text: str) -> Column:
+    """`quality_score_from` over the column named ``text``, with its own
+    split (single-use convenience)."""
+    return quality_score_from(F.col(text),
+                              F.expr(X.words_sql(X.col_sql(text))))
 
 
 def repeated_ngram_counts_from(grams: Column) -> tuple[Column, Column]:
@@ -222,15 +152,14 @@ def repeated_ngram_counts_from(grams: Column) -> tuple[Column, Column]:
     return dup.cast("long"), total.cast("long")
 
 
-def repeated_ngram_counts(text: Column, n: int) -> tuple[Column, Column]:
-    """(duplicated n-gram occurrences, total n-grams) — the integer parts
-    of the repetition fraction. Summing numerator and denominator
-    separately and dividing ONCE per group keeps the corpus-level signal
-    exact (no float accumulation order to match across engines)."""
-    grams = word_ngrams(text, n)
-    total = F.size(grams)
-    dup = total - F.size(F.array_distinct(grams))
-    return dup.cast("long"), total.cast("long")
+def repeated_ngram_counts(text: str, n: int) -> tuple[Column, Column]:
+    """(duplicated n-gram occurrences, total n-grams) of the column named
+    ``text`` — the integer parts of the repetition fraction. Summing
+    numerator and denominator separately and dividing ONCE per group
+    keeps the corpus-level signal exact (no float accumulation order to
+    match across engines)."""
+    return repeated_ngram_counts_from(
+        F.expr(X.word_ngrams_sql(X.col_sql(text), n)))
 
 
 # PII redaction: RE2-compatible patterns (no lookarounds) so Spark, RE2,
@@ -282,7 +211,8 @@ def top_ngrams(df, text_col: str, n: int, k: int,
     from pyspark.sql import Window  # noqa: PLC0415
     groups = group_cols or []
     grams = df.select(*groups,
-                      F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
+                      F.explode(F.expr(X.word_ngrams_sql(X.col_sql(text_col), n)))
+                      .alias("gram"))
     counts = (grams.groupBy(*groups, "gram")
               .agg(F.count(F.lit(1)).alias("n_occ")))
     if groups:
@@ -296,22 +226,11 @@ def top_ngrams(df, text_col: str, n: int, k: int,
 FINGERPRINT_MOD = 1_000_000_007  # keeps acc*31 + c far below int64 overflow
 
 
-def rolling_fingerprint(text: Column, mod: int = FINGERPRINT_MOD) -> Column:
-    """Polynomial rolling-hash document fingerprint over characters:
-    h ← h·31 + code(c) (mod p), left-to-right — an order-sensitive
-    complement to the word-set hashes in operators/dedup.py, and the same
-    per-row fold shape as a Rabin-Karp chunker."""
-    chars = F.filter(F.split(text, ""), lambda c: c != "")
-    codes = F.transform(chars, lambda c: F.ascii(c).cast("long"))
-    return F.aggregate(codes, F.lit(0).cast("long"),
-                       lambda acc, c: (acc * 31 + c) % F.lit(mod).cast("long"))
-
-
 _fingerprint_arrow = None
 
 
 def rolling_fingerprint_fast(text: Column) -> Column:
-    """Drop-in fast path for :func:`rolling_fingerprint` at the default
+    """Fast path for ``sqlexpr.rolling_fingerprint_sql`` at the default
     modulus: same value on every input (equality-tested in
     tests/test_text_ops.py), Arrow-batched.
 

@@ -23,10 +23,10 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "realtime_olap_spark", master: str | None = None) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession."""
+def get_spark(app_name: str = "realtime_olap_spark") -> SparkSession:
+    """Build (or reuse) the engine's SparkSession — the one session
+    builder for the engine, the tests, bench.py and the scripts."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    master = master or f"local[{cpus}]"
     # Opt-in connector packages (Kafka, Avro): a comma-separated
     # spark.jars.packages list resolved at session start, e.g.
     #   SPARK_GRAFT_PACKAGES=org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2
@@ -35,7 +35,7 @@ def get_spark(app_name: str = "realtime_olap_spark", master: str | None = None) 
     # enters through readStream.format("kafka") once present).
     packages = os.environ.get("SPARK_GRAFT_PACKAGES", "")
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")

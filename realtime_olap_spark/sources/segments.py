@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from realtime_olap_spark.catalog import TableConfig
@@ -113,11 +113,3 @@ def with_virtual_columns(df: DataFrame) -> DataFrame:
     return (df.withColumn("$docId", F.monotonically_increasing_id())
               .withColumn("$segmentName", F.input_file_name())
               .withColumn("$hostName", F.lit("spark")))
-
-
-def read_segment_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Per-segment (file) row counts — segment-metadata introspection
-    (common/metadata/segment/ analog) via the files' own footers."""
-    return (spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("segment"))
-            .count())

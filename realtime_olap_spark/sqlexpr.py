@@ -1,36 +1,32 @@
-"""SQL-string twins of the hot Column-builder expressions.
+"""SQL renderings of the text and dedup expressions — the one
+implementation of each.
 
-Building a deep expression through the PySpark Column API costs one py4j
-round trip per operator call — ~1.4 ms each on this box (measured), so a
-word-trigram tree is ~40 ms of driver time PER CONSTRUCTION and a
-16-fold SimHash ~200 ms. Rendering the same tree as ONE SQL string and
-parsing it JVM-side (`F.expr`) is a single round trip: the measured
-construction drop for `word_ngrams` is 39.8 ms → 0.54 ms (~74×), and the
-optimizer sees the identical expression tree (plan equality modulo
-auto-generated lambda-variable NAMES, value bit-equality — both pinned in
-tests/test_sqlexpr.py for every builder here).
+Every function here renders one expression as SQL text that the caller
+parses JVM-side with ``F.expr``. Building the same tree through the
+PySpark Column API costs one py4j round trip per operator call (~1.4 ms
+each, measured on a 32-core local-mode session), so a word-trigram tree
+is ~40 ms of Python-side construction and a 16-fold SimHash ~200 ms; one
+parse is a single round trip (``word_ngrams_sql``: 39.8 ms → 0.54 ms, ~74×) and
+Catalyst sees the identical expression tree.
 
-These are construction-time twins, not new semantics: each `*_sql`
-function renders exactly the tree its Column-builder counterpart in
-`operators/{text,dedup,importance,decontam}.py` builds, and the
-counterpart's docstring remains the contract. String arguments are SQL
-EXPRESSIONS (a bare column name is the common case), not quoted names.
+Arguments are SQL EXPRESSIONS (a lambda variable, a nested rendering, or
+a column reference). Callers holding a column NAME render it with
+:func:`col_sql`, which keeps ``F.col`` name semantics: dots separate
+struct fields, and every part is backtick-quoted so reserved words and
+operator characters stay names.
 
-Parser assumption (r16 ADVICE #2): every escaped string literal here
-(``_WS_RE``, the punct/upper regexes) is rendered for the DEFAULT
+Parser assumption: every escaped string literal here (``_WS_RE``, the
+punct/upper regexes, :func:`_sql_str`) is rendered for the DEFAULT
 ``spark.sql.parser.escapedStringLiterals=false``. Under the legacy
-``true`` setting ``'\\s+'`` parses to a different regex and every twin
-would silently diverge from its Column builder — so the first ``F.expr``
-construction per session asserts the conf (``_check_parser_conf``) and
-raises loudly instead.
+``true`` setting ``'\\s+'`` parses to a different regex, so the first
+rendering per session asserts the conf (``_check_parser_conf``) and
+raises loudly instead of returning a different expression.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-
-from realtime_olap_spark.operators.text import LANG_MARKERS
 
 #: SQL string literal whose VALUE is the regex \s+ (backslash is an
 #: escape character inside Spark SQL string literals).
@@ -44,9 +40,9 @@ _parser_conf_ok: "weakref.WeakSet" = weakref.WeakSet()
 def _check_parser_conf() -> None:
     """Raise if the active session parses string literals in legacy mode
     (escapedStringLiterals=true), under which every backslash literal in
-    this module means a different string than its Column twin. Checked
-    once per SESSION OBJECT via a WeakSet — zero py4j round trips on the
-    warm path (the very overhead this module exists to remove), and a
+    this module means a different string. Checked once per SESSION
+    OBJECT via a WeakSet — zero py4j round trips on the warm path (the
+    very overhead this module exists to remove), and a
     ``spark.newSession()`` (new object, shared applicationId) gets its
     own check. Limits, by design: a session that flips the conf AFTER
     its first render is not re-checked (re-checking per render would
@@ -59,30 +55,45 @@ def _check_parser_conf() -> None:
                           "false")
     if str(flag).lower() == "true":
         raise RuntimeError(
-            "sqlexpr twins require spark.sql.parser."
+            "sqlexpr renderings require spark.sql.parser."
             "escapedStringLiterals=false (the default); the session has "
             "the legacy mode enabled, under which these SQL strings parse "
-            "to different regexes than their Column builders")
+            "to different regexes")
     _parser_conf_ok.add(spark)
 
 
+def col_sql(name: str) -> str:
+    """The column NAMED ``name`` under ``F.col`` semantics: each
+    dot-separated part backtick-quoted (embedded backticks doubled), so
+    ``a.b`` is field ``b`` of struct ``a`` and a reserved word or a name
+    like ``a+b`` can never parse as an expression."""
+    return ".".join("`" + p.replace("`", "``") + "`"
+                    for p in name.split("."))
+
+
 def _sql_str(s: str) -> str:
-    """Single-quoted SQL string literal with embedded quotes doubled —
-    safe for any marker content (r16 ADVICE #3: a future fr profile
-    could legitimately contain an apostrophe, e.g. l')."""
-    return "'" + s.replace("'", "''") + "'"
+    """Single-quoted SQL string literal whose value is exactly ``s``:
+    backslashes escaped first (they are the parser's escape character),
+    then embedded quotes doubled — safe for any marker content."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def words_sql(text: str) -> str:
-    """operators.text.words — whitespace tokens of the lowercased text."""
+    """Whitespace tokens of the lowercased text (empty-token free)."""
     _check_parser_conf()
     return f"filter(split(lower({text}), {_WS_RE}), w -> w != '')"
 
 
 def ngrams_sql(ws: str, n: int) -> str:
-    """operators.text.ngrams_from — n−1 nested zip_with over n shifted
-    slices; ``ws`` is textually pasted exactly as the Column form pastes
-    its subtree."""
+    """Sliding word n-grams from a word array, space-joined, as n−1
+    nested ``zip_with`` calls over n shifted slices. ``ws`` is pasted n
+    times at the TOP level of the expression — evaluated n times per
+    ROW. A ``transform(starts, i -> concat_ws(slice(ws, i, n)))`` form
+    would place ``ws`` INSIDE the lambda, and interpreted HOF evaluation
+    does no loop-invariant hoisting: the whole split-and-filter would
+    re-run per gram START, O(tokens²) work per document (measured: the
+    decontamination scan dropped 3.3 s → ~0.4 s at sf0.1 from this
+    shape alone)."""
     m = f"greatest(size({ws}) - {n - 1}, 0)"
     out = f"slice({ws}, 1, {m})"
     for j in range(1, n):
@@ -92,40 +103,60 @@ def ngrams_sql(ws: str, n: int) -> str:
 
 
 def word_ngrams_sql(text: str, n: int) -> str:
-    """operators.text.word_ngrams."""
+    """Sliding word n-grams of the text, space-joined — the unit of the
+    Gopher/C4-style repetition signals. Pure per-row array expression,
+    scan-side at any scale (see :func:`ngrams_sql` for the shape)."""
     return ngrams_sql(words_sql(text), n)
 
 
+def uncovered_text_sql(text: str, starts: str, k: int) -> str:
+    """The text's words rebuilt without every token covered by a k-wide
+    window starting at a 0-based position in the int array ``starts``
+    (NULL = no windows), space-joined: token i is dropped iff some start
+    p has ``p ≤ i < p+k`` — an ``exists`` probe over the per-doc list."""
+    return (f"array_join(filter({words_sql(text)}, (x, i) -> "
+            f"NOT exists(coalesce({starts}, CAST(array() AS ARRAY<INT>)), "
+            f"p -> (p <= i) AND (i < p + {k}))), ' ')")
+
+
 def ngram_hash_set_sql(text: str, n: int) -> str:
-    """operators.decontam.ngram_hash_set — distinct xxhash64 gram codes."""
+    """Distinct xxhash64 codes of the text's word n-grams (order-free
+    set, 8 bytes/gram) — the per-row unit both sides of
+    decontamination share."""
     return (f"array_distinct(transform({word_ngrams_sql(text, n)}, "
             f"g -> xxhash64(g)))")
 
 
 def bigrams_sql(ws: str) -> str:
-    """operators.text.bigrams_from."""
+    """Adjacent word pairs from a shared word array, via TWO slices and
+    one zip_with — O(1) array allocations per row."""
     m = f"greatest(size({ws}) - 1, 0)"
     return (f"zip_with(slice({ws}, 1, {m}), slice({ws}, 2, {m}), "
             f"(a, b) -> concat(a, ' ', b))")
 
 
 def doc_grams_sql(text: str) -> str:
-    """operators.importance.doc_grams — unigrams + bigrams, one array."""
+    """The doc's hashed-feature grams: unigrams + word bigrams (the DSIR
+    feature set), one scan-side array — tokenized once."""
     ws = words_sql(text)
     return f"concat({ws}, {bigrams_sql(ws)})"
 
 
 def gram_buckets_md5_sql(text: str, n_buckets: int) -> str:
-    """operators.importance.gram_buckets_md5."""
+    """Bucket ids from the first 8 hex chars of md5 — slower than
+    xxhash64 but byte-identical in any engine with md5 (DuckDB renders
+    it as ``('0x' || substr(md5(g),1,8))::BIGINT % B``), which is what
+    puts the DSIR feature space under a differential oracle."""
     return (f"transform({doc_grams_sql(text)}, "
             f"g -> CAST(CAST(conv(substring(md5(g), 1, 8), 16, 10) "
             f"AS BIGINT) % {n_buckets} AS INT))")
 
 
 def favored_hits_sql(text: str, favored: list[int]) -> str:
-    """operators.importance.favored_hits — integer fold against the
-    0/1 bucket bitmap (rendered as the same single-node from_json
-    literal litarray.lit_ints produces)."""
+    """Per-doc count of grams landing in favored buckets — an integer
+    scan-side fold against the 0/1 bucket bitmap (one single-node
+    from_json literal, the form ``litarray.lit_ints`` produces), the
+    same zero-shuffle shape as ``importance.importance_weights``."""
     bitmap = "from_json('[" + ",".join(str(int(v)) for v in favored) + \
         "]', 'array<int>')"
     return (f"aggregate({gram_buckets_md5_sql(text, len(favored))}, "
@@ -135,8 +166,14 @@ def favored_hits_sql(text: str, favored: list[int]) -> str:
 
 
 def quality_features_sql(text: str) -> list[Column]:
-    """operators.text.quality_features — the six aliased signal columns."""
-    _check_parser_conf()
+    """Curation-style quality signals as six aliased columns: length,
+    token stats, stopword, punctuation and uppercase ratios. The pasted
+    ``words`` subtrees are deduplicated by codegen subexpression
+    elimination within the one projection (measured: staging the array
+    as a projection alias is perf-neutral here). Integer totals, one
+    exact division each — no float fold order to match across
+    engines."""
+    from realtime_olap_spark.operators.text import LANG_MARKERS  # noqa: PLC0415
     ws = words_sql(text)
     n_tok = f"size({ws})"
     n_chars = f"length({text})"
@@ -163,7 +200,10 @@ def quality_features_sql(text: str) -> list[Column]:
 
 
 def rolling_fingerprint_sql(text: str, mod: int) -> str:
-    """operators.text.rolling_fingerprint — per-char polynomial fold."""
+    """Polynomial rolling-hash document fingerprint over characters:
+    h ← h·31 + code(c) (mod p), left-to-right — an order-sensitive
+    complement to the word-set hashes, and the same per-row fold shape
+    as a Rabin-Karp chunker."""
     codes = (f"transform(filter(split({text}, ''), c -> c != ''), "
              f"c -> CAST(ascii(c) AS BIGINT))")
     return (f"aggregate({codes}, CAST(0 AS BIGINT), "
@@ -171,19 +211,29 @@ def rolling_fingerprint_sql(text: str, mod: int) -> str:
 
 
 def word_set_sql(text: str) -> str:
-    """operators.dedup.word_set — distinct space-split lowercase words."""
+    """Distinct lowercase word shingles (k=1 word shingling — the
+    shingle builder both engines can express identically; larger k is a
+    transform on this array)."""
     return f"array_distinct(split(lower({text}), ' '))"
 
 
 def word_hash60_sql(w: str) -> str:
-    """operators.dedup.word_hash60 — 60-bit md5-prefix hash."""
+    """60-bit word hash from the md5 hex prefix — parses identically as
+    Spark conv(hex,16,10) and SQL '0x…'::UBIGINT (fits in a signed
+    64-bit)."""
     return f"CAST(conv(substring(md5({w}), 1, 15), 16, 10) AS BIGINT)"
 
 
+def word_hashes_sql(text: str) -> str:
+    """:func:`word_hash60_sql` of every :func:`word_set_sql` shingle —
+    the hashed word set every Jaccard and SimHash stage consumes."""
+    return f"transform({word_set_sql(text)}, w -> {word_hash60_sql('w')})"
+
+
 def simhash_fp_sql(wh: str, bits: int) -> str:
-    """operators.dedup.simhash's fingerprint fold over the materialized
-    word-hash array column ``wh`` — ``bits`` independent single-long
-    accumulator folds, summed into the fingerprint."""
+    """SimHash fingerprint fold over the materialized word-hash array
+    column ``wh``: bit j is set iff more than half the hashes have bit j
+    set — ``bits`` independent single-long accumulator folds, summed."""
     terms = []
     for j in range(bits):
         cnt = (f"aggregate({wh}, CAST(0 AS BIGINT), "

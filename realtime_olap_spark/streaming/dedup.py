@@ -106,9 +106,9 @@ def near_dup_pairs_against(docs: DataFrame, corpus_bands: DataFrame,
     the batch operator row-for-row (tested); within-stream-only
     near-dups stay the incremental-batch path's job, exactly like the
     exact and span variants above."""
+    from realtime_olap_spark import sqlexpr as X
     from realtime_olap_spark.operators.dedup import (lsh_band_keys,
-                                                     minhash_signature,
-                                                     word_hash60, word_set)
+                                                     minhash_signature)
 
     cb = corpus_bands
     if max_bucket_size is not None:
@@ -121,11 +121,12 @@ def near_dup_pairs_against(docs: DataFrame, corpus_bands: DataFrame,
     # watermark gymnastics); one lineage keeps every join below
     # stream-STATIC.
     carry = [F.col(ts_col)] if ts_col is not None else []
+    text = X.col_sql(text_col)
     base = docs.select(
         F.col(id_col), *carry,
-        F.transform(word_set(text_col), lambda w: word_hash60(w)).alias("wh"),
-        F.size(word_set(text_col)).alias("nw"),
-        *minhash_signature(word_set(text_col), num_hashes))
+        F.expr(X.word_hashes_sql(text)).alias("wh"),
+        F.expr(f"size({X.word_set_sql(text)})").alias("nw"),
+        *minhash_signature(F.expr(X.word_set_sql(text)), num_hashes))
     probe = (base.select(
         F.col(id_col), *carry, "wh", "nw",
         F.explode(F.array(*lsh_band_keys(

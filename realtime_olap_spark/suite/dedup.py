@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from realtime_olap_spark import sqlexpr as X
 from realtime_olap_spark.catalog import Catalog
 from realtime_olap_spark.operators import components as C
 from realtime_olap_spark.operators import dedup as D
@@ -233,7 +234,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionSegmentPruner.java:38."""
     d = Catalog(spark, sf_dir).table("documents")
     lb = (F.col("n_chars") / F.lit(NGRAM_BLOCK_WIDTH)).cast("long").alias("lb")
-    ws = d.select("doc_id", "lang", lb, D.word_set("text").alias("w"))
+    ws = d.select("doc_id", "lang", lb,
+                  F.expr(X.word_set_sql("text")).alias("w"))
     a = ws.select(F.col("doc_id").alias("id_a"), "lang", "lb",
                   F.col("w").alias("wa"))
     b = ws.select(F.col("doc_id").alias("id_b"), "lang", "lb",
@@ -392,13 +394,12 @@ def _gram_cms(spark: SparkSession, sf_dir: str):
     the hot-key artifact of ``operators/cms``, train-once like the
     content filter above."""
     from realtime_olap_spark.operators import cms as CM  # noqa: PLC0415
-    from realtime_olap_spark.sqlexpr import word_ngrams_sql  # noqa: PLC0415
     from realtime_olap_spark.suite.memo import session_memo  # noqa: PLC0415
 
     def build():
         d = Catalog(spark, sf_dir).table("documents")
         grams = d.select(F.explode(
-            F.expr(word_ngrams_sql("text", 3))).alias("gram"))
+            F.expr(X.word_ngrams_sql("text", 3))).alias("gram"))
         return CM.cms_build(grams, "gram", width=8192, depth=4)
 
     return session_memo(spark, sf_dir, "gram_cms", build)
@@ -410,10 +411,9 @@ def cms_hot_grams_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy lookup) cutting the exact groupBy to possibly-hot grams —
     ``operators/cms.heavy_hitters_exact`` throughput at bench SF."""
     from realtime_olap_spark.operators import cms as CM  # noqa: PLC0415
-    from realtime_olap_spark.sqlexpr import word_ngrams_sql  # noqa: PLC0415
     d = Catalog(spark, sf_dir).table("documents")
     grams = d.select(F.explode(
-        F.expr(word_ngrams_sql("text", 3))).alias("gram"))
+        F.expr(X.word_ngrams_sql("text", 3))).alias("gram"))
     return CM.heavy_hitters_exact(grams, "gram", CMS_GRAM_THRESHOLD,
                                   _gram_cms(spark, sf_dir),
                                   key_out="gram")

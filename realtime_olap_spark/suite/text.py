@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from realtime_olap_spark import sqlexpr as X
 from realtime_olap_spark.catalog import Catalog
 from realtime_olap_spark.operators import text as T
 from realtime_olap_spark.suite.registry import query
@@ -23,10 +24,10 @@ _STOPLIST = "['" + "', '".join(T.LANG_MARKERS["en"]) + "']"
 _NSTOP = f"len(list_filter({_WS}, w -> list_contains({_STOPLIST}, w)))"
 _WCHARS = f"CAST(list_sum(list_transform({_WS}, w -> length(w))) AS BIGINT)"
 _BPE = f"len(regexp_extract_all(text, '{T.BPE_ISH_PATTERN}'))"
-# word bigrams, DuckDB 1-based list indexing — twin of T.word_ngrams(n=2)
+# word bigrams, DuckDB 1-based list indexing — twin of X.word_ngrams_sql(n=2)
 _BIGRAMS = (f"list_transform(generate_series(1, greatest({_NTOK} - 1, 0)), "
             f"i -> concat_ws(' ', {_WS}[i], {_WS}[i + 1]))")
-# word trigrams — twin of T.word_ngrams(n=3), for the decontamination pass
+# word trigrams — twin of X.word_ngrams_sql(n=3), for the decontamination pass
 _TRIGRAMS = (f"list_transform(generate_series(1, greatest({_NTOK} - 2, 0)), "
              f"i -> concat_ws(' ', {_WS}[i], {_WS}[i + 1], {_WS}[i + 2]))")
 
@@ -121,10 +122,10 @@ def text_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     # ONE split per row, shared by language ID, quality, and repetition —
     # CollapseProject keeps multi-referenced non-cheap aliases materialized
-    staged = (d.select("text", T.words(F.col("text")).alias("ws"))
+    staged = (d.select("text", F.expr(X.words_sql("text")).alias("ws"))
                .select("text", "ws",
                        F.array_distinct(F.col("ws")).alias("wsd"),
-                       T.bigrams_from(F.col("ws")).alias("bg")))
+                       F.expr(X.bigrams_sql("ws")).alias("bg")))
     dup2, tot2 = T.repeated_ngram_counts_from(F.col("bg"))
     scored = staged.select(
         T.detect_language_from(F.col("wsd")).alias("detected"),
@@ -133,7 +134,7 @@ def text_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("ws").cast("long").alias("tot1"),
         dup2.alias("dup2"), tot2.alias("tot2"),
         F.col("bg"),
-        CL.quality_margin_portable(F.col("text")).alias("clfm"))
+        CL.quality_margin_portable("text").alias("clfm"))
     agg = (scored.groupBy("detected")
            .agg(F.count(F.lit(1)).alias("n_docs"),
                 F.sum(F.when(F.col("q") >= 0.5, 1).otherwise(0)).alias("n_kept"),
@@ -278,8 +279,8 @@ def text_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (value-identical, pinned in tests/test_sampling.py). All
     closing joins broadcast their ≤30-row sides (zero exchanges). On
     the trimmed rows the interpreted JVM expression fold
-    (``rolling_fingerprint``) replaces the Arrow pandas_udf fast
-    path: one Python-worker stage costs ~0.45 s of round-trip
+    (``sqlexpr.rolling_fingerprint_sql``) replaces the Arrow pandas_udf
+    fast path: one Python-worker stage costs ~0.45 s of round-trip
     overhead regardless of row count (this box's measurement), which
     dwarfs 30 rows of per-char lambda evals — the pandas_udf remains
     the right call for the full-corpus scans
@@ -329,10 +330,6 @@ def text_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-joining the three sides into ONE broadcast: it ADDED a job —
     # the combined side's nested broadcasts serialize what the three
     # independent broadcast-exchange threads build concurrently.)
-    # sqlexpr twins: identical trees (plan+value pinned in
-    # tests/test_sqlexpr.py), single-parse construction — the Column-API
-    # builds of these three cost ~0.3 s of py4j round trips per query
-    from realtime_olap_spark import sqlexpr as X  # noqa: PLC0415
     return (trim.select("doc_id",
                         *X.quality_features_sql("text"),
                         F.expr(X.rolling_fingerprint_sql(
@@ -532,7 +529,7 @@ def _quality_model(spark: SparkSession, sf_dir: str):
 
     def build():
         d = Catalog(spark, sf_dir).table("documents")
-        teacher = quality_score(F.col("text"))
+        teacher = quality_score("text")
         return CL.fit_quality_classifier(
             d.where(teacher >= 0.3), d.where(teacher < 0.3), "text",
             n_buckets=1024, iters=10, lr=2.0)
@@ -548,7 +545,7 @@ def classifier_scan_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtime_olap_spark.operators import classifier as CL  # noqa: PLC0415
     d = Catalog(spark, sf_dir).table("documents")
     model = _quality_model(spark, sf_dir)
-    scored = d.withColumn("q", CL.quality_score(F.col("text"), model))
+    scored = d.withColumn("q", CL.quality_score("text", model))
     return (scored.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("q").alias("sum_q"),

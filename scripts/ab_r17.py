@@ -24,7 +24,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _patch_off(query: str) -> None:
@@ -86,8 +85,11 @@ def main() -> None:
 
     import bench
     from realtime_olap_spark import suite
+    from realtime_olap_spark.session import get_spark
 
-    spark = bench.build_session(CPUS)
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ["SPARK_GRAFT_CPUS"])
+    spark = get_spark("realtime-olap-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = dict(suite.QUERIES)
@@ -112,7 +114,7 @@ def main() -> None:
         _pca_model(spark, SF_DIR)
     from pyspark.sql import functions as F
     _wu = F.pandas_udf(lambda s: s, "long")
-    (spark.range(0, CPUS, 1, CPUS).select(_wu("id"))
+    (spark.range(0, cpus, 1, cpus).select(_wu("id"))
      .write.format("noop").mode("overwrite").save())
 
     times = []

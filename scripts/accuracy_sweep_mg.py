@@ -16,23 +16,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import SF_DIR, build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
+from scripts.scale_soak import SF_DIR  # noqa: E402
 
 
 def main() -> None:
     from scripts._argv import parse_int_list
     ks = parse_int_list(__doc__, "k", [16, 64, 256, 1024])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     from realtime_olap_spark.operators import mg as MG
 
-    from realtime_olap_spark.operators import text as TX
+    from realtime_olap_spark import sqlexpr as X
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     # trigrams, not words: the synthetic vocabulary is ~31 words (any
     # k >= 31 is trivially exact), but trigram cardinality is real
-    words = (docs.select(F.explode(TX.word_ngrams(F.col("text"), 3))
+    words = (docs.select(F.explode(F.expr(X.word_ngrams_sql("text", 3)))
                          .alias("w"))
              .where(F.length("w") > 0).repartition(32))
     exact = {r["w"]: r["n"] for r in

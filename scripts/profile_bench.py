@@ -1,7 +1,8 @@
-"""Profiling companion to bench.py (guide §1): same session shape, same
-warmup, but per query records (a) DataFrame construction+analysis wall
-time, (b) noop-sink execution wall time (min of N), and (c) the
-``explain('formatted')`` text, written under plans/<tag>/<name>.txt.
+"""Profiling companion to bench.py (guide §1): same session, same
+warmup (``bench.warm_up``), but per query records (a) DataFrame
+construction+analysis wall time, (b) noop-sink execution wall time (min
+of N), and (c) the ``explain('formatted')`` text, written under
+plans/<tag>/<name>.txt.
 
 Usage: python scripts/profile_bench.py [--plans-dir plans/r16] \
            [--tag before|after] [--runs 3] [--queries a,b,c]
@@ -23,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from realtime_olap_spark import suite  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -37,52 +39,16 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench.build_session(cpus)
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ["SPARK_GRAFT_CPUS"])
+    spark = get_spark("realtime-olap-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = dict(suite.QUERIES)
     registry.update(bench._extra_queries())
     names = (args.queries.split(",") if args.queries
              else [n for n in bench.HEADLINE if n in registry])
-
-    # Same untimed warmup as bench.py: JVM codegen, staged segments,
-    # ingest-time artifacts, Python worker pool.
-    for name in names:
-        try:
-            registry[name](spark, "/root/testdata/sf0.001") \
-                .write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
-    from realtime_olap_spark.catalog import TABLES, Catalog
-    cat = Catalog(spark, sf_dir)
-    for tname in TABLES:
-        cat.table(tname)
-    suite.QUERIES["agg_fastpaths"](spark, sf_dir).collect()
-    from pyspark.sql import functions as F
-    _wu = F.pandas_udf(lambda s: s, "long")
-    (spark.range(0, cpus, 1, cpus).select(_wu("id"))
-     .write.format("noop").mode("overwrite").save())
-    from realtime_olap_spark.suite.dedup import (_content_bloom, _gram_cms,
-                                                 shared_scored_pairs,
-                                                 shared_span_stats)
-    from realtime_olap_spark.suite.similarity import (_ensure_ivf_index,
-                                                      _ensure_pq_index,
-                                                      _pca_model)
-    from realtime_olap_spark.suite.text import (_bpe_merges, _dsir_favored,
-                                                _quality_model,
-                                                importance_scan_bench)
-    _ensure_ivf_index(spark, sf_dir)
-    shared_scored_pairs(spark, sf_dir).count()
-    shared_span_stats(spark, sf_dir).count()
-    _ensure_pq_index(spark, sf_dir)
-    importance_scan_bench(spark, sf_dir).count()
-    _dsir_favored(spark, sf_dir)
-    _quality_model(spark, sf_dir)
-    _bpe_merges(spark, sf_dir)
-    _content_bloom(spark, sf_dir)
-    _gram_cms(spark, sf_dir)
-    _pca_model(spark, sf_dir)
+    bench.warm_up(spark, sf_dir, registry, names, cpus)
 
     sc = spark.sparkContext
     construct: dict[str, float] = {}

@@ -22,7 +22,7 @@ import duckdb  # noqa: E402
 
 from realtime_olap_spark.plans.pql import PQLEngine  # noqa: E402
 from realtime_olap_spark.suite.querygen import generate  # noqa: E402
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 from tests.conftest import (TABLES, rows_of_duck,  # noqa: E402
                             rows_of_spark)
 
@@ -33,7 +33,7 @@ def main() -> None:
     from scripts._argv import parse_int_args
     n, base = parse_int_args(__doc__, [("n_seeds", 4000),
                                        ("base_seed", 0)])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     engine = PQLEngine(spark, SF_DIR)
     con = duckdb.connect()

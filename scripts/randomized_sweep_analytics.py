@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 US = 1_000_000
 EPOCH = dt.datetime(1970, 1, 1)
@@ -723,7 +723,7 @@ def main() -> None:
     n_chunks, per, base = parse_int_args(
         __doc__, [("n_chunks", 20, 10_000), ("per_chunk", 100, 10_000),
                   ("base_seed", 0)])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     fails = []
     for c in range(n_chunks):

@@ -28,7 +28,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 
 def _union_find(edges):
@@ -149,7 +149,7 @@ def main() -> None:
     n_chunks, per, base = parse_int_args(
         __doc__, [("n_chunks", 10, 10_000), ("per_chunk", 50, 10_000),
                   ("base_seed", 0)])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     fails = []
     for c in range(n_chunks):

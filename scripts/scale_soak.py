@@ -28,22 +28,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from realtime_olap_spark.session import get_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 STAGE = "/tmp/scale_soak"
 RUNS = 2
-
-
-def build_session() -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return (SparkSession.builder.master(f"local[{cpus}]")
-            .appName("scale-soak")
-            .config("spark.sql.shuffle.partitions", str(cpus))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-            .getOrCreate())
 
 
 def staged(spark: SparkSession, table: str, id_col: str, k: int) -> DataFrame:
@@ -81,7 +70,7 @@ def noop(df: DataFrame) -> None:
 def main() -> None:
     from scripts._argv import parse_int_list
     scales = parse_int_list(__doc__, "scale", [1, 10, 100])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     from realtime_olap_spark.operators import bpe as B
@@ -114,7 +103,7 @@ def main() -> None:
         record("span_dup_stats", k, timed(lambda: noop(
             SP.span_dup_stats(docs, "doc_id", "text", k=8))))
         record("classifier_scan", k, timed(lambda: noop(
-            docs.select(CL.quality_score(F.col("text"), model)
+            docs.select(CL.quality_score("text", model)
                         .alias("q")))))
         record("importance_scan", k, timed(lambda: noop(
             IMP.importance_weights(docs, "doc_id", "text", lut))))

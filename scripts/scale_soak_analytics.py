@@ -27,8 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import (build_session, noop, staged,  # noqa: E402
-                                timed)
+from realtime_olap_spark.session import get_spark  # noqa: E402
+from scripts.scale_soak import noop, staged, timed  # noqa: E402
 
 STEPS = ["signup", "view", "click", "purchase"]
 
@@ -36,7 +36,7 @@ STEPS = ["signup", "view", "click", "purchase"]
 def main() -> None:
     from scripts._argv import parse_int_list
     scales = parse_int_list(__doc__, "scale", [1, 10, 100])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     from realtime_olap_spark.operators import funnel as FN

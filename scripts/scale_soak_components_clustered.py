@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 STAGE = os.environ.get("SPARK_GRAFT_SOAK_DIR", "/tmp/spark_graft_soak")
 
@@ -89,7 +89,7 @@ def histogram(spark, path: str, contraction: bool):
 def main() -> None:
     from scripts._argv import parse_int_list
     scales = parse_int_list(__doc__, "scale", [1, 8, 32])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     for k in scales:
         path = edges_path(spark, k)

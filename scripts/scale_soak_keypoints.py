@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 BASE_IMAGES = 2_000
 KP = 72
@@ -86,7 +86,7 @@ def main() -> int:
         keypoint_near_dup_pairs)
 
     scales = [int(a) for a in sys.argv[1:]] or [1, 4, 16]
-    spark = build_session()
+    spark = get_spark("scale-soak")
     print(f"keypoint soak: base={BASE_IMAGES} images x {KP} kp, "
           f"twin every {PLANT_EVERY} ({SHARED} shared kp, "
           f"{FLIPS} flips), scales {scales}")

@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 STAGE = os.environ.get("SPARK_GRAFT_SOAK_DIR", "/tmp/spark_graft_soak")
 
@@ -70,7 +70,7 @@ def main() -> int:
     from realtime_olap_spark.streaming import MediaNearDupIngest
 
     scales = [int(a) for a in sys.argv[1:]] or [1, 4, 16]
-    spark = build_session()
+    spark = get_spark("scale-soak")
     print(f"media-cluster soak: epoch={EPOCH_PAIRS} pairs, "
           f"scales {scales} (x{BASE_EPOCHS} pre-absorbed epochs)")
     ok = True

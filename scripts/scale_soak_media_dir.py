@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 FIXTURES = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tests", "fixtures")
@@ -30,7 +30,7 @@ FIXTURES = os.path.join(os.path.dirname(os.path.dirname(
 def main() -> None:
     from scripts._argv import parse_int_list
     scales = parse_int_list(__doc__, "scale", [1, 10, 100])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     from realtime_olap_spark.sources.media import media_dir_inventory
 

@@ -42,7 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 K = 4  # distinct templates per (format, size)
 
@@ -338,7 +338,7 @@ def main():
         __doc__, [("rows_0.3MP", 96), ("rows_1MP", 48),
                   ("webm_rows", 32), ("webm_frames", 120)])
     sizes = [("0.3MP", 640, 480, rows_03), ("1.0MP", 1152, 864, rows_1)]
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     ncores = spark.sparkContext.defaultParallelism
     from realtime_olap_spark.operators import multimodal as mm

@@ -29,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 BASE = 1_000
 
@@ -69,7 +69,7 @@ def make_population(n, rnd):
 def main() -> None:
     from scripts._argv import parse_int_list
     scales = parse_int_list(__doc__, "scale", [1, 10, 100])
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     from realtime_olap_spark.operators.phash import \
         phash_near_dup_pairs_dihedral

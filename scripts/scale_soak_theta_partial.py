@@ -74,11 +74,12 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=10_000_000)
     args = ap.parse_args()
 
-    import bench
     from realtime_olap_spark.operators.theta import (theta_build,
                                                      theta_build_grouped)
+    from realtime_olap_spark.session import get_spark
 
-    spark = bench.build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark("realtime-olap-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"n_adversarial": args.n}
 

@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from scripts.scale_soak import build_session  # noqa: E402
+from realtime_olap_spark.session import get_spark  # noqa: E402
 
 N_KEYS = 10_000_000
 STAGE = "/tmp/scale_soak_upsert"
@@ -35,7 +35,7 @@ STAGE = "/tmp/scale_soak_upsert"
 def main() -> None:
     from scripts._argv import parse_int_args
     parse_int_args(__doc__, [])  # --help + reject stray args
-    spark = build_session()
+    spark = get_spark("scale-soak")
     spark.sparkContext.setLogLevel("ERROR")
     from realtime_olap_spark.streaming.upsert import read_upsert, upsert_batch
 

@@ -1,9 +1,9 @@
 """Bench noise self-adjudication (r11 verdict directive #5): the
-trigger — drift > 1.25x vs the previous round's record AND the query's
-defining module untouched since that record's commit — is pure logic in
-``bench._adjudication_candidates``; a deliberately-noisy synthetic
-timing set pins exactly which queries get the isolated min-of-5
-re-run."""
+trigger — drift > 1.25x vs the previous round's record, tagged with
+whether the query's defining module changed since that record's commit —
+is pure logic in ``bench._adjudication_candidates_tagged``; a
+deliberately-noisy synthetic timing set pins exactly which queries get
+the isolated min-of-5 re-run."""
 
 from __future__ import annotations
 
@@ -13,8 +13,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
-from bench import (_adjudication_candidates,
-                   _adjudication_candidates_tagged,
+from bench import (_adjudication_candidates_tagged,
                    _bench_record_paths,
                    _changed_files_since_prev_bench,
                    _query_module_file)
@@ -32,8 +31,9 @@ def test_trigger_fires_only_for_drifted_untouched_queries():
               "q_touched": "realtime_olap_spark/suite/text.py",
               "q_slight": "realtime_olap_spark/suite/ext.py"}
     changed = {"realtime_olap_spark/suite/text.py", "bench.py"}
-    got = _adjudication_candidates(timings, prev, changed, qfiles)
-    assert got == {"q_noisy": 0.40}
+    got = _adjudication_candidates_tagged(timings, prev, changed, qfiles)
+    assert got == {"q_noisy": {"prev": 0.40, "touched": False},
+                   "q_touched": {"prev": 0.30, "touched": True}}
 
 
 def test_tagged_trigger_includes_touched_queries():
@@ -54,9 +54,6 @@ def test_tagged_trigger_includes_touched_queries():
     assert got == {"q_noisy": {"prev": 0.40, "touched": False},
                    "q_touched": {"prev": 0.30, "touched": True},
                    "q_unknown": {"prev": 0.10, "touched": True}}
-    # the back-compat untouched-only view stays consistent with it
-    assert _adjudication_candidates(timings, prev, changed, qfiles) \
-        == {"q_noisy": 0.40}
 
 
 def test_bench_record_order_prefers_canonical_round_files():
@@ -76,26 +73,28 @@ def test_bench_record_order_prefers_canonical_round_files():
             < names.index("BENCH_r16.json")
 
 
-def test_trigger_respects_renames_and_unknown_files():
-    # the prev record may use a pre-consolidation name; unknown module
-    # paths (None) are conservatively treated as touched
+def test_trigger_skips_retired_names_and_tags_unknown_files():
+    # a name the current run no longer times is skipped (no rename map:
+    # every name in the newest record is current); unknown module paths
+    # (None) are conservatively treated as touched
     prev = {"agg_having": 0.10, "q_unknown": 0.10}
     timings = {"agg_topn_having": 0.20, "q_unknown": 0.20}
     qfiles = {"agg_topn_having": "realtime_olap_spark/suite/aggs.py",
               "q_unknown": None}
-    got = _adjudication_candidates(timings, prev, set(), qfiles)
-    assert got == {"agg_topn_having": 0.10}
+    got = _adjudication_candidates_tagged(timings, prev, set(), qfiles)
+    assert got == {"q_unknown": {"prev": 0.10, "touched": True}}
 
 
 def test_trigger_boundary_is_strict():
     prev = {"q": 1.0}
     qf = {"q": "f.py"}
-    assert _adjudication_candidates({"q": 1.25}, prev, set(), qf) == {}
-    assert _adjudication_candidates({"q": 1.2501}, prev, set(), qf) \
-        == {"q": 1.0}
-    # zero/negative prev never divides
-    assert _adjudication_candidates({"q": 9.9}, {"q": 0.0}, set(), qf) \
+    assert _adjudication_candidates_tagged({"q": 1.25}, prev, set(), qf) \
         == {}
+    assert _adjudication_candidates_tagged({"q": 1.2501}, prev, set(), qf) \
+        == {"q": {"prev": 1.0, "touched": False}}
+    # zero/negative prev never divides
+    assert _adjudication_candidates_tagged({"q": 9.9}, {"q": 0.0}, set(),
+                                           qf) == {}
 
 
 def test_changed_files_resolves_against_real_history():

@@ -86,7 +86,7 @@ def test_token_count_and_null_counts_zero(spark):
 
 
 def test_encode_tokenizes_like_training(spark):
-    """Java \\s (training's words()) is ASCII-only; the encoder must not
+    """Java \\s (training's words_sql) is ASCII-only; the encoder must not
     split on Unicode whitespace the statistics treated as word chars."""
     nbsp_word = "foo bar"
     df = spark.createDataFrame([(1, nbsp_word), (2, "foo bar")], ["id", "t"])
@@ -97,8 +97,8 @@ def test_encode_tokenizes_like_training(spark):
     assert got[1].count(B.END) == 1 and " " in "".join(got[1])
     assert got[2].count(B.END) == 2
     # and the spark-side tokenizer agrees
-    from realtime_olap_spark.operators.text import words
-    ws = df.select("id", words(F.col("t")).alias("w")).collect()
+    from realtime_olap_spark import sqlexpr as X
+    ws = df.select("id", F.expr(X.words_sql("t")).alias("w")).collect()
     n = {r["id"]: len(r["w"]) for r in ws}
     assert n[1] == 1 and n[2] == 2
 

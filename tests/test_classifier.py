@@ -7,7 +7,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from realtime_olap_spark.operators import classifier as CL
 from realtime_olap_spark.operators.importance import gram_buckets
@@ -46,7 +45,7 @@ def _numpy_twin(spark, iters=20, lr=2.0, l2=1e-4):
     rows = []
     for label, texts in ((1.0, POS), (0.0, NEG)):
         df = spark.createDataFrame([(t,) for t in texts], ["text"])
-        got = df.select(gram_buckets(F.col("text"), B).alias("bk")).collect()
+        got = df.select(gram_buckets("text", B).alias("bk")).collect()
         rows += [(r["bk"], label) for r in got]
     X = np.zeros((len(rows), B))
     y = np.array([lab for _, lab in rows])
@@ -81,7 +80,7 @@ def test_separates_held_out(spark, model):
         (2, "buy now free spam click click lol zzz qqq"),
     ], ["id", "text"])
     got = {r["id"]: r["s"] for r in held.select(
-        "id", CL.quality_score(F.col("text"), model).alias("s")).collect()}
+        "id", CL.quality_score("text", model).alias("s")).collect()}
     assert got[1] > 0.5 > got[2]
 
 
@@ -97,7 +96,7 @@ def test_filter_and_score_col(spark, model):
 
 def test_scoring_is_scan_side(spark, model):
     df = spark.createDataFrame([(t,) for t in POS], ["text"])
-    plan = (df.select(CL.quality_score(F.col("text"), model).alias("s"))
+    plan = (df.select(CL.quality_score("text", model).alias("s"))
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
 
@@ -105,7 +104,7 @@ def test_scoring_is_scan_side(spark, model):
 def test_zero_gram_doc_scores_prior(spark, model):
     df = spark.createDataFrame([("",), ("   ",)], ["text"])
     prior = 1.0 / (1.0 + math.exp(-model.bias))
-    for r in df.select(CL.quality_score(F.col("text"), model).alias("s")).collect():
+    for r in df.select(CL.quality_score("text", model).alias("s")).collect():
         assert r["s"] == pytest.approx(prior, rel=1e-12)
 
 
@@ -113,9 +112,9 @@ def test_scoring_deterministic_under_relayout(spark, model):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(POS + NEG)], ["id", "text"])
     a = {r["id"]: r["s"] for r in df.select(
-        "id", CL.quality_score(F.col("text"), model).alias("s")).collect()}
+        "id", CL.quality_score("text", model).alias("s")).collect()}
     b = {r["id"]: r["s"] for r in df.repartition(7).select(
-        "id", CL.quality_score(F.col("text"), model).alias("s")).collect()}
+        "id", CL.quality_score("text", model).alias("s")).collect()}
     assert a == b
 
 
@@ -126,9 +125,9 @@ def test_model_json_round_trip_scores_identically(spark, model):
     assert loaded == model          # full dataclass equality, losses incl.
     df = spark.createDataFrame([(t,) for t in POS + NEG], ["text"])
     a = [r["s"] for r in df.select(
-        CL.quality_score(F.col("text"), model).alias("s")).collect()]
+        CL.quality_score("text", model).alias("s")).collect()]
     b = [r["s"] for r in df.select(
-        CL.quality_score(F.col("text"), loaded).alias("s")).collect()]
+        CL.quality_score("text", loaded).alias("s")).collect()]
     assert a == b          # bit-identical after the repr round trip
 
 
@@ -137,7 +136,7 @@ def test_portable_margin_contract(spark):
 
     d = Catalog(spark, "/root/testdata/sf0.001").table("documents")
     m = d.select("doc_id",
-                 CL.quality_margin_portable(F.col("text")).alias("m"))
+                 CL.quality_margin_portable("text").alias("m"))
     rows = {r["doc_id"]: r["m"] for r in m.collect()}
     assert len(rows) == d.count()
     # non-degenerate: both keep and drop decisions occur on the corpus
@@ -147,10 +146,10 @@ def test_portable_margin_contract(spark):
     again = {r["doc_id"]: r["m"] for r in
              d.repartition(7).select(
                  "doc_id",
-                 CL.quality_margin_portable(F.col("text")).alias("m"))
+                 CL.quality_margin_portable("text").alias("m"))
              .collect()}
     assert rows == again
     # zero-gram docs carry the bias alone
     empty = spark.createDataFrame([("",)], ["text"]).select(
-        CL.quality_margin_portable(F.col("text"), bias=0.25).alias("m"))
+        CL.quality_margin_portable("text", bias=0.25).alias("m"))
     assert empty.collect()[0]["m"] == 0.25

@@ -30,7 +30,7 @@ def _pipeline(spark):
     bench = docs.orderBy("doc_id").limit(3).select("text")
 
     clean = decontaminate(docs, bench, "doc_id", "text", n=3)
-    gated = clean.where(quality_score(F.col("text")) >= 0.3)
+    gated = clean.where(quality_score("text") >= 0.3)
     kept = D.dedup_exact(gated, ["text"], keep_by="doc_id")
     toks = kept.withColumn(
         "ntok", F.size(F.filter(F.split(F.lower("text"), r"\s+"),
@@ -94,7 +94,7 @@ def test_incremental_ingest_equals_from_scratch(spark, tmp_path):
 
     def clean_gate(df):
         c = decontaminate(df, bench, "doc_id", "text", n=3)
-        return c.where(quality_score(F.col("text")) >= 0.3)
+        return c.where(quality_score("text") >= 0.3)
 
     # --- incremental build: corpus curated once, artifacts materialized
     corpus_kept = D.dedup_exact(clean_gate(first), ["text"], keep_by="doc_id")
@@ -184,7 +184,7 @@ def test_extended_pipeline_line_span_importance(spark):
     clean = decontaminate(surgical, bench, "doc_id", "text", n=3)
     assert clean.count() >= nonempty.count() - bench.count() * 20, \
         "surgery should preserve nearly every doc for the gate"
-    gated = clean.where(quality_score(F.col("text")) >= 0.3)
+    gated = clean.where(quality_score("text") >= 0.3)
     kept = D.dedup_exact(gated, ["text"], keep_by="doc_id")
 
     target_src = kept.agg(F.min("source")).first()[0]
@@ -253,7 +253,7 @@ def test_pipeline_with_urls_classifier_bpe(spark):
     assert per_dom.agg(F.max("n")).first()[0] <= 15
 
     # distill the heuristic gate into the learned classifier
-    teacher = quality_score(F.col("text"))
+    teacher = quality_score("text")
     pos = capped.where(teacher >= 0.3)
     neg = capped.where(teacher < 0.3)
     if neg.count() < 3:       # corpus too clean: synthesize hard negatives
@@ -267,7 +267,7 @@ def test_pipeline_with_urls_classifier_bpe(spark):
     # the student agrees with its teacher on the vast majority
     agree = capped.withColumn(
         "t", (teacher >= 0.3).cast("int")).withColumn(
-        "s", (CL.quality_score(F.col("text"), model) >= 0.5).cast("int"))
+        "s", (CL.quality_score("text", model) >= 0.5).cast("int"))
     frac = (agree.where(F.col("t") == F.col("s")).count()
             / max(capped.count(), 1))
     assert frac >= 0.8

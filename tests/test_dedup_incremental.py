@@ -23,10 +23,7 @@ def _halves(spark):
 
 def _corpus_tables(corpus):
     bands = D.minhash_bands(corpus, "doc_id", "text", 8, 2)
-    words = corpus.select(
-        "doc_id",
-        F.transform(D.word_set("text"),
-                    lambda w: D.word_hash60(w)).alias("wh"))
+    words = D.hashed_word_sets(corpus, "doc_id", "text").select("doc_id", "wh")
     return bands, words
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from realtime_olap_spark import sqlexpr as X
 from realtime_olap_spark import suite
 from realtime_olap_spark.catalog import Catalog
 from realtime_olap_spark.operators import dedup as D
@@ -112,7 +113,8 @@ def test_minhash_cap_bounds_bucket_pairs_sf01(spark):
     bucket's size — so no bucket can contribute more than cap·(cap−1)/2
     pairs — while uncapped banding has buckets far above it."""
     d = Catalog(spark, "/root/testdata/sf0.1").table("documents")
-    sigs = d.select("doc_id", *D.minhash_signature(D.word_set("text"), 8))
+    sigs = d.select("doc_id", *D.minhash_signature(
+        F.expr(X.word_set_sql("text")), 8))
     bands = sigs.select("doc_id", F.explode(F.array(
         *D.lsh_band_keys([f"mh{i}" for i in range(8)], 2))).alias("band_key"))
     sizes = bands.groupBy("band_key").agg(F.count(F.lit(1)).alias("n"))

@@ -43,7 +43,7 @@ def test_weights_match_python_twin(spark, split):
                         bucket_counts(df, "text", B), B)
     got = (importance_weights(df, "doc_id", "text", lut)
            .select("doc_id", "log_weight",
-                   gram_buckets(F.col("text"), B).alias("bks"))
+                   gram_buckets("text", B).alias("bks"))
            .orderBy("doc_id").limit(40).collect())
     for r in got:
         want = 0.0

@@ -4,11 +4,12 @@
   (groupby._merged_agg_columns) and the unmerged est/tdigest builders
   must share ONE accuracy constant, or the merged path silently diverges
   from a lone call the first time someone retunes a default.
-- ngram_hash_set(str) treats the string as a COLUMN NAME (word_set
-  convention) — a name that is a reserved word or contains operators
-  must not be parsed as a SQL expression.
-- quality_features marker literals are escaped, so a marker containing
-  an apostrophe cannot break (or silently alter) the SQL twin.
+- ngram_hash_set(str) treats the string as a COLUMN NAME (F.col
+  convention) — a name that is a reserved word, contains operators or
+  names a struct field must not be parsed as a SQL expression.
+- quality_features_sql marker literals are escaped, so a marker
+  containing an apostrophe or a backslash cannot break (or silently
+  alter) the rendered SQL.
 - sqlexpr refuses to render under spark.sql.parser.escapedStringLiterals
   =true, where its backslash literals would mean different regexes.
 """
@@ -62,48 +63,52 @@ def test_merged_and_unmerged_percentile_est_agree(spark):
 
 
 def test_ngram_hash_set_str_is_column_name(spark):
-    """ADVICE #1: a str argument is a column name under the word_set
-    convention — even when the name is a reserved word or contains an
-    operator character, it must resolve to the column, not parse (or
-    fail) as a SQL expression."""
+    """ADVICE #1: a str argument is a column name under the F.col
+    convention — even when the name is a reserved word, contains an
+    operator character or a backtick, or is a dotted struct-field path,
+    it must resolve to the column, not parse (or fail) as a SQL
+    expression. Reference: the same text under a plain identifier."""
+    from realtime_olap_spark import sqlexpr as X
     from realtime_olap_spark.operators.decontam import ngram_hash_set
 
-    df = spark.createDataFrame(
-        [("a b c d",)], "`select` string").withColumn(
-        "a+b", F.col("`select`"))
-    via_col = df.select(
-        ngram_hash_set(F.col("`select`"), 2).alias("h")).first()["h"]
-    for name in ["select", "a+b"]:
+    df = (spark.createDataFrame([("a b c d",)], "plain string")
+          .withColumn("select", F.col("plain"))
+          .withColumn("a+b", F.col("plain"))
+          .withColumn("a`b", F.col("plain"))
+          .withColumn("s", F.struct(F.col("plain").alias("t"))))
+    want = df.select(ngram_hash_set("plain", 2).alias("h")).first()["h"]
+    assert len(want) == 3
+    for name in ["select", "a+b", "a`b", "s.t"]:
         got = df.select(ngram_hash_set(name, 2).alias("h")).first()["h"]
-        assert got == via_col, name
-    # the common plain-identifier case still matches the Column path
-    df2 = spark.createDataFrame([("x y z",)], "text string")
-    a = df2.select(ngram_hash_set("text", 2).alias("h")).first()["h"]
-    b = df2.select(
-        ngram_hash_set(F.col("text"), 2).alias("h")).first()["h"]
-    assert a == b
+        assert got == want, name
+    assert X.col_sql("s.t") == "`s`.`t`"
+    assert X.col_sql("a`b") == "`a``b`"
 
 
 def test_quality_marker_escaping(spark):
-    """ADVICE #3: a marker containing an apostrophe renders as a valid,
-    value-correct SQL literal (the fr profile could contain l')."""
+    """ADVICE #3 (r16) and #1 (r17): a marker containing an apostrophe or
+    a backslash renders as a valid, value-correct SQL literal (the fr
+    profile could contain l'). An unescaped backslash would be read as
+    an escape: 'a\\b' would match a backspace, not the token a\\b."""
     from realtime_olap_spark import sqlexpr as X
+    from realtime_olap_spark.operators.text import LANG_MARKERS
 
-    orig = X.LANG_MARKERS["en"]
-    X.LANG_MARKERS["en"] = ["l'", "the"]
+    orig = LANG_MARKERS["en"]
+    LANG_MARKERS["en"] = ["l'", "the", "a\\b"]
     try:
         cols = X.quality_features_sql("text")
-        row = (spark.createDataFrame([("l' the l' ok",)], "text string")
+        row = (spark.createDataFrame([("l' the a\\b l' ok",)],
+                                     "text string")
                .select(*cols).first())
-        # 3 stopword tokens of 4: l', the, l'
-        assert abs(row["stopword_ratio"] - 0.75) < 1e-12
+        # 4 stopword tokens of 5: l', the, a\b, l'
+        assert row["stopword_ratio"] == 4 / 5
     finally:
-        X.LANG_MARKERS["en"] = orig
+        LANG_MARKERS["en"] = orig
 
 
 def test_sqlexpr_rejects_legacy_parser_mode(spark):
-    """ADVICE #2: under escapedStringLiterals=true the twins would
-    silently mean different regexes — the builders must raise instead."""
+    """ADVICE #2: under escapedStringLiterals=true the renderings would
+    silently mean different regexes — they must raise instead."""
     from realtime_olap_spark import sqlexpr as X
 
     X._parser_conf_ok.clear()
@@ -123,9 +128,10 @@ def test_token_count_regexp_count_parity(spark):
     """token_count / bpe_ish_token_count now count matches via
     regexp_count instead of materializing token arrays — value-identical
     to the array forms on whitespace/punct/unicode edge cases."""
+    from realtime_olap_spark import sqlexpr as X
     from realtime_olap_spark.operators.text import (BPE_ISH_PATTERN,
                                                     bpe_ish_token_count,
-                                                    token_count, words)
+                                                    token_count)
 
     rows = [("",), ("   ",), ("a",), (" a  b\tc\nd ",),
             ("Hello, WORLD!! a1b2 3.14 -- x_y",),
@@ -135,7 +141,7 @@ def test_token_count_regexp_count_parity(spark):
         token_count(F.col("text")).alias("nt"),
         bpe_ish_token_count(F.col("text")).alias("nb")).collect()
     want = df.select(
-        F.size(words(F.col("text"))).alias("nt"),
+        F.expr(f"size({X.words_sql('text')})").alias("nt"),
         F.size(F.regexp_extract_all(
             F.col("text"), F.lit(BPE_ISH_PATTERN), 0)).alias("nb")
     ).collect()

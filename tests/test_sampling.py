@@ -142,7 +142,8 @@ def test_leakage_safe_split_singletons_match_plain_split(spark):
             for r in leakage_safe_split(d, "doc_id", pairs, 0.3).collect()}
     plain = {r["doc_id"]: r["split"]
              for r in train_test_split(
-                 d, F.col("doc_id").cast("long"), 0.3).collect()}
+                 d.withColumn("k", F.col("doc_id").cast("long")), "k",
+                 0.3).collect()}
     for i in ids[2:]:  # unpaired docs: identical decision to the plain split
         assert safe[i] == plain[i]
 

@@ -1,10 +1,11 @@
-"""sqlexpr twins must be the SAME expression tree as their Column
-builders: optimized-plan equality modulo auto-generated lambda-variable
-names, plus value bit-equality on the real corpus. A twin that drifts
-from its builder fails here before it can drift a query result."""
+"""Each sqlexpr rendering against an independent python twin on the real
+corpus: the SQL string is the only engine-side implementation, so these
+pin its VALUES (the DuckDB oracles of text_doc_features,
+text_lang_quality and the dedup queries pin them a second time)."""
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 import pytest
@@ -12,107 +13,132 @@ from pyspark.sql import functions as F
 
 from realtime_olap_spark import sqlexpr as X
 from realtime_olap_spark.catalog import Catalog
-from realtime_olap_spark.operators import decontam as DC
-from realtime_olap_spark.operators import importance as IMP
-from realtime_olap_spark.operators import text as TX
-from realtime_olap_spark.operators.dedup import word_hash60, word_set
+from realtime_olap_spark.operators.text import FINGERPRINT_MOD, LANG_MARKERS
 
 from conftest import SF_DIR
 
-_LAMBDA_VAR = re.compile(r"lambda `?\w+`?#\d+[L]?")
-_EXPR_ID = re.compile(r"#\d+[L]?")
+# Java's \s (the split regex of words_sql) is ASCII-only
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
-def _norm_plan(df) -> str:
-    s = df._jdf.queryExecution().optimizedPlan().toString()
-    s = _LAMBDA_VAR.sub("lambda V", s)
-    return _EXPR_ID.sub("#N", s)
+def _words(t: str) -> list[str]:
+    return [w for w in _JAVA_WS.split(t.lower()) if w]
 
 
-def _docs(spark):
-    return Catalog(spark, SF_DIR).table("documents")
+def _ngrams(ws: list[str], n: int) -> list[str]:
+    return [" ".join(ws[i:i + n]) for i in range(max(len(ws) - n + 1, 0))]
 
 
-def _assert_twin(spark, col_version, sql_version, check_values=True):
-    d = _docs(spark)
-    a = d.select(col_version.alias("v"))
-    b = d.select(sql_version.alias("v"))
-    assert _norm_plan(a) == _norm_plan(b)
-    if check_values:
-        assert a.collect() == b.collect()
+def _doc_grams(t: str) -> list[str]:
+    ws = _words(t)
+    return ws + _ngrams(ws, 2)
+
+
+def _md5_prefix(s: str, hex_chars: int) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:hex_chars], 16)
+
+
+def _word_set(t: str) -> list[str]:
+    return list(dict.fromkeys(t.lower().split(" ")))
+
+
+def _rows(spark, *cols):
+    """(text, *rendered values) for every corpus document."""
+    d = Catalog(spark, SF_DIR).table("documents")
+    return d.select("text", *[c.alias(f"v{i}") for i, c in enumerate(cols)]) \
+        .collect()
+
+
+def _check(spark, rendered: str, ref) -> None:
+    rows = _rows(spark, F.expr(rendered))
+    assert rows
+    for r in rows:
+        assert r["v0"] == ref(r["text"]), r["text"]
 
 
 @pytest.mark.parametrize("n", [2, 3])
 def test_word_ngrams_twin(spark, n):
-    _assert_twin(spark, TX.word_ngrams(F.col("text"), n),
-                 F.expr(X.word_ngrams_sql("text", n)))
+    _check(spark, X.word_ngrams_sql("text", n),
+           lambda t: _ngrams(_words(t), n))
 
 
 def test_words_twin(spark):
-    _assert_twin(spark, TX.words(F.col("text")),
-                 F.expr(X.words_sql("text")))
+    _check(spark, X.words_sql("text"), _words)
 
 
 def test_ngram_hash_set_twin(spark):
-    _assert_twin(spark, DC.ngram_hash_set(F.col("text"), 3),
-                 F.expr(X.ngram_hash_set_sql("text", 3)))
+    """Distinct gram hashes in first-occurrence order; the reference
+    hashes the python grams with the engine's own xxhash64."""
+    rows = _rows(spark, F.expr(X.ngram_hash_set_sql("text", 3)))
+    grams = sorted({g for r in rows for g in _ngrams(_words(r["text"]), 3)})
+    code = {r["g"]: r["h"] for r in spark.createDataFrame(
+        [(g,) for g in grams], "g string")
+        .select("g", F.xxhash64("g").alias("h")).collect()}
+    for r in rows:
+        distinct = dict.fromkeys(_ngrams(_words(r["text"]), 3))
+        assert r["v0"] == [code[g] for g in distinct], r["text"]
 
 
 def test_doc_grams_twin(spark):
-    _assert_twin(spark, IMP.doc_grams(F.col("text")),
-                 F.expr(X.doc_grams_sql("text")))
+    _check(spark, X.doc_grams_sql("text"), _doc_grams)
 
 
 def test_gram_buckets_md5_twin(spark):
-    _assert_twin(spark, IMP.gram_buckets_md5(F.col("text"), 1024),
-                 F.expr(X.gram_buckets_md5_sql("text", 1024)))
+    _check(spark, X.gram_buckets_md5_sql("text", 1024),
+           lambda t: [_md5_prefix(g, 8) % 1024 for g in _doc_grams(t)])
 
 
 def test_favored_hits_twin(spark):
     favored = [(i * 7 + 3) % 2 for i in range(1024)]
-    _assert_twin(spark, IMP.favored_hits(F.col("text"), favored),
-                 F.expr(X.favored_hits_sql("text", favored)))
+    _check(spark, X.favored_hits_sql("text", favored),
+           lambda t: sum(favored[_md5_prefix(g, 8) % 1024]
+                         for g in _doc_grams(t)))
 
 
 def test_quality_features_twin(spark):
-    d = _docs(spark)
-    a = d.select(*TX.quality_features(F.col("text")))
-    b = d.select(*X.quality_features_sql("text"))
-    assert _norm_plan(a) == _norm_plan(b)
-    assert a.collect() == b.collect()
+    d = Catalog(spark, SF_DIR).table("documents")
+    rows = d.select("text", *X.quality_features_sql("text")).collect()
+    assert rows
+    markers = set(LANG_MARKERS["en"])
+    for r in rows:
+        t = r["text"]
+        ws = _words(t)
+        n_punct = len(t) - len(re.sub(r"[^\w\s]", "", t, flags=re.ASCII))
+        n_upper = sum("A" <= c <= "Z" for c in t)
+        assert (r["n_chars_m"], r["n_tokens"]) == (len(t), len(ws))
+        assert r["mean_word_len"] == len("".join(ws)) / len(ws)
+        assert r["stopword_ratio"] == \
+            sum(w in markers for w in ws) / len(ws)
+        assert r["punct_ratio"] == n_punct / len(t)
+        assert r["upper_ratio"] == n_upper / len(t)
 
 
 def test_rolling_fingerprint_twin(spark):
-    _assert_twin(
-        spark, TX.rolling_fingerprint(F.col("text")),
-        F.expr(X.rolling_fingerprint_sql("text", TX.FINGERPRINT_MOD)))
+    def fold(t):
+        h = 0
+        for c in t:
+            h = (h * 31 + ord(c)) % FINGERPRINT_MOD
+        return h
+
+    _check(spark, X.rolling_fingerprint_sql("text", FINGERPRINT_MOD), fold)
 
 
 def test_word_set_and_hash_twin(spark):
-    _assert_twin(spark, word_set(F.col("text")),
-                 F.expr(X.word_set_sql("text")))
-    _assert_twin(spark,
-                 F.transform(word_set(F.col("text")),
-                             lambda w: word_hash60(w)),
-                 F.expr(f"transform({X.word_set_sql('text')}, "
-                        f"w -> {X.word_hash60_sql('w')})"))
+    _check(spark, X.word_set_sql("text"), _word_set)
+    _check(spark, X.word_hashes_sql("text"),
+           lambda t: [_md5_prefix(w, 15) for w in _word_set(t)])
 
 
 def test_simhash_fp_twin(spark):
-    d = _docs(spark).select(
-        "doc_id",
-        F.transform(word_set(F.col("text")),
-                    lambda w: word_hash60(w)).alias("__wh"))
-    wh = F.col("__wh")
-    n = F.size(wh)
-    fp = None
-    for j in range(16):
-        cnt = F.aggregate(
-            wh, F.lit(0).cast("long"),
-            lambda acc, h: acc + F.shiftright(h, j).bitwiseAND(F.lit(1)))
-        term = F.when(cnt * 2 > n, F.lit(1 << j)).otherwise(F.lit(0))
-        fp = term if fp is None else fp + term
-    a = d.select(fp.cast("long").alias("v"))
-    b = d.select(F.expr(X.simhash_fp_sql("__wh", 16)).alias("v"))
-    assert _norm_plan(a) == _norm_plan(b)
-    assert a.collect() == b.collect()
+    def fp(t):
+        hs = [_md5_prefix(w, 15) for w in _word_set(t)]
+        return sum(1 << j for j in range(16)
+                   if 2 * sum((h >> j) & 1 for h in hs) > len(hs))
+
+    d = Catalog(spark, SF_DIR).table("documents").select(
+        "text", F.expr(X.word_hashes_sql("text")).alias("__wh"))
+    rows = d.select("text", F.expr(X.simhash_fp_sql("__wh", 16))
+                    .alias("v")).collect()
+    assert rows
+    for r in rows:
+        assert r["v"] == fp(r["text"]), r["text"]

@@ -84,13 +84,13 @@ def test_streaming_quality_classifier_matches_batch(spark, tmp_path):
     model = CL.QualityModel(
         tuple(((3 * i) % 7 - 3) / 5.0 for i in range(256)), bias=0.25)
     scored = _stream(spark, src).withColumn(
-        "q", CL.quality_score(F.col("text"), model))
+        "q", CL.quality_score("text", model))
     sink, ckpt = f"{tmp_path}/sink", f"{tmp_path}/ckpt"
     _drain(scored, sink, ckpt)
     got = {r["doc_id"]: r["q"] for r in spark.read.parquet(sink).collect()}
 
     batch = spark.read.schema(SCHEMA).parquet(src).withColumn(
-        "q", CL.quality_score(F.col("text"), model))
+        "q", CL.quality_score("text", model))
     want = {r["doc_id"]: r["q"] for r in batch.collect()}
     assert got == want
     assert got[3] == 1.0 / (1.0 + math.exp(-0.25))

@@ -114,7 +114,7 @@ def test_streaming_decontamination_matches_batch(spark, tmp_path):
     # set contaminates (array intersect against the broadcast hash set)
     bench_hashes = [r["gram_hash"] for r in bh.collect()]
     flag = F.arrays_overlap(
-        ngram_hash_set(F.col("text"), 3),
+        ngram_hash_set("text", 3),
         F.array(*[F.lit(h) for h in bench_hashes]))
     clean_stream = _stream(spark, src).where(~flag)
     sink, ckpt = f"{tmp_path}/sink", f"{tmp_path}/ckpt"

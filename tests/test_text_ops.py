@@ -12,14 +12,17 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from realtime_olap_spark import sqlexpr as X
 from realtime_olap_spark.catalog import Catalog
-from realtime_olap_spark.operators.text import (PII_PATTERNS, pii_count,
+from realtime_olap_spark.operators.text import (FINGERPRINT_MOD,
+                                                PII_PATTERNS, pii_count,
                                                 redact_pii,
                                                 repeated_ngram_counts,
-                                                rolling_fingerprint,
-                                                rolling_fingerprint_fast,
-                                                word_ngrams)
+                                                rolling_fingerprint_fast)
 from tests.conftest import SF_DIR, assert_matches_oracle
+
+# the expression fold the Arrow fast path must equal
+_FOLD = X.rolling_fingerprint_sql("text", FINGERPRINT_MOD)
 
 # DuckDB twins (1-based list indexing; see suite/text.py for _WS)
 _WS = r"list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x != '')"
@@ -36,7 +39,7 @@ def test_repeated_ngram_counts_match_duckdb(spark, duck):
     d = Catalog(spark, SF_DIR).table("documents")
     cols, sel = [F.col("doc_id")], ["doc_id"]
     for n in (1, 2, 3):
-        dup, tot = repeated_ngram_counts(F.col("text"), n)
+        dup, tot = repeated_ngram_counts("text", n)
         cols += [dup.alias(f"dup{n}"), tot.alias(f"tot{n}")]
         g = _duck_ngrams(n)
         sel += [f"CAST(len({g}) - len(list_distinct({g})) AS BIGINT) AS dup{n}",
@@ -51,8 +54,8 @@ def test_word_ngrams_short_text_edges(spark):
     rows = [("a", "one"), ("b", "one two"), ("c", ""), ("d", "  x  ")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = df.select("doc_id",
-                    word_ngrams(F.col("text"), 3).alias("g3"),
-                    word_ngrams(F.col("text"), 2).alias("g2")).collect()
+                    F.expr(X.word_ngrams_sql("text", 3)).alias("g3"),
+                    F.expr(X.word_ngrams_sql("text", 2)).alias("g2")).collect()
     by_id = {r["doc_id"]: r for r in out}
     assert by_id["a"]["g3"] == [] and by_id["a"]["g2"] == []
     assert by_id["b"]["g2"] == ["one two"] and by_id["b"]["g3"] == []
@@ -147,14 +150,14 @@ def test_fingerprint_arrow_matches_expression_fold(spark):
     value-identical to the oracle-shaped reference."""
     d = Catalog(spark, SF_DIR).table("documents")
     both = d.select(
-        rolling_fingerprint(F.col("text")).alias("fold"),
+        F.expr(_FOLD).alias("fold"),
         rolling_fingerprint_fast(F.col("text")).alias("arrow"))
     assert both.where(F.col("fold") != F.col("arrow")).count() == 0
 
     edge = spark.createDataFrame(
         [("",), (None,), ("a",), ("χ χ 语言 mixed™",)], "text string")
     rows = edge.select(
-        rolling_fingerprint(F.col("text")).alias("fold"),
+        F.expr(_FOLD).alias("fold"),
         rolling_fingerprint_fast(F.col("text")).alias("arrow")).collect()
     for r in rows:
         assert r["fold"] == r["arrow"], r
