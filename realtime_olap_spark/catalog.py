@@ -15,6 +15,7 @@ correctness suite is unaffected).
 
 from __future__ import annotations
 
+import itertools
 import os
 from dataclasses import dataclass, field
 
@@ -448,6 +449,26 @@ def _derived_dedup_stats(cat: "Catalog") -> DataFrame:
                  F.max("n").alias("max_group")))
 
 
+_VIEW_IDS = itertools.count()
+
+
+def pql_view(df: DataFrame, name: str | None = None) -> str:
+    """The temp view a PQL statement reads ``df`` through: registered once
+    per DataFrame object, under a fresh ``__pql_t<n>`` name that neither a
+    second corpus in the same session nor a user view (``register_views``
+    names views exactly like the tables) can collide with. With ``name``,
+    (re-)register ``df`` under it — how a callable derived table's fresh
+    frame replaces the previous access's under one fixed name."""
+    if name is None:
+        name = getattr(df, "_pql_view", None)
+        if name is not None:
+            return name
+        name = f"__pql_t{next(_VIEW_IDS)}"
+    df.createOrReplaceTempView(name)
+    df._pql_view = name
+    return name
+
+
 DERIVED_TABLES = {
     "media": _derived_media,
     "media_probe": _derived_media_probe,
@@ -478,6 +499,7 @@ class Catalog:
     _cache: dict[str, DataFrame] = field(default_factory=dict)
     _derived: dict[str, DataFrame] = field(default_factory=dict)
     _views_registered: bool = False
+    _live_views: dict[str, str] = field(default_factory=dict)
 
     def register_derived(self, name: str, df) -> None:
         """Register a session-scoped derived table addressable from the
@@ -523,9 +545,13 @@ class Catalog:
                 df = obj()
                 # keep the SQL temp view in lock-step with the PQL
                 # path: a frozen snapshot view would silently serve
-                # different data than POST /query as segments land
+                # different data than POST /query as segments land.
+                # The PQL view keeps one name per table, so live
+                # accesses replace each other instead of piling up.
                 if self._views_registered:
                     df.createOrReplaceTempView(name)
+                pql_view(df, self._live_views.setdefault(
+                    name, f"__pql_t{next(_VIEW_IDS)}"))
                 return df
             return obj
         if name not in self._cache:

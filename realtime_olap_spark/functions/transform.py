@@ -7,6 +7,13 @@ DATETIMECONVERT, VALUEIN; infix ``+ - * /`` compiles to the first four
 LITERAL (pinot-common/.../TransformExpressionTree.java:43). All of these are
 plain Catalyst expressions here — JVM-side, codegen'd, no Python in the path.
 
+Each function has ONE implementation: its SQL rendering (``<name>_sql``),
+whose arguments are SQL expressions (a column reference, a literal, a
+nested rendering). The PQL compiler nests renderings into one statement;
+the public Column entry points (``add`` … ``valuein``) take column NAMES
+and parse the rendering with ``F.expr`` — one py4j round trip, the same
+Catalyst tree the Column API would build.
+
 Time units follow java.util.concurrent.TimeUnit (the reference's
 TIMECONVERT contract, TimeConversionTransformFunction.java:33);
 DATETIMECONVERT formats follow DateTimeFieldSpec
@@ -20,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from realtime_olap_spark.sqlexpr import col_sql, lit_sql
+
 # factors expressed in nanoseconds to keep sub-millisecond units exact
 _UNIT_NS: dict[str, int] = {
     "NANOSECONDS": 1,
@@ -32,61 +41,58 @@ _UNIT_NS: dict[str, int] = {
 }
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def _dbl(x: str) -> str:
+    return f"CAST({x} AS DOUBLE)"
 
 
-def _dbl(col: Column | str) -> Column:
-    return _c(col).cast("double")
+def _long(x: str) -> str:
+    return f"CAST({x} AS BIGINT)"
+
+
+def _floor_div(x: str, div: int) -> str:
+    """Long floor-division through DECIMAL(38,0), never a double, so 64-bit
+    epoch magnitudes keep full precision."""
+    return _long(f"FLOOR(CAST({x} AS DECIMAL(38,0)) / {div})")
 
 
 # --- arithmetic (AdditionTransformFunction.java:32 …) -----------------------
 
-def add(*cols: Column | str) -> Column:
+def add_sql(*args: str) -> str:
     """ADD(a, b, …) — sum of ≥2 args as double."""
-    out = _dbl(cols[0])
-    for c in cols[1:]:
-        out = out + _dbl(c)
-    return out
+    return "(" + " + ".join(_dbl(a) for a in args) + ")"
 
 
-def sub(a: Column | str, b: Column | str) -> Column:
+def sub_sql(a: str, b: str) -> str:
     """SUB(a, b) — SubtractionTransformFunction.java:32."""
-    return _dbl(a) - _dbl(b)
+    return f"({_dbl(a)} - {_dbl(b)})"
 
 
-def mult(*cols: Column | str) -> Column:
+def mult_sql(*args: str) -> str:
     """MULT(a, b, …) — product of ≥2 args as double."""
-    out = _dbl(cols[0])
-    for c in cols[1:]:
-        out = out * _dbl(c)
-    return out
+    return "(" + " * ".join(_dbl(a) for a in args) + ")"
 
 
-def div(a: Column | str, b: Column | str) -> Column:
+def div_sql(a: str, b: str) -> str:
     """DIV(a, b) — DivisionTransformFunction.java:32."""
-    return _dbl(a) / _dbl(b)
+    return f"({_dbl(a)} / {_dbl(b)})"
 
 
 # --- time conversion --------------------------------------------------------
 
-def timeconvert(col: Column | str, from_unit: str, to_unit: str) -> Column:
+def timeconvert_sql(x: str, from_unit: str, to_unit: str) -> str:
     """TIMECONVERT(col, fromUnit, toUnit) — epoch quantity conversion
     (TimeConversionTransformFunction.java:33). Matches TimeUnit.convert for
     non-negative epochs: widening multiplies exactly in long arithmetic,
     narrowing floor-divides.
     """
-    c = _c(col).cast("long")
     f, t = _UNIT_NS[from_unit.upper()], _UNIT_NS[to_unit.upper()]
     if f >= t:
-        return (c * F.lit(f // t)).cast("long")
-    # Narrowing: long floor-division, computed in decimal so 64-bit epochs
-    # never round through a double.
-    return F.floor(c.cast("decimal(38,0)") / F.lit(t // f)).cast("long")
+        return _long(f"{_long(x)} * {f // t}")
+    return _floor_div(_long(x), t // f)
 
 
-def datetimeconvert(col: Column | str, input_fmt: str, output_fmt: str,
-                    granularity: str) -> Column:
+def datetimeconvert_sql(x: str, input_fmt: str, output_fmt: str,
+                        granularity: str) -> str:
     """DATETIMECONVERT(col, inputFormat, outputFormat, granularity) —
     DateTimeConversionTransformFunction.java:82.
 
@@ -105,53 +111,88 @@ def datetimeconvert(col: Column | str, input_fmt: str, output_fmt: str,
     out_size, out_unit, out_kind, *out_pat = output_fmt.split(":")
     g_size, g_unit = granularity.split(":")
 
-    def _floor_div(ns: Column, div: int) -> Column:
-        return F.floor(ns.cast("decimal(38,0)") / F.lit(div)).cast("long")
-
-    c = _c(col)
     # 1) input → epoch nanos
     if in_kind.upper() == "EPOCH":
-        ns = (c.cast("long") * F.lit(int(in_size) * _UNIT_NS[in_unit.upper()])).cast("long")
+        ns = _long(f"{_long(x)} * {int(in_size) * _UNIT_NS[in_unit.upper()]}")
     else:  # SIMPLE_DATE_FORMAT
-        ns = (F.unix_millis(F.to_timestamp(c, in_pat[0])) * F.lit(1_000_000)).cast("long")
+        ns = _long(f"unix_millis(to_timestamp({x}, {lit_sql(in_pat[0])}))"
+                   " * 1000000")
 
     # 2) bucket to granularity (floor)
     g_ns = int(g_size) * _UNIT_NS[g_unit.upper()]
     if g_ns > 1:
-        ns = (_floor_div(ns, g_ns) * F.lit(g_ns)).cast("long")
+        ns = _long(f"{_floor_div(ns, g_ns)} * {g_ns}")
 
     # 3) epoch nanos → output format
     if out_kind.upper() == "EPOCH":
         out_ns = int(out_size) * _UNIT_NS[out_unit.upper()]
         return _floor_div(ns, out_ns) if out_ns > 1 else ns
-    return F.date_format(F.timestamp_millis(_floor_div(ns, 1_000_000)), out_pat[0])
+    return (f"date_format(timestamp_millis({_floor_div(ns, 1_000_000)}), "
+            f"{lit_sql(out_pat[0])})")
 
 
 # --- VALUEIN (MV projection filter) ----------------------------------------
 
-def valuein(col: Column | str, *values) -> Column:
+def valuein_sql(x: str, *values) -> str:
     """VALUEIN(mvCol, v1, v2, …) — filters an MV column's elements to the
-    given set, projection-side (ValueInTransformFunction.java:51). Pairs with
-    an IN filter the way the reference uses it."""
-    vals = list(values)
-    return F.filter(_c(col), lambda x: x.isin(vals))
+    given python values, projection-side (ValueInTransformFunction.java:51).
+    Pairs with an IN filter the way the reference uses it."""
+    return (f"filter({x}, v -> v IN "
+            f"({', '.join(lit_sql(v) for v in values)}))")
+
+
+# --- Column entry points: column names in, the rendering parsed once --------
+
+def add(*cols: str) -> Column:
+    return F.expr(add_sql(*map(col_sql, cols)))
+
+
+def sub(a: str, b: str) -> Column:
+    return F.expr(sub_sql(col_sql(a), col_sql(b)))
+
+
+def mult(*cols: str) -> Column:
+    return F.expr(mult_sql(*map(col_sql, cols)))
+
+
+def div(a: str, b: str) -> Column:
+    return F.expr(div_sql(col_sql(a), col_sql(b)))
+
+
+def timeconvert(col: str, from_unit: str, to_unit: str) -> Column:
+    return F.expr(timeconvert_sql(col_sql(col), from_unit, to_unit))
+
+
+def datetimeconvert(col: str, input_fmt: str, output_fmt: str,
+                    granularity: str) -> Column:
+    return F.expr(datetimeconvert_sql(col_sql(col), input_fmt, output_fmt,
+                                      granularity))
+
+
+def valuein(col: str, *values) -> Column:
+    return F.expr(valuein_sql(col_sql(col), *values))
 
 
 # --- registry for the PQL front end ----------------------------------------
 
 _REGISTRY = {
-    "add": add,
-    "sub": sub,
-    "mult": mult,
-    "div": div,
-    "timeconvert": timeconvert,
-    "datetimeconvert": datetimeconvert,
-    "valuein": valuein,
+    "add": add_sql,
+    "sub": sub_sql,
+    "mult": mult_sql,
+    "div": div_sql,
+    "timeconvert": timeconvert_sql,
+    "datetimeconvert": datetimeconvert_sql,
+    "valuein": valuein_sql,
 }
+
+#: Functions whose arguments after the first are python literals (units,
+#: formats, value lists), not expressions.
+LITERAL_TAIL = frozenset({"timeconvert", "datetimeconvert", "valuein"})
 
 
 def resolve_transform(name: str):
-    """TransformFunctionFactory.get analog (compile-time closed set)."""
+    """TransformFunctionFactory.get analog (compile-time closed set): the
+    function's SQL rendering."""
     try:
         return _REGISTRY[name.lower()]
     except KeyError:

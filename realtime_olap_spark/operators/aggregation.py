@@ -5,7 +5,13 @@ Reference: every aggregation implements aggregate / merge / extractFinalResult
 registered by name in AggregationFunctionFactory.java:29 with PERCENTILE<N>
 suffix resolution (AggregationFunctionType.java:25-103). Spark's partial/final
 HashAggregate is the same hierarchical-merge execution model, so every function
-here is a plain Column expression and Catalyst does the merging.
+here is a plain aggregate expression and Catalyst does the merging.
+
+Each function has ONE implementation: its SQL rendering (``<name>_sql``,
+argument = a SQL expression). The PQL compiler embeds the renderings in its
+one statement; ``group_by_agg`` and the Column entry points (``dsum``,
+``davg``, the percentile sketches, :meth:`AggSpec.builder`) parse them with
+``F.expr`` over column NAMES — the same Catalyst tree, one py4j round trip.
 
 Determinism note (differential testing): double addition is not associative,
 so a shuffled Spark sum and a sequential DuckDB sum can differ in the last
@@ -28,8 +34,8 @@ SUMMV, MINMV, …) we fold the array JVM-side — no explode, so the shuffle
 carries one row per record, not one per element (the 100 TB-safe shape).
 Functions that genuinely need element-level rows (DISTINCTCOUNTMV,
 PERCENTILE<N>MV) are flagged ``needs_elements``; the group-by executor
-(operators/groupby.py) explodes once, aggregates, and joins back on the
-(small) group keys.
+(operators/groupby.py) and the PQL statement explode once, aggregate, and
+join back on the (small) group keys.
 """
 
 from __future__ import annotations
@@ -41,26 +47,31 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from realtime_olap_spark.sqlexpr import col_sql
+
 DEC = "decimal(38,10)"
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def dsum(col: Column | str) -> Column:
+def dsum_sql(x: str) -> str:
     """Deterministic (order-independent, exact) sum of a double column."""
-    return F.sum(_c(col).cast(DEC)).cast("double")
+    return f"CAST(sum(CAST({x} AS {DEC})) AS DOUBLE)"
 
 
-def davg(col: Column | str) -> Column:
+def davg_sql(x: str) -> str:
     """Deterministic average: exact decimal sum, divided by count as doubles.
 
     Mirrors the reference's AvgPair(sum, count) intermediate
     (pinot-core/.../function/customobject/AvgPair.java).
     """
-    c = _c(col)
-    return (F.sum(c.cast(DEC)).cast("double") / F.count(c)).cast("double")
+    return f"CAST({dsum_sql(x)} / count({x}) AS DOUBLE)"
+
+
+def dsum(col: str) -> Column:
+    return F.expr(dsum_sql(col_sql(col)))
+
+
+def davg(col: str) -> Column:
+    return F.expr(davg_sql(col_sql(col)))
 
 
 # Fixed-point scale for element sums over float arrays: 2^35. Multiplying a
@@ -82,163 +93,156 @@ FX_SAFE_RISK = float(1 << 24)  # max per-row size(arr)·max|element| for fx path
 _FX_CLAMP = float(1 << 25)  # element clamp: keeps the fx fold evaluable
 
 
-def _fx_fold(col: Column | str) -> Column:
-    """Per-row exact fixed-point sum of an array column's elements.
+def fx_term_sql(x: str) -> str:
+    """One element's exact fixed-point term, floor(x · 2^35) as
+    DECIMAL(38,0). Elements beyond the fx range are clamped to 0 so a fold
+    can never overflow under ANSI evaluation — whenever a clamp would fire,
+    the risk guard (> FX_SAFE_RISK, note 2^24 < 2^25 so clamping never
+    touches a chosen fx result) routes the aggregate to the decimal fold
+    instead."""
+    xd = f"CAST({x} AS DOUBLE)"
+    return (f"CAST(FLOOR(CASE WHEN abs({xd}) <= {_FX_CLAMP!r}D THEN {xd} "
+            f"ELSE 0.0D END * {FX}) AS DECIMAL(38,0))")
 
-    Elements beyond the fx range are clamped to 0 so the fold can never
-    overflow under ANSI evaluation — whenever a clamp would fire, the risk
-    guard (> FX_SAFE_RISK, note 2^24 < 2^25 so clamping never touches a
-    chosen fx result) routes the aggregate to the decimal fold instead. The
+
+def _fx_fold(arr: str) -> str:
+    """Per-row exact fixed-point sum of an array's elements; the
     accumulator is DECIMAL(38,0) (exact integers, no row-sum overflow)."""
-    def term(x: Column) -> Column:
-        xd = x.cast("double")
-        safe = F.when(F.abs(xd) <= F.lit(_FX_CLAMP), xd).otherwise(F.lit(0.0))
-        return F.floor(safe * F.lit(FX)).cast("decimal(38,0)")
-
-    return F.aggregate(
-        _c(col), F.lit(0).cast("decimal(38,0)"),
-        lambda acc, x: (acc + term(x)).cast("decimal(38,0)"),
-    )
+    return (f"aggregate({arr}, CAST(0 AS DECIMAL(38,0)), "
+            f"(acc, x) -> CAST(acc + {fx_term_sql('x')} AS DECIMAL(38,0)))")
 
 
-def _dec_fold(col: Column | str) -> Column:
-    """Per-row exact DECIMAL(38,10) sum of an array column's elements — the
+def _dec_fold(arr: str) -> str:
+    """Per-row exact DECIMAL(38,10) sum of an array's elements — the
     overflow-safe fallback for large-magnitude elements."""
-    return F.aggregate(
-        _c(col), F.lit(0).cast(DEC),
-        lambda acc, x: (acc + x.cast("double").cast(DEC)).cast(DEC),
-    )
+    return (f"aggregate({arr}, CAST(0 AS {DEC}), "
+            f"(acc, x) -> CAST(acc + CAST(CAST(x AS DOUBLE) AS {DEC}) "
+            f"AS {DEC}))")
 
 
-def _fx_risk(col: Column | str) -> Column:
-    """Group-level max of size(arr)·max|element| — decides the fx/decimal
-    switch. NULL (all arrays empty) counts as safe."""
-    arr = _c(col)
-    row_risk = (F.size(arr).cast("double")
-                * F.array_max(F.transform(arr, lambda x: F.abs(x.cast("double")))))
-    return F.coalesce(F.max(row_risk), F.lit(0.0))
+def row_risk_sql(arr: str) -> str:
+    """One row's size(arr)·max|element| — the fx/decimal switch input."""
+    return (f"CAST(size({arr}) AS DOUBLE) * "
+            f"array_max(transform({arr}, x -> abs(CAST(x AS DOUBLE))))")
+
+
+def risk_ok_sql(row_risk: str) -> str:
+    """Whether the group-level max of the row risks allows the fx path.
+    NULL (all arrays empty) counts as safe."""
+    return f"coalesce(max({row_risk}), 0.0D) <= {FX_SAFE_RISK!r}D"
+
+
+def _fx_risk_ok(arr: str) -> str:
+    return risk_ok_sql(row_risk_sql(arr))
 
 
 # ---------------------------------------------------------------------------
 # Single-value aggregations (SURVEY.md §2.4)
 # ---------------------------------------------------------------------------
 
-def agg_count(col: Column | str = "*") -> Column:
-    return F.count(F.lit(1))
+def count_sql(x: str | None) -> str:
+    return "count(1)"
 
 
-def agg_min(col: Column | str) -> Column:
-    return F.min(_c(col).cast("double"))
+def min_sql(x: str) -> str:
+    return f"min(CAST({x} AS DOUBLE))"
 
 
-def agg_max(col: Column | str) -> Column:
-    return F.max(_c(col).cast("double"))
+def max_sql(x: str) -> str:
+    return f"max(CAST({x} AS DOUBLE))"
 
 
-def agg_sum(col: Column | str) -> Column:
-    return dsum(col)
-
-
-def agg_avg(col: Column | str) -> Column:
-    return davg(col)
-
-
-def agg_minmaxrange(col: Column | str) -> Column:
+def minmaxrange_sql(x: str) -> str:
     # MinMaxRangeAggregationFunction.java:33 — final = max - min.
-    c = _c(col).cast("double")
-    return (F.max(c) - F.min(c)).cast("double")
+    return f"CAST({max_sql(x)} - {min_sql(x)} AS DOUBLE)"
 
 
-def agg_distinctcount(col: Column | str) -> Column:
+def distinctcount_sql(x: str) -> str:
     # Reference hashes values into an IntOpenHashSet (DistinctCount…java:32)
     # and tolerates hash collisions; we are exact (SURVEY.md §7 risk 1).
-    return F.count_distinct(_c(col))
+    return f"count(DISTINCT {x})"
 
 
-def agg_distinctcounthll(col: Column | str, rsd: float = 0.05) -> Column:
+def distinctcounthll_sql(x: str, rsd: float = 0.05) -> str:
     # DistinctCountHLLAggregationFunction.java:34 — HyperLogLog sketch.
-    return F.approx_count_distinct(_c(col), rsd)
+    return f"approx_count_distinct({x}, {rsd!r}D)"
 
 
-def agg_percentile(col: Column | str, pct: float) -> Column:
-    # Exact interpolated percentile (PercentileAggregationFunction.java:32).
-    return F.percentile(_c(col).cast("double"), F.lit(pct / 100.0))
+def percentile_sql(x: str, frac: str) -> str:
+    """Exact interpolated percentile (PercentileAggregationFunction.java:32)
+    at ``frac`` — a DOUBLE fraction, or an array of them for a merged
+    family."""
+    return f"percentile(CAST({x} AS DOUBLE), {frac})"
 
 
 #: Accuracy of every approx-percentile sketch in the engine. The merged
-#: same-column percentile families (groupby._merged_agg_columns) fold N
+#: same-column percentile families (groupby.merged_agg_sql) fold N
 #: PERCENTILEEST/TDIGEST calls into ONE percentile_approx(col, array(p…),
 #: acc) — merged and unmerged paths MUST use the same accuracy or their
 #: values silently diverge (r16 verdict item 8; pinned in test_opt_r17).
 PERCENTILE_APPROX_ACCURACY = 10000
 
 
-def agg_percentile_est(col: Column | str, pct: float,
+def percentile_approx_sql(x: str, frac: str,
+                          accuracy: int = PERCENTILE_APPROX_ACCURACY) -> str:
+    """PercentileEstAggregationFunction.java:33 (QuantileDigest) and
+    PercentileTDigestAggregationFunction.java:37 (TDigest): Spark's
+    approx_percentile is the engine-native mergeable quantile sketch."""
+    return f"percentile_approx(CAST({x} AS DOUBLE), {frac}, {accuracy})"
+
+
+def agg_percentile_est(col: str, pct: float,
                        accuracy: int = PERCENTILE_APPROX_ACCURACY) -> Column:
-    # PercentileEstAggregationFunction.java:33 — QuantileDigest approximate.
-    return F.percentile_approx(_c(col).cast("double"), F.lit(pct / 100.0), F.lit(accuracy))
+    return F.expr(percentile_approx_sql(col_sql(col), f"{pct / 100.0!r}D",
+                                        accuracy))
 
 
-def agg_percentile_tdigest(col: Column | str, pct: float,
+def agg_percentile_tdigest(col: str, pct: float,
                            accuracy: int = PERCENTILE_APPROX_ACCURACY) -> Column:
-    # PercentileTDigestAggregationFunction.java:37 — TDigest; Spark's
-    # approx_percentile is the engine-native mergeable quantile sketch.
-    return F.percentile_approx(_c(col).cast("double"), F.lit(pct / 100.0), F.lit(accuracy))
+    return agg_percentile_est(col, pct, accuracy)
 
 
 # ---------------------------------------------------------------------------
 # Multi-value aggregations — element-wise folds (no explode needed)
 # ---------------------------------------------------------------------------
 
-def _dbl_arr(col: Column | str) -> Column:
-    return F.transform(_c(col), lambda x: x.cast("double"))
+def _dbl_arr(x: str) -> str:
+    return f"transform({x}, x -> CAST(x AS DOUBLE))"
 
 
-def agg_countmv(col: Column | str) -> Column:
+def countmv_sql(x: str) -> str:
     # CountMVAggregationFunction.java — counts elements, not rows.
-    return F.sum(F.size(_c(col))).cast("long")
+    return f"CAST(sum(size({x})) AS BIGINT)"
 
 
-def agg_minmv(col: Column | str) -> Column:
-    return F.min(F.array_min(_dbl_arr(col)))
+def minmv_sql(x: str) -> str:
+    return f"min(array_min({_dbl_arr(x)}))"
 
 
-def agg_maxmv(col: Column | str) -> Column:
-    return F.max(F.array_max(_dbl_arr(col)))
+def maxmv_sql(x: str) -> str:
+    return f"max(array_max({_dbl_arr(x)}))"
 
 
-def agg_summv(col: Column | str) -> Column:
+def summv_sql(x: str) -> str:
     # Per-row exact fixed-point fold, exact decimal merge, one final
     # division; elements beyond the fx range switch to the decimal fold
     # (see FX_SAFE_RISK above).
-    fx = (F.sum(_fx_fold(col).cast(DEC)).cast("double") / F.lit(float(FX)))
-    dec = F.sum(_dec_fold(col)).cast("double")
-    return (F.when(_fx_risk(col) <= F.lit(FX_SAFE_RISK), fx)
-            .otherwise(dec).cast("double"))
+    fx = f"CAST(sum(CAST({_fx_fold(x)} AS {DEC})) AS DOUBLE) / {float(FX)!r}D"
+    dec = f"CAST(sum({_dec_fold(x)}) AS DOUBLE)"
+    return f"CAST(CASE WHEN {_fx_risk_ok(x)} THEN {fx} ELSE {dec} END AS DOUBLE)"
 
 
-def agg_avgmv(col: Column | str) -> Column:
-    n = F.sum(F.size(_c(col)))
-    fx = (F.sum(_fx_fold(col).cast(DEC)).cast("double") / F.lit(float(FX)) / n)
-    dec = (F.sum(_dec_fold(col)).cast("double") / n)
-    return (F.when(_fx_risk(col) <= F.lit(FX_SAFE_RISK), fx)
-            .otherwise(dec).cast("double"))
+def avgmv_sql(x: str) -> str:
+    n = f"sum(size({x}))"
+    fx = (f"CAST(sum(CAST({_fx_fold(x)} AS {DEC})) AS DOUBLE) "
+          f"/ {float(FX)!r}D / {n}")
+    dec = f"CAST(sum({_dec_fold(x)}) AS DOUBLE) / {n}"
+    return f"CAST(CASE WHEN {_fx_risk_ok(x)} THEN {fx} ELSE {dec} END AS DOUBLE)"
 
 
-def agg_minmaxrangemv(col: Column | str) -> Column:
-    a = _dbl_arr(col)
-    return (F.max(F.array_max(a)) - F.min(F.array_min(a))).cast("double")
-
-
-# --- element-level MV aggregations: applied AFTER the executor explodes -----
-
-def agg_distinctcountmv(elem: Column | str) -> Column:
-    """Exact distinct element count; ``elem`` is the exploded element column."""
-    return F.count_distinct(_c(elem))
-
-
-def agg_distinctcounthllmv(elem: Column | str, rsd: float = 0.05) -> Column:
-    return F.approx_count_distinct(_c(elem), rsd)
+def minmaxrangemv_sql(x: str) -> str:
+    a = _dbl_arr(x)
+    return f"CAST(max(array_max({a})) - min(array_min({a})) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -247,35 +251,45 @@ def agg_distinctcounthllmv(elem: Column | str, rsd: float = 0.05) -> Column:
 
 @dataclass(frozen=True)
 class AggSpec:
-    """A resolved aggregation: Column builder + whether it must run over
-    element-level (exploded) rows of its MV input column. ``empty_value``
-    is the result for a group with NO elements (count-likes → 0); None means
-    NULL (percentile of nothing)."""
+    """A resolved aggregation: SQL rendering + whether it must run over
+    element-level (exploded) rows of its MV input column — for those,
+    ``sql`` renders over the exploded ELEMENT. ``empty_value`` is the
+    result for a group with NO elements (count-likes → 0); None means NULL
+    (percentile of nothing). ``pct`` is the fraction of a PERCENTILE<N>
+    family member, ``approx`` whether it is the sketch (est/tdigest) kind
+    — what same-column families merge on."""
 
     name: str
-    builder: Callable[[Column | str], Column]
+    sql: Callable[[str], str]
     needs_elements: bool = False
     empty_value: object = None
+    pct: float | None = None
+    approx: bool = False
+
+    def builder(self, col: str | None) -> Column:
+        """The aggregate over column NAME ``col`` as a Column."""
+        return F.expr(self.sql(col_sql(col) if col is not None else None))
 
 
-_SIMPLE: dict[str, tuple[Callable[[Column | str], Column], bool, object]] = {
-    "count": (agg_count, False, None),
-    "min": (agg_min, False, None),
-    "max": (agg_max, False, None),
-    "sum": (agg_sum, False, None),
-    "avg": (agg_avg, False, None),
-    "minmaxrange": (agg_minmaxrange, False, None),
-    "distinctcount": (agg_distinctcount, False, None),
-    "distinctcounthll": (agg_distinctcounthll, False, None),
-    "fasthll": (agg_distinctcounthll, False, None),  # pre-agg HLL column analog
-    "countmv": (agg_countmv, False, None),
-    "minmv": (agg_minmv, False, None),
-    "maxmv": (agg_maxmv, False, None),
-    "summv": (agg_summv, False, None),
-    "avgmv": (agg_avgmv, False, None),
-    "minmaxrangemv": (agg_minmaxrangemv, False, None),
-    "distinctcountmv": (agg_distinctcountmv, True, 0),
-    "distinctcounthllmv": (agg_distinctcounthllmv, True, 0),
+_SIMPLE: dict[str, tuple[Callable[[str], str], bool, object]] = {
+    "count": (count_sql, False, None),
+    "min": (min_sql, False, None),
+    "max": (max_sql, False, None),
+    "sum": (dsum_sql, False, None),
+    "avg": (davg_sql, False, None),
+    "minmaxrange": (minmaxrange_sql, False, None),
+    "distinctcount": (distinctcount_sql, False, None),
+    "distinctcounthll": (distinctcounthll_sql, False, None),
+    "fasthll": (distinctcounthll_sql, False, None),  # pre-agg HLL column analog
+    "countmv": (countmv_sql, False, None),
+    "minmv": (minmv_sql, False, None),
+    "maxmv": (maxmv_sql, False, None),
+    "summv": (summv_sql, False, None),
+    "avgmv": (avgmv_sql, False, None),
+    "minmaxrangemv": (minmaxrangemv_sql, False, None),
+    # element-level: rendered over the exploded element
+    "distinctcountmv": (distinctcount_sql, True, 0),
+    "distinctcounthllmv": (distinctcounthll_sql, True, 0),
 }
 
 _PERCENTILE_RE = re.compile(
@@ -287,20 +301,14 @@ def resolve(name: str) -> AggSpec:
     to an AggSpec — AggregationFunctionType.java:25-103 analog."""
     key = name.lower()
     if key in _SIMPLE:
-        builder, needs_elements, empty = _SIMPLE[key]
-        return AggSpec(key, builder, needs_elements, empty)
+        sql, needs_elements, empty = _SIMPLE[key]
+        return AggSpec(key, sql, needs_elements, empty)
     m = _PERCENTILE_RE.match(key)
     if m:
-        pct = float(m.group("pct"))
-        kind = m.group("kind")
-        mv = bool(m.group("mv"))
-
-        def builder(col: Column | str) -> Column:
-            if kind is None:
-                return agg_percentile(col, pct)
-            if kind == "tdigest":
-                return agg_percentile_tdigest(col, pct)
-            return agg_percentile_est(col, pct)
-
-        return AggSpec(key, builder, needs_elements=mv)
+        frac = float(m.group("pct")) / 100.0
+        approx = m.group("kind") is not None
+        render = percentile_approx_sql if approx else percentile_sql
+        return AggSpec(key, lambda x: render(x, f"{frac!r}D"),
+                       needs_elements=bool(m.group("mv")), pct=frac,
+                       approx=approx)
     raise KeyError(f"unknown aggregation function: {name!r}")

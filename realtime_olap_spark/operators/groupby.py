@@ -41,18 +41,22 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.operators.aggregation import resolve
+from realtime_olap_spark.operators.aggregation import (
+    DEC, FX, PERCENTILE_APPROX_ACCURACY, fx_term_sql, percentile_approx_sql,
+    percentile_sql, resolve, risk_ok_sql, row_risk_sql)
+from realtime_olap_spark.sqlexpr import col_sql, ident_sql
 
 DEFAULT_TOP_N = 10  # docs/pql_examples.rst:172,224
 
 
 @dataclass(frozen=True)
 class Agg:
-    """One aggregation request: function name (registry key), input column,
-    output alias. ``col`` may be a Column expression (transform arg)."""
+    """One aggregation request: function name (registry key), input column
+    NAME (None for ``count``), output alias. Callers aggregating an
+    expression stage it as a named column first."""
 
     fn: str
-    col: Column | str | None
+    col: str | None
     alias: str
 
 
@@ -75,71 +79,62 @@ def _kcol(k: Key) -> Column:
 #: fixed-point / decimal terms are associative; min/max are order-free).
 _FUSED_MV = {"countmv", "minmv", "maxmv", "summv", "avgmv", "minmaxrangemv"}
 
-import re as _re  # noqa: E402
 
-_PCT_FN = _re.compile(r"^percentile(est|tdigest)?(\d{1,2}|100)(mv)?$")
+def _arg_sql(a: Agg) -> str | None:
+    return col_sql(a.col) if a.col is not None else None
 
 
-def _merged_agg_columns(alist: Sequence["Agg"],
-                        col_for=None) -> tuple[list[Column], list[Column]]:
-    """Aggregate expressions + post-aggregation projection for ``alist``,
-    with same-column PERCENTILE families merged: N exact percentiles over
-    one column become ONE ``percentile(col, array(p…))`` aggregate (one
-    sort/count buffer instead of N — each extra exact-percentile buffer
-    measured ~0.14 s at bench SF), and the approx family (est/tdigest —
-    both ``percentile_approx`` at the same accuracy) merges the same way.
+def merged_agg_sql(alist: Sequence[Agg], arg_sql=_arg_sql
+                   ) -> tuple[list[str], list[str]]:
+    """Aggregate expressions + post-aggregation projection for ``alist``
+    as SQL (``<expr> AS `alias```), with same-column PERCENTILE families
+    merged: N exact percentiles over one column become ONE
+    ``percentile(col, array(p…))`` aggregate (one sort/count buffer
+    instead of N — each extra exact-percentile buffer measured ~0.14 s at
+    bench SF), and the approx family (est/tdigest — both
+    ``percentile_approx`` at the same accuracy) merges the same way.
     Value-identical: the array form evaluates every percentage on the
-    same deterministic buffer a lone call would build. Returns
-    ``(agg_cols, post_projection)``; call sites do
-    ``.agg(*agg_cols).select(*keys, *post_projection)``. ``col_for``
-    overrides the input column (the exploded-element relations pass
-    ``lambda a: "__elem"``)."""
-    from realtime_olap_spark.operators.aggregation import _c  # noqa: PLC0415
-
-    def incol(a: "Agg"):
-        return col_for(a) if col_for is not None else a.col
-
-    groups: dict[tuple[str, str], list[tuple[int, "Agg", float]]] = {}
-    kinds: list = [None] * len(alist)
-    for i, a in enumerate(alist):
-        m = _PCT_FN.match(a.fn.lower())
-        if m:
-            kind = "approx" if m.group(1) else "exact"
-            key = (kind, str(incol(a)))
-            groups.setdefault(key, []).append(
-                (i, a, float(m.group(2)) / 100.0))
-            kinds[i] = key
-    agg_cols: list[Column] = []
-    post: list[Column] = []
-    done: set[tuple[str, str]] = set()
+    same deterministic buffer a lone call would build. ``arg_sql`` renders
+    an Agg's input (the exploded-element relations pass
+    ``lambda a: "__elem"``). The PQL statement and ``group_by_agg`` both
+    aggregate through this."""
+    specs = [resolve(a.fn) for a in alist]
+    groups: dict[tuple[bool, str], list[int]] = {}
+    for i, (a, spec) in enumerate(zip(alist, specs)):
+        if spec.pct is not None:
+            groups.setdefault((spec.approx, arg_sql(a)), []).append(i)
+    aggs: list[str] = []
+    post: list[str] = []
     slot_ids = {key: n for n, key in enumerate(groups)}  # insertion order
-    for i, a in enumerate(alist):
-        key = kinds[i]
+    for i, (a, spec) in enumerate(zip(alist, specs)):
+        alias = ident_sql(a.alias)
+        key = (spec.approx, arg_sql(a)) if spec.pct is not None else None
         if key is None or len(groups[key]) == 1:
-            agg_cols.append(resolve(a.fn).builder(incol(a)).alias(a.alias))
-            post.append(F.col(a.alias))
+            aggs.append(f"{spec.sql(arg_sql(a))} AS {alias}")
+            post.append(alias)
             continue
-        slot = f"__pcts_{key[0]}_{slot_ids[key]}"
-        if key not in done:
-            done.add(key)
-            pcts = F.array(*[F.lit(p) for (_, _, p) in groups[key]])
-            c = _c(incol(a)).cast("double")
-            if key[0] == "exact":
-                agg_cols.append(F.percentile(c, pcts).alias(slot))
-            else:
-                from realtime_olap_spark.operators.aggregation import \
-                    PERCENTILE_APPROX_ACCURACY  # noqa: PLC0415
-                agg_cols.append(
-                    F.percentile_approx(
-                        c, pcts,
-                        F.lit(PERCENTILE_APPROX_ACCURACY)).alias(slot))
-        pos = next(j for j, (idx, _, _) in enumerate(groups[key])
-                   if idx == i)
-        post.append(F.element_at(F.col(slot), pos + 1).alias(a.alias))
-    return agg_cols, post
+        members = groups[key]
+        slot = f"__pcts_{'approx' if key[0] else 'exact'}_{slot_ids[key]}"
+        if members[0] == i:
+            fracs = "array(" + ", ".join(f"{specs[j].pct!r}D"
+                                         for j in members) + ")"
+            agg = (percentile_approx_sql(key[1], fracs,
+                                         PERCENTILE_APPROX_ACCURACY)
+                   if key[0] else percentile_sql(key[1], fracs))
+            aggs.append(f"{agg} AS {slot}")
+        post.append(f"element_at({slot}, {members.index(i) + 1}) AS {alias}")
+    return aggs, post
 
 
-def _fused_scalar_mv(df: DataFrame, elem_col: Column | str,
+def _merged_agg_columns(alist: Sequence[Agg], arg_sql=_arg_sql
+                        ) -> tuple[list[Column], list[Column]]:
+    """:func:`merged_agg_sql` as Columns; call sites do
+    ``.agg(*agg_cols).select(*keys, *post_projection)``."""
+    aggs, post = merged_agg_sql(alist, arg_sql)
+    return [F.expr(x) for x in aggs], [F.expr(x) for x in post]
+
+
+def _fused_scalar_mv(df: DataFrame, elem_col: str,
                      direct: Sequence[Agg], alist: Sequence[Agg]) -> DataFrame:
     """One ``posexplode_outer`` pass computing the direct MV folds AND the
     element-level aggregations together (scalar / no-keys case).
@@ -162,14 +157,7 @@ def _fused_scalar_mv(df: DataFrame, elem_col: Column | str,
       flag; the fx/decimal risk switch is the max of the same per-row
       risk term, carried through the explode unchanged.
     """
-    from realtime_olap_spark.operators.aggregation import (DEC, FX,
-                                                           FX_SAFE_RISK,
-                                                           _FX_CLAMP)
-    arr = F.col(elem_col) if isinstance(elem_col, str) else elem_col
-    row_risk = (F.size(arr).cast("double")
-                * F.array_max(F.transform(arr,
-                                          lambda x: F.abs(x.cast("double")))))
-    has_null = F.exists(arr, lambda x: x.isNull())
+    arr = col_sql(elem_col)
     # Stage the per-row folds BELOW the explode: a single select holding
     # both the generator and these expressions plans as Generate +
     # Project-ABOVE, re-evaluating the whole-array folds once per
@@ -177,42 +165,31 @@ def _fused_scalar_mv(df: DataFrame, elem_col: Column | str,
     # Generate's child projection — once per row (plan-asserted in
     # tests/test_opt_r16.py; A/B at sf0.1: exec 0.48 s → see
     # OPTIMIZATION_r16.md).
-    pre = (df.select(row_risk.alias("__risk"), has_null.alias("__hn"),
-                     arr.alias("__arr"))
+    pre = (df.select(F.expr(f"{row_risk_sql(arr)} AS __risk"),
+                     F.expr(f"exists({arr}, x -> x IS NULL) AS __hn"),
+                     F.expr(f"{arr} AS __arr"))
            .select("__risk", "__hn",
                    F.posexplode_outer("__arr").alias("__pos", "__elem")))
-    eld = F.col("__elem").cast("double")
-    fx_safe = F.when(F.abs(eld) <= F.lit(_FX_CLAMP), eld).otherwise(F.lit(0.0))
-    fx_term = F.floor(fx_safe * F.lit(FX)).cast("decimal(38,0)").cast(DEC)
-    dec_term = F.when(F.col("__hn"), F.lit(None)).otherwise(eld).cast(DEC)
-    risk_ok = (F.coalesce(F.max("__risk"), F.lit(0.0))
-               <= F.lit(FX_SAFE_RISK))
-    fx_sum = F.sum(fx_term).cast("double") / F.lit(float(FX))
-    dec_sum = F.sum(dec_term).cast("double")
-    n_elems = F.count("__pos")
-
-    def build(fn: str) -> Column:
-        if fn == "count":
-            return F.count(
-                F.when(F.coalesce(F.col("__pos"), F.lit(0)) == 0, 1))
-        if fn == "countmv":
-            return n_elems.cast("long")
-        if fn == "minmv":
-            return F.min(eld)
-        if fn == "maxmv":
-            return F.max(eld)
-        if fn == "minmaxrangemv":
-            return (F.max(eld) - F.min(eld)).cast("double")
-        if fn == "summv":
-            return (F.when(risk_ok, fx_sum).otherwise(dec_sum)
-                    .cast("double"))
-        if fn == "avgmv":
-            return (F.when(risk_ok, fx_sum / n_elems)
-                    .otherwise(dec_sum / n_elems).cast("double"))
-        raise KeyError(fn)  # pragma: no cover - guarded by _FUSED_MV
-
-    cols = [build(a.fn.lower()).alias(a.alias) for a in direct]
-    el_aggs, el_post = _merged_agg_columns(alist, col_for=lambda a: "__elem")
+    eld = "CAST(__elem AS DOUBLE)"
+    fx_sum = (f"CAST(sum(CAST({fx_term_sql('__elem')} AS {DEC})) AS DOUBLE)"
+              f" / {float(FX)!r}D")
+    dec_sum = (f"CAST(sum(CAST(CASE WHEN __hn THEN NULL ELSE {eld} END "
+               f"AS {DEC})) AS DOUBLE)")
+    risk_ok = risk_ok_sql("__risk")
+    fused = {
+        "count": "count(CASE WHEN coalesce(__pos, 0) = 0 THEN 1 END)",
+        "countmv": "CAST(count(__pos) AS BIGINT)",
+        "minmv": f"min({eld})",
+        "maxmv": f"max({eld})",
+        "minmaxrangemv": f"CAST(max({eld}) - min({eld}) AS DOUBLE)",
+        "summv": (f"CAST(CASE WHEN {risk_ok} THEN {fx_sum} "
+                  f"ELSE {dec_sum} END AS DOUBLE)"),
+        "avgmv": (f"CAST(CASE WHEN {risk_ok} THEN {fx_sum} / count(__pos) "
+                  f"ELSE {dec_sum} / count(__pos) END AS DOUBLE)"),
+    }
+    cols = [F.expr(f"{fused[a.fn.lower()]} AS {ident_sql(a.alias)}")
+            for a in direct]
+    el_aggs, el_post = _merged_agg_columns(alist, lambda a: "__elem")
     return (pre.agg(*cols, *el_aggs)
             .select(*[a.alias for a in direct], *el_post))
 
@@ -270,11 +247,9 @@ def group_by_agg(df: DataFrame, keys: Sequence[Key], aggs: Sequence[Agg],
     # relation (one explode + one aggregate), not one per function — the
     # explode multiplies rows by array length, so this is the dominant cost
     # at scale.
-    elem_groups: dict[str, tuple[Column, list[Agg]]] = {}
+    elem_groups: dict[str, list[Agg]] = {}
     for a in element:
-        gk = a.col if isinstance(a.col, str) else str(a.col)
-        elem_col = F.col(a.col) if isinstance(a.col, str) else a.col
-        elem_groups.setdefault(gk, (elem_col, []))[1].append(a)
+        elem_groups.setdefault(a.col, []).append(a)
         spec = resolve(a.fn)
         if spec.empty_value is not None:
             elem_zero[a.alias] = F.lit(spec.empty_value)
@@ -287,10 +262,9 @@ def group_by_agg(df: DataFrame, keys: Sequence[Key], aggs: Sequence[Agg],
     # (value-identical: integer/decimal terms are associative; see
     # _fused_scalar_mv) — one scan, one aggregate, no join.
     if (not key_names and element and direct and len(elem_groups) == 1):
-        (gk, (elem_col, alist)), = elem_groups.items()
+        (elem_col, alist), = elem_groups.items()
         if all(a.fn.lower() == "count"
-               or (a.fn.lower() in _FUSED_MV
-                   and (a.col if isinstance(a.col, str) else str(a.col)) == gk)
+               or (a.fn.lower() in _FUSED_MV and a.col == elem_col)
                for a in direct):
             out = _fused_scalar_mv(df, elem_col, direct, alist)
             fill = [F.coalesce(F.col(a.alias), elem_zero[a.alias])
@@ -306,13 +280,12 @@ def group_by_agg(df: DataFrame, keys: Sequence[Key], aggs: Sequence[Agg],
         parts.append(
             (df.groupBy(*key_names).agg(*cols) if key_names
              else df.agg(*cols)).select(*key_names, *post))
-    for elem_col, alist in elem_groups.values():
+    for elem_col, alist in elem_groups.items():
         # explode_outer: empty/null arrays yield a NULL element row, so the
         # group survives (count-likes see 0 non-null elements, percentiles
         # see none → NULL) instead of vanishing from the element relation.
         el = df.select(*key_names, F.explode_outer(elem_col).alias("__elem"))
-        el_aggs, el_post = _merged_agg_columns(alist,
-                                               col_for=lambda a: "__elem")
+        el_aggs, el_post = _merged_agg_columns(alist, lambda a: "__elem")
         agged = ((el.groupBy(*key_names) if key_names else el.groupBy())
                  .agg(*el_aggs).select(*key_names, *el_post))
         parts.append(agged)

@@ -26,7 +26,12 @@ determinism. Selection defaults LIMIT 10 (request.thrift:130-131).
 
 This is a hand-written recursive-descent parser (~the size of the
 reference's ANTLR listener) producing a ``PQLQuery`` IR — our
-BrokerRequest — compiled onto the operator layer.
+BrokerRequest. The compiler renders the IR as ONE Spark SQL statement
+over the table's temp view (``catalog.pql_view``) and makes one
+``spark.sql`` call: one py4j round trip and one analysis per query, where
+a Column-API build costs a round trip per operator call. Transforms and
+aggregations render through the same SQL renderings ``group_by_agg``
+parses (``functions/transform.py``, ``operators/aggregation.py``).
 """
 
 from __future__ import annotations
@@ -34,13 +39,15 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from realtime_olap_spark.catalog import Catalog
-from realtime_olap_spark.functions.transform import resolve_transform
-from realtime_olap_spark.operators import aggregation as A
-from realtime_olap_spark.operators.groupby import Agg, Key, group_by_agg, having, top_n
+from realtime_olap_spark.catalog import Catalog, pql_view
+from realtime_olap_spark.functions.transform import (LITERAL_TAIL,
+                                                     resolve_transform)
+from realtime_olap_spark.operators.aggregation import resolve as resolve_agg
+from realtime_olap_spark.operators.groupby import Agg, merged_agg_sql
+from realtime_olap_spark.sqlexpr import col_sql, ident_sql, lit_sql
 
 DEFAULT_TOP = 10
 DEFAULT_LIMIT = 10
@@ -120,7 +127,7 @@ class PQLQuery:
 def _is_agg(expr) -> bool:
     if isinstance(expr, Func):
         try:
-            A.resolve(expr.name)
+            resolve_agg(expr.name)
             return True
         except KeyError:
             return False
@@ -362,7 +369,7 @@ def parse_pql(text: str) -> PQLQuery:
 
 
 # ---------------------------------------------------------------------------
-# Compiler: PQLQuery → DataFrame plan
+# Compiler: PQLQuery → one SQL statement
 # ---------------------------------------------------------------------------
 
 def _name_of(expr) -> str:
@@ -375,98 +382,169 @@ def _name_of(expr) -> str:
     raise ValueError(f"cannot name {expr!r}")
 
 
-def _col(expr, agg_aliases: dict | None = None) -> Column:
-    """Compile a scalar expression tree (FUNCTION | IDENTIFIER | LITERAL)."""
+def _sql(expr, having: bool = False) -> str:
+    """Render a scalar expression tree (FUNCTION | IDENTIFIER | LITERAL)
+    as SQL. In HAVING position (``having=True``) an aggregation call
+    refers to its output column."""
     if isinstance(expr, Ident):
-        if agg_aliases and expr.name in agg_aliases:
-            return F.col(agg_aliases[expr.name])
-        return F.col(expr.name)
+        return col_sql(expr.name)
     if isinstance(expr, Lit):
-        return F.lit(expr.value)
+        return lit_sql(expr.value)
     if isinstance(expr, Func):
-        if agg_aliases is not None and _is_agg(expr):
-            # HAVING position: aggregate call refers to its output column.
-            return F.col(_name_of(expr))
+        if having and _is_agg(expr):
+            return ident_sql(_name_of(expr))
         fn = resolve_transform(expr.name)
-        if expr.name in ("timeconvert", "datetimeconvert"):
-            head = _col(expr.args[0])
-            rest = [a.value for a in expr.args[1:]]
-            return fn(head, *rest)
-        if expr.name == "valuein":
-            head = _col(expr.args[0])
-            return fn(head, *[a.value for a in expr.args[1:]])
-        return fn(*[_col(a) for a in expr.args])
+        if expr.name in LITERAL_TAIL:
+            return fn(_sql(expr.args[0], having),
+                      *[a.value for a in expr.args[1:]])
+        return fn(*[_sql(a, having) for a in expr.args])
     raise ValueError(f"cannot compile {expr!r}")
 
 
-def _pred(expr, agg_aliases: dict | None = None) -> Column:
+def _pred_sql(expr, having: bool = False) -> str:
     if isinstance(expr, BoolOp):
-        cols = [_pred(p, agg_aliases) for p in expr.operands]
-        out = cols[0]
-        for c in cols[1:]:
-            out = (out & c) if expr.op == "AND" else (out | c)
-        return out
+        return "(" + f" {expr.op} ".join(
+            _pred_sql(p, having) for p in expr.operands) + ")"
     if isinstance(expr, Cmp):
-        l, r = _col(expr.left, agg_aliases), _col(expr.right, agg_aliases)
-        return {"=": l == r, "<>": l != r, "<": l < r,
-                "<=": l <= r, ">": l > r, ">=": l >= r}[expr.op]
+        return f"({_sql(expr.left, having)} {expr.op} {_sql(expr.right, having)})"
     if isinstance(expr, Between):
-        return _col(expr.expr, agg_aliases).between(
-            _col(expr.low, agg_aliases), _col(expr.high, agg_aliases))
+        e = _sql(expr.expr, having)
+        return (f"({e} >= {_sql(expr.low, having)} "
+                f"AND {e} <= {_sql(expr.high, having)})")
     if isinstance(expr, In):
-        c = _col(expr.expr, agg_aliases).isin(list(expr.values))
-        return ~c if expr.negated else c
+        vals = ", ".join(lit_sql(v) for v in expr.values)
+        return (f"({_sql(expr.expr, having)} "
+                f"{'NOT IN' if expr.negated else 'IN'} ({vals}))")
     if isinstance(expr, RegexpLike):
-        return _col(expr.expr, agg_aliases).rlike(expr.pattern)
+        return f"({_sql(expr.expr, having)} RLIKE {lit_sql(expr.pattern)})"
     raise ValueError(f"cannot compile predicate {expr!r}")
+
+
+def _aggregate_sql(q: PQLQuery, view: str) -> tuple[str, list[str], list[str]]:
+    """The aggregation of ``q`` over ``view`` as one SELECT — keys, then the
+    aggregation functions in request order, HAVING applied, untrimmed —
+    plus the key and function output names.
+
+    Direct aggregations run inline, same-column percentile families
+    merged (``merged_agg_sql``, shared with ``group_by_agg``).
+    Element-level MV aggregations (``needs_elements``) take
+    ``group_by_agg``'s shape: one filtered base relation, one
+    explode_outer + aggregate per input column, LEFT joined back on the
+    keys null-safely (a cross join without keys)."""
+    where = f" WHERE {_pred_sql(q.where)}" if q.where is not None else ""
+    keys = [(_sql(g), _name_of(g)) for g in q.group_by]
+    key_names = [n for _, n in keys]
+    aggs, args = [], {}
+    for expr, _ in q.select:
+        if _is_agg(expr):
+            alias = _name_of(expr)
+            aggs.append(Agg(expr.name, None, alias))
+            args[alias] = (None if expr.args in ((), (Ident("*"),))
+                           else _sql(expr.args[0]))
+    element = [a for a in aggs if resolve_agg(a.fn).needs_elements]
+    direct = [a for a in aggs if a not in element]
+    knames = [ident_sql(n) for n in key_names]
+    group_by = f" GROUP BY {', '.join(knames)}" if keys else ""
+
+    def grouped(head: list[str], alist: list[Agg], arg_sql, src: str) -> str:
+        sel, post = merged_agg_sql(alist, arg_sql)
+        if not sel:  # keep group presence when every agg is element-level
+            sel, post = ["count(1) AS __cnt"], ["__cnt"]
+        body = f"SELECT {', '.join(head + sel)} FROM {src}{group_by}"
+        if len(sel) == len(post):  # no percentile family merged
+            return body
+        return f"SELECT {', '.join(knames + post)} FROM ({body})"
+
+    if not element:
+        if keys:
+            group_by = " GROUP BY " + ", ".join(e for e, _ in keys)
+        body = grouped([f"{e} AS {ident_sql(n)}" for e, n in keys], direct,
+                       lambda a: args[a.alias], f"{view}{where}")
+    else:
+        d_arg = {a.alias: f"__d{i}" for i, a in enumerate(direct)
+                 if args[a.alias]}
+        ecols = list(dict.fromkeys(args[a.alias] for a in element))
+        base = ([f"{e} AS {ident_sql(n)}" for e, n in keys]
+                + [f"{args[al]} AS {c}" for al, c in d_arg.items()]
+                + [f"{e} AS __e{j}" for j, e in enumerate(ecols)])
+        direct_sql = grouped(knames, direct, lambda a: d_arg.get(a.alias),
+                             "__b")
+        ctes = [f"__b AS (SELECT {', '.join(base)} FROM {view}{where})",
+                f"__d AS ({direct_sql})"]
+        joins = ""
+        for j, e in enumerate(ecols):
+            exploded = ", ".join(knames + [f"explode_outer(__e{j}) AS __elem"])
+            el_sql = grouped(knames, [a for a in element if args[a.alias] == e],
+                             lambda a: "__elem",
+                             f"(SELECT {exploded} FROM __b)")
+            ctes.append(f"__e{j} AS ({el_sql})")
+            on = " AND ".join(f"__d.{k} <=> __e{j}.{k}" for k in knames)
+            joins += (f" LEFT JOIN __e{j} ON {on}" if keys
+                      else f" CROSS JOIN __e{j}")
+
+        def out(a: Agg) -> str:
+            empty = resolve_agg(a.fn).empty_value
+            if a in element and empty is not None:
+                return (f"coalesce({ident_sql(a.alias)}, {lit_sql(empty)})"
+                        f" AS {ident_sql(a.alias)}")
+            return ident_sql(a.alias)
+
+        cols = [f"__d.{k}" for k in knames] + [out(a) for a in aggs]
+        body = (f"WITH {', '.join(ctes)} SELECT {', '.join(cols)}"
+                f" FROM __d{joins}")
+    if q.having_ is not None:
+        body = (f"SELECT * FROM ({body}) "
+                f"WHERE {_pred_sql(q.having_, having=True)}")
+    return body, key_names, [a.alias for a in aggs]
+
+
+def _trimmed(src: str, fn: str, key_names: list[str], n: int) -> str:
+    """TOP-n of ``src`` by ``fn`` desc with the deterministic key
+    tie-break — ``top_n``'s ordering, planned as TakeOrderedAndProject."""
+    order = ", ".join([f"{ident_sql(fn)} DESC NULLS LAST"]
+                      + [f"{ident_sql(k)} ASC NULLS FIRST" for k in key_names])
+    return f"{src} ORDER BY {order} LIMIT {n}"
+
+
+def pql_sql(q: PQLQuery, view: str, trim: bool = True) -> str:
+    """The one SQL statement ``compile_pql`` runs — see there."""
+    if q.is_aggregation:
+        body, key_names, fns = _aggregate_sql(q, view)
+        if key_names and trim:
+            n = q.top if q.top is not None else DEFAULT_TOP
+            return _trimmed(f"SELECT * FROM ({body})", fns[0], key_names, n)
+        return body
+
+    # Selection query
+    if len(q.select) == 1 and q.select[0][0] == Ident("*"):
+        cols = "*"
+    else:
+        cols = ", ".join(f"{_sql(e)} AS {ident_sql(_name_of(e))}"
+                         for e, _ in q.select)
+    out = f"SELECT {cols} FROM {view}"
+    if q.where is not None:
+        out += f" WHERE {_pred_sql(q.where)}"
+    if q.order_by:
+        out += " ORDER BY " + ", ".join(
+            f"{_sql(e)} {'ASC' if asc else 'DESC'}" for e, asc in q.order_by)
+    offset, n = q.limit if q.limit is not None else (0, DEFAULT_LIMIT)
+    return out + f" LIMIT {n}" + (f" OFFSET {offset}" if offset else "")
 
 
 def compile_pql(q: PQLQuery, df: DataFrame, trim: bool = True) -> DataFrame:
     """BrokerRequest → DataFrame plan (the InstancePlanMaker analog — except
-    Catalyst owns physical planning).
+    Catalyst owns physical planning): the query rendered as ONE SQL
+    statement over ``df``'s temp view and parsed by ONE ``spark.sql``
+    call — one py4j round trip and one analysis, where building the same
+    plan through the Column API costs one round trip per operator call.
 
     ``trim=True`` (DataFrame entry point): group-by results are TOP-n by the
     FIRST aggregation function with a deterministic key tie-break — one
     DataFrame can carry only one ordering. ``trim=False`` keeps all groups;
-    the response-shaping path uses it to trim PER FUNCTION like the broker
+    ``grouped_topn_frame`` trims PER FUNCTION like the broker
     (docs/pql_examples.rst:239-258: each aggregation function returns its
     own top-n group list)."""
-    where = _pred(q.where) if q.where is not None else None
-
-    if q.is_aggregation:
-        aggs = []
-        for expr, _ in q.select:
-            if not _is_agg(expr):
-                continue  # group keys echo implicitly
-            arg = None
-            if expr.args and not (len(expr.args) == 1 and expr.args[0] == Ident("*")):
-                arg = _col(expr.args[0])
-            aggs.append(Agg(expr.name, arg, _name_of(expr)))
-        keys = [Key(_col(g), _name_of(g)) for g in q.group_by]
-        out = group_by_agg(df, keys=keys, aggs=aggs, where=where)
-        agg_aliases = {a.alias: a.alias for a in aggs}
-        if q.having_ is not None:
-            out = having(out, _pred(q.having_, agg_aliases))
-        if keys and trim:
-            n = q.top if q.top is not None else DEFAULT_TOP
-            out = top_n(out, aggs[0].alias, n, key_names=[k.alias for k in keys])
-        return out
-
-    # Selection query
-    if len(q.select) == 1 and q.select[0][0] == Ident("*"):
-        cols = df.columns
-    else:
-        cols = [_col(e).alias(_name_of(e)) for e, _ in q.select]
-    if where is not None:
-        df = df.where(where)
-    out = df.select(*cols)
-    if q.order_by:
-        order = [(_col(e).asc() if asc else _col(e).desc()) for e, asc in q.order_by]
-        out = out.orderBy(*order)
-    offset, n = q.limit if q.limit is not None else (0, DEFAULT_LIMIT)
-    if offset:
-        out = out.offset(offset)
-    return out.limit(n)
+    return df.sparkSession.sql(pql_sql(q, pql_view(df), trim))
 
 
 def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
@@ -500,13 +578,16 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
     files, scan_width = [], []
     seen: set[int] = set()  # plan-node ids — count reused subtrees once
 
-    def metric(node, name):
-        it = node.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() == name:
-                return kv._2().value()
-        return None
+    maps: dict[int, object] = {}  # plan-node id → its metrics map
+
+    def metric(node, name, nid=None):
+        # one metrics() fetch per node and one keyed lookup per metric
+        # (iterating the map cost ~3 round trips per entry)
+        nid = node.id() if nid is None else nid
+        if nid not in maps:
+            maps[nid] = node.metrics()
+        got = maps[nid].get(name)
+        return got.get().value() if got.isDefined() else None
 
     def descendant_rows(node):
         """numOutputRows of the nearest descendant that tracks it (the
@@ -529,10 +610,10 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
         seen.add(nid)
         name = node.nodeName()
         if name.startswith("Scan "):
-            v = metric(node, "numOutputRows")
+            v = metric(node, "numOutputRows", nid)
             if v is not None:
                 totals.append(v)
-            nf = metric(node, "numFiles")
+            nf = metric(node, "numFiles", nid)
             if nf is not None:
                 files.append(nf)
             try:
@@ -540,7 +621,7 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
             except Exception:
                 pass
         elif name == "Filter":
-            v = metric(node, "numOutputRows")
+            v = metric(node, "numOutputRows", nid)
             if v is not None:
                 filtered.append(v)
             inp = descendant_rows(node)
@@ -609,29 +690,28 @@ def exact_segments_matched(src: DataFrame, where=None) -> int:
 
 
 def grouped_topn_frame(q: PQLQuery, src: DataFrame):
-    """The bounded per-function trim plan for a grouped aggregation: one
-    TakeOrderedAndProject branch per aggregation function over the SHARED
-    grouped aggregate, unioned with a ``__fn`` marker — at most
-    top × n_functions rows ever reach the driver (the reference's
-    trim-at-server, AggregationGroupByTrimmingService.java:58-62).
-    Catalyst/AQE reuses the aggregate exchange across branches.
+    """The bounded per-function trim plan for a grouped aggregation, as
+    ONE statement: ``WITH g AS (<aggregate>)`` and one ``UNION ALL``
+    branch per aggregation function — TakeOrderedAndProject over g by
+    that function, with a ``__fn`` marker — so at most top × n_functions
+    rows ever reach the driver (the reference's trim-at-server,
+    AggregationGroupByTrimmingService.java:58-62). The branches share g's
+    plan, so the scan, partial aggregate and shuffle run once: every
+    branch after the first reads a ReusedExchange (plan-asserted in
+    tests/test_pql.py).
 
     Returns (frame, key_cols, fn_cols, n)."""
-    grouped = compile_pql(q, src, trim=False)
-    cols = grouped.columns
-    key_cols = [c for c in cols if c in {_name_of(g) for g in q.group_by}]
-    fn_cols = [c for c in cols if c not in key_cols]
+    body, key_cols, fn_cols = _aggregate_sql(q, pql_view(src))
     n = q.top if q.top is not None else DEFAULT_TOP
     # reference semantics: EACH function returns its own top-n groups ordered
     # by that function's value desc (docs/pql_examples.rst:239-258;
     # BrokerReduceService trims per AggregationInfo).
-    branches = [
-        top_n(grouped, c, n, key_names=key_cols).withColumn("__fn", F.lit(c))
-        for c in fn_cols]
-    u = branches[0]
-    for b in branches[1:]:
-        u = u.unionByName(b)
-    return u, key_cols, fn_cols, n
+    branches = " UNION ALL ".join(
+        "(" + _trimmed(f"SELECT *, {lit_sql(c)} AS __fn FROM g", c,
+                       key_cols, n) + ")"
+        for c in fn_cols)
+    frame = src.sparkSession.sql(f"WITH g AS ({body}) {branches}")
+    return frame, key_cols, fn_cols, n
 
 
 class QueryTimeout(Exception):
@@ -708,7 +788,8 @@ class PQLEngine:
             # the default keeps the zero-cost bound from plan_scan_stats.
             if exact_segments:
                 stats["numSegmentsMatched"] = exact_segments_matched(
-                    src, _pred(q.where) if q.where is not None else None)
+                    src, F.expr(_pred_sql(q.where))
+                    if q.where is not None else None)
             return stats
 
         if q.is_aggregation and q.group_by:

@@ -58,7 +58,19 @@ class PQLServer:
                 if self.path.rstrip("/") != "/query":
                     self._reply(404, {"error": f"unknown path {self.path}"})
                     return
-                length = int(self.headers.get("Content-Length", 0))
+                try:
+                    length = int(self.headers.get("Content-Length", 0))
+                    if length < 0:
+                        raise ValueError(length)
+                except ValueError:
+                    # in-band like every other bad request; the body
+                    # cannot be delimited, so the connection closes
+                    self.close_connection = True
+                    self._reply(400, {"exceptions": [
+                        {"errorCode": 100,  # JSON_PARSING_ERROR analog
+                         "message": "invalid Content-Length header: "
+                                    f"{self.headers.get('Content-Length')!r}"}]})
+                    return
                 body = self.rfile.read(length).decode("utf-8", "replace")
                 tmo = default_timeout
                 try:

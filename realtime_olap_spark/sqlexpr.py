@@ -71,11 +71,38 @@ def col_sql(name: str) -> str:
                     for p in name.split("."))
 
 
+def ident_sql(name: str) -> str:
+    """``name`` as ONE quoted identifier — an output alias, where a dot is
+    part of the name (``AS `sum_a.b```), not a struct-field path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _sql_str(s: str) -> str:
     """Single-quoted SQL string literal whose value is exactly ``s``:
     backslashes escaped first (they are the parser's escape character),
     then embedded quotes doubled — safe for any marker content."""
     return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def lit_sql(v) -> str:
+    """SQL literal with ``F.lit``'s type for a python scalar: ``str`` →
+    STRING, ``int`` → INT or BIGINT by magnitude, ``float`` → DOUBLE (the
+    ``D`` suffix; a bare ``1.5`` would parse as DECIMAL), ``bool`` →
+    BOOLEAN. Negative numbers are parenthesized so a rendering like
+    ``a - (-1)`` never lexes as a ``--`` comment."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, str):
+        if "\\" in v or "'" in v:
+            _check_parser_conf()
+        return _sql_str(v)
+    if isinstance(v, int):
+        return f"({v})" if v < 0 else str(v)
+    if isinstance(v, float):
+        if v != v or v in (float("inf"), float("-inf")):
+            return f"CAST('{v!r}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
+        return f"({v!r}D)" if v < 0 else f"{v!r}D"
+    raise TypeError(f"no SQL literal for {type(v).__name__}: {v!r}")
 
 
 def words_sql(text: str) -> str:

@@ -47,14 +47,16 @@ def flagship_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans partial+final HashAggregate over the key shuffle, same
     shape as CombineGroupByOperator → BrokerReduceService.
     """
-    li = Catalog(spark, sf_dir).table("lineitem")
+    li = (Catalog(spark, sf_dir).table("lineitem")
+          .withColumn("__disc_price",
+                      F.col("l_extendedprice") * (1 - F.col("l_discount"))))
     out = group_by_agg(
         li,
         keys=[Key("l_returnflag", "l_returnflag"), Key("l_linestatus", "l_linestatus")],
         aggs=[
             Agg("sum", "l_quantity", "sum_qty"),
             Agg("sum", "l_extendedprice", "sum_base_price"),
-            Agg("sum", F.col("l_extendedprice") * (1 - F.col("l_discount")), "sum_disc_price"),
+            Agg("sum", "__disc_price", "sum_disc_price"),
             Agg("avg", "l_quantity", "avg_qty"),
             Agg("avg", "l_extendedprice", "avg_price"),
             Agg("count", None, "count_order"),

@@ -123,9 +123,10 @@ def mv_distinctcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCTCOUNTMV — exact distinct over the union of elements
     (DistinctCountMVAggregationFunction.java); element-level path of the
     group-by executor (explode once, aggregate)."""
-    p = Catalog(spark, sf_dir).table("part")
+    p = (Catalog(spark, sf_dir).table("part")
+         .withColumn("__words", F.split("p_name", " ")))
     return group_by_agg(p, keys=[], aggs=[
-        Agg("distinctcountmv", F.split("p_name", " "), "dc_words"),
+        Agg("distinctcountmv", "__words", "dc_words"),
     ])
 
 
@@ -165,8 +166,9 @@ def mv_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERCENTILETDIGESTMV (…TDigestMV….java) — element-level sketch
     aggregation over exploded MV columns; estimates, so rows-only."""
     c = Catalog(spark, sf_dir)
-    words = group_by_agg(c.table("part"), keys=[], aggs=[
-        Agg("distinctcounthllmv", F.split("p_name", " "), "hll_words"),
+    part = c.table("part").withColumn("__words", F.split("p_name", " "))
+    words = group_by_agg(part, keys=[], aggs=[
+        Agg("distinctcounthllmv", "__words", "hll_words"),
     ])
     pcts = group_by_agg(c.table("embeddings"), keys=[], aggs=[
         Agg("percentileest50mv", "embedding", "est_p50"),

@@ -7,9 +7,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realtime_olap_spark.catalog import Catalog
-from realtime_olap_spark.functions import (add, datetimeconvert, div, mult, sub,
-                                           timeconvert, valuein)
-from realtime_olap_spark.operators.groupby import Agg, Key, group_by_agg, top_n
+from realtime_olap_spark.functions import transform as T
+from realtime_olap_spark.operators.aggregation import dsum_sql
+from realtime_olap_spark.operators.groupby import Agg, Key, group_by_agg
+from realtime_olap_spark.sqlexpr import col_sql
 from realtime_olap_spark.suite.registry import query
 from realtime_olap_spark.suite.sqlgen import OSUM
 
@@ -25,12 +26,14 @@ def tf_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AdditionTransformFunction.java:32 … DivisionTransformFunction.java:32);
     infix arithmetic compiles to the same functions (PQL2.g4)."""
     li = Catalog(spark, sf_dir).table("lineitem")
-    combo = sub(add("l_quantity", mult("l_tax", F.lit(100))),
-                div("l_extendedprice", F.lit(50)))
-    pred = mult("l_extendedprice", sub(F.lit(1), "l_discount")) > 50000
-    return li.where(pred).agg(
+    qty, tax, price, disc = map(col_sql, ("l_quantity", "l_tax",
+                                          "l_extendedprice", "l_discount"))
+    combo = T.sub_sql(T.add_sql(qty, T.mult_sql(tax, "100")),
+                      T.div_sql(price, "50"))
+    pred = f"{T.mult_sql(price, T.sub_sql('1', disc))} > 50000"
+    return li.where(F.expr(pred)).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(combo.cast("decimal(38,10)")).cast("double").alias("combo"))
+        F.expr(dsum_sql(combo)).alias("combo"))
 
 
 @query("tf_time_all", f"""
@@ -55,15 +58,17 @@ def tf_time_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour/day keys are functionally dependent, so every conversion is
     value-checked across the whole time range in one query."""
     ev = Catalog(spark, sf_dir).table("events")
-    ms = F.unix_millis("ts")
-    hour = timeconvert(ms, "MILLISECONDS", "HOURS")
-    bucket = datetimeconvert(ms, "1:MILLISECONDS:EPOCH",
-                             "1:MILLISECONDS:EPOCH", "15:MINUTES")
-    day = datetimeconvert(ms, "1:MILLISECONDS:EPOCH",
-                          "1:DAYS:SIMPLE_DATE_FORMAT:yyyy-MM-dd", "1:DAYS")
+    ms = f"unix_millis({col_sql('ts')})"
+    hour = T.timeconvert_sql(ms, "MILLISECONDS", "HOURS")
+    bucket = T.datetimeconvert_sql(ms, "1:MILLISECONDS:EPOCH",
+                                   "1:MILLISECONDS:EPOCH", "15:MINUTES")
+    day = T.datetimeconvert_sql(ms, "1:MILLISECONDS:EPOCH",
+                                "1:DAYS:SIMPLE_DATE_FORMAT:yyyy-MM-dd",
+                                "1:DAYS")
     return group_by_agg(ev,
-                        keys=[Key(bucket, "bucket_ms"), Key(hour, "ts_hour"),
-                              Key(day, "day")],
+                        keys=[Key(F.expr(bucket), "bucket_ms"),
+                              Key(F.expr(hour), "ts_hour"),
+                              Key(F.expr(day), "day")],
                         aggs=[Agg("count", None, "cnt"),
                               Agg("sum", "value", "total")])
 
@@ -82,7 +87,8 @@ def tf_valuein(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the reference's MV group-by contract (a row lands in each element's
     group, AggregationFunction.java:87-93)."""
     p = Catalog(spark, sf_dir).table("part")
-    words = valuein(F.split("p_name", " "), "red", "blue", "small")
-    g = group_by_agg(p, keys=[Key(words, "word", mv=True)],
+    words = T.valuein_sql(f"split({col_sql('p_name')}, ' ')",
+                          "red", "blue", "small")
+    g = group_by_agg(p, keys=[Key(F.expr(words), "word", mv=True)],
                      aggs=[Agg("count", None, "cnt")])
     return g.orderBy(F.col("cnt").desc(), F.col("word").asc())

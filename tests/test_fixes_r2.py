@@ -86,11 +86,12 @@ def test_summv_small_magnitude_fx_path(spark):
 def test_datetimeconvert_nanos_to_millis(spark):
     ns = 1_700_000_000_123_456_789
     out = spark.range(1).select(
-        datetimeconvert(F.lit(ns), "1:NANOSECONDS:EPOCH",
+        F.lit(ns).alias("v_ns"), F.lit(ns // 1000).alias("v_us")).select(
+        datetimeconvert("v_ns", "1:NANOSECONDS:EPOCH",
                         "1:MILLISECONDS:EPOCH", "1:MILLISECONDS").alias("ms"),
-        datetimeconvert(F.lit(ns), "1:NANOSECONDS:EPOCH",
+        datetimeconvert("v_ns", "1:NANOSECONDS:EPOCH",
                         "1:HOURS:EPOCH", "1:HOURS").alias("h"),
-        datetimeconvert(F.lit(ns // 1000), "1:MICROSECONDS:EPOCH",
+        datetimeconvert("v_us", "1:MICROSECONDS:EPOCH",
                         "1:SECONDS:EPOCH", "1:SECONDS").alias("s"),
     ).collect()[0]
     assert out["ms"] == ns // 1_000_000
@@ -100,8 +101,8 @@ def test_datetimeconvert_nanos_to_millis(spark):
 
 def test_datetimeconvert_millis_unchanged(spark):
     ms = 1_700_000_000_123
-    out = spark.range(1).select(
-        datetimeconvert(F.lit(ms), "1:MILLISECONDS:EPOCH",
+    out = spark.range(1).select(F.lit(ms).alias("v")).select(
+        datetimeconvert("v", "1:MILLISECONDS:EPOCH",
                         "1:MILLISECONDS:EPOCH", "15:MINUTES").alias("b")
     ).collect()[0]
     assert out["b"] == (ms // 900_000) * 900_000
@@ -345,7 +346,7 @@ def test_timeconvert_property_vs_integer_arithmetic(spark):
     collect()
     df = spark.createDataFrame(cases, "v long, fu string, tu string, want long")
     exprs = [F.when((F.col("fu") == fu) & (F.col("tu") == tu),
-                    timeconvert(F.col("v"), fu, tu))
+                    timeconvert("v", fu, tu))
              for fu in UNITS for tu in UNITS]
     got = df.withColumn("got", F.coalesce(*exprs))
     assert got.where(F.col("got") != F.col("want")).count() == 0

@@ -39,7 +39,7 @@ def test_percentile_accuracy_single_constant():
         assert default == PERCENTILE_APPROX_ACCURACY, fn.__name__
     # the merged path references the constant, not a literal
     import realtime_olap_spark.operators.groupby as G
-    src = inspect.getsource(G._merged_agg_columns)
+    src = inspect.getsource(G.merged_agg_sql)
     assert "PERCENTILE_APPROX_ACCURACY" in src
     assert "10000" not in src
 

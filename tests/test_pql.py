@@ -229,3 +229,89 @@ def test_exact_segments_matched_opt_in(spark, tmp_path):
     out_all = eng.execute("SELECT count(*) FROM lineitem",
                           exact_segments=True)
     assert out_all["numSegmentsMatched"] == n_files
+
+
+def test_grouped_stats_count_the_scan_once(spark):
+    """The per-function trim branches share one scan, so the Pinot stats of
+    a grouped query do not grow with its number of aggregation functions:
+    the 1-, 2- and 4-function forms report the table's own row and file
+    counts."""
+    eng = PQLEngine(spark, SF_DIR)
+    src = eng.catalog.table("documents")
+    n_rows, n_files = src.count(), len(src.inputFiles())
+    for fns in ("count(*)", "count(*), sum(n_chars)",
+                "count(*), sum(n_chars), max(n_chars), min(doc_id)"):
+        out = eng.execute(f"SELECT lang, {fns} FROM documents GROUP BY lang")
+        assert len(out["aggregationResults"]) == fns.count("(")
+        assert out["totalDocs"] == n_rows, fns
+        assert out["numDocsScanned"] == n_rows, fns
+        assert out["numSegmentsQueried"] == n_files, fns
+
+
+def test_grouped_trim_reuses_one_scan(spark):
+    """The executed plan of a 3-function grouped query scans once: the
+    first trim branch runs the scan, partial aggregate and shuffle, the
+    other two read a ReusedExchange."""
+    from realtime_olap_spark.catalog import Catalog
+    from realtime_olap_spark.plans.pql import grouped_topn_frame
+
+    q = parse_pql("SELECT event_type, count(*), sum(value), max(value) "
+                  "FROM events GROUP BY event_type")
+    u, _, fn_cols, _ = grouped_topn_frame(q, Catalog(spark, SF_DIR)
+                                          .table("events"))
+    u.collect()
+    plan = u._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert len(fn_cols) == 3
+    assert final.count("FileScan") == 1
+    assert final.count("ReusedExchange") == 2
+
+
+def test_compile_is_one_sql_call(spark, monkeypatch):
+    """Compiling a PQL query makes exactly one ``spark.sql`` call and no
+    DataFrame transformation — selection, scalar, grouped (first-function
+    trim), HAVING, element-level MV and the per-function trim frame."""
+    from pyspark.sql import SparkSession
+
+    from realtime_olap_spark.catalog import Catalog
+    from realtime_olap_spark.plans.pql import compile_pql, grouped_topn_frame
+
+    cat = Catalog(spark, SF_DIR)
+    queries = [
+        "SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderstatus = 'O'"
+        " ORDER BY o_totalprice DESC, o_orderkey LIMIT 2, 5",
+        "SELECT count(*), percentile50(l_quantity), percentile90(l_quantity)"
+        " FROM lineitem WHERE l_quantity BETWEEN 5 AND 45",
+        "SELECT l_quantity / 10, count(*), sum(l_extendedprice * l_discount)"
+        " FROM lineitem GROUP BY l_quantity / 10 HAVING count_star > 10 TOP 3",
+        "SELECT label, countmv(embedding), percentile50mv(embedding)"
+        " FROM embeddings GROUP BY label",
+    ]
+    srcs = [cat.table(parse_pql(p).table) for p in queries]
+    for p, src in zip(queries, srcs):  # the temp view registers once
+        compile_pql(parse_pql(p), src)
+    calls = {"sql": 0, "df": 0}
+    real_sql = SparkSession.sql
+
+    def counting_sql(self, *a, **k):
+        calls["sql"] += 1
+        return real_sql(self, *a, **k)
+
+    monkeypatch.setattr(SparkSession, "sql", counting_sql)
+    df_cls = type(srcs[0])  # the concrete (classic) DataFrame class
+    for name in {n for c in df_cls.__mro__[:-1] for n in vars(c)}:
+        fn = getattr(df_cls, name)
+        if callable(fn) and not name.startswith("_"):
+            def counted(*a, _fn=fn, **k):
+                calls["df"] += 1
+                return _fn(*a, **k)
+            monkeypatch.setattr(df_cls, name, counted)
+    for p, src in zip(queries, srcs):
+        q = parse_pql(p)
+        calls.update(sql=0, df=0)
+        compile_pql(q, src)
+        assert calls == {"sql": 1, "df": 0}, p
+        if q.group_by:
+            calls.update(sql=0, df=0)
+            grouped_topn_frame(q, src)
+            assert calls == {"sql": 1, "df": 0}, p
