@@ -211,7 +211,45 @@ def _query_module_file(fn) -> str | None:
         return None
 
 
+def _load_avg() -> list[float]:
+    """The host's 1/5/15-minute load averages (other tenants' work shows
+    here: a bench run on a loaded host reads slow)."""
+    return [round(x, 2) for x in os.getloadavg()]
+
+
+def _records(query_runs: dict[str, list[float]], runs: int, sf: float | None,
+             load_avg: dict) -> tuple[dict, dict]:
+    """The summary line (gate-relevant: total + per-query mins) and the
+    detail line (every per-run time and ``load_avg``, the host load at
+    the start and end of the timed schedule)."""
+    timings = {name: min(rs) for name, rs in query_runs.items()}
+    summary = {
+        "metric": "headline_suite_total",
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        # Per-query run counts (r14 ADVICE): a single scalar was inaccurate
+        # for the min-of-5 five. Recorded as default + exceptions map so the
+        # summary line stays inside the recorded 2000-char stdout tail.
+        "runs_per_query_default": runs,
+        "runs_per_query": {n: len(rs) for n, rs in query_runs.items()
+                           if len(rs) != runs},
+        "aggregation": "min",
+        "schedule": "round_robin",
+    }
+    detail = {
+        "metric": "headline_suite_detail",
+        "query_runs": query_runs,
+        "max_spread": round(max(max(r) / max(min(r), 1e-9)
+                                for r in query_runs.values()), 2),
+        "load_avg": load_avg,
+    }
+    return summary, detail
+
+
 def main() -> None:
+    load_start = _load_avg()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     cpus = int(os.environ["SPARK_GRAFT_CPUS"])
@@ -255,37 +293,11 @@ def main() -> None:
     for _ in range(HIGH_VARIANCE_RUNS - RUNS):
         for name in extra:
             timed_run(name)
-    timings = {name: min(rs) for name, rs in query_runs.items()}
-
-    total = round(sum(timings.values()), 4)
-    # The driver records only the LAST ~2000 chars of stdout and parses a
-    # JSON line out of that window (r6's single ~4.8 KB line had its head
-    # truncated -> BENCH_r06.json parsed:null). Emit a compact summary line
-    # (gate-relevant: total + per-query mins) FIRST and again LAST, with
-    # the bulky per-run detail on its own middle line, so the tail window
-    # always ends with a complete parseable summary no matter where the
-    # capture cuts.
-    summary = {
-        "metric": "headline_suite_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        # Per-query run counts (r14 ADVICE): a single scalar was inaccurate
-        # for the min-of-5 five. Recorded as default + exceptions map so the
-        # summary line stays inside the driver's 2000-char tail window.
-        "runs_per_query_default": RUNS,
-        "runs_per_query": {n: len(rs) for n, rs in query_runs.items()
-                           if len(rs) != RUNS},
-        "aggregation": "min",
-        "schedule": "round_robin",
-    }
-    detail = {
-        "metric": "headline_suite_detail",
-        "query_runs": query_runs,
-        "max_spread": round(max(max(r) / max(min(r), 1e-9)
-                                for r in query_runs.values()), 2),
-    }
+    # load at the end of the timed schedule (adjudication re-runs are
+    # isolated extras and come after)
+    summary, detail = _records(query_runs, RUNS, sf,
+                               {"start": load_start, "end": _load_avg()})
+    timings = summary["queries"]
     # Regression check against the previous round's record (>2x per query).
     prev = _load_prev_bench()
     # Noise self-adjudication: EVERY >1.25x drift gets an isolated warmed
@@ -320,6 +332,12 @@ def main() -> None:
                 regressions[name] = {"prev": old_sec, "now": cur}
         detail["regressions_vs_prev"] = regressions
         detail["adjudicated"] = adjudicated
+    # A bench record keeps only the LAST ~2000 chars of stdout and parses a
+    # JSON line out of that window (r6's single ~4.8 KB line had its head
+    # truncated -> BENCH_r06.json parsed:null). Emit the compact summary
+    # line FIRST and again LAST, with the bulky per-run detail on its own
+    # middle line, so the tail window always ends with a complete
+    # parseable summary no matter where the capture cuts.
     line = json.dumps(summary)
     if len(line) > 1800:  # keep the summary inside the 2000-char tail window
         summary["queries"] = {k: round(v, 2) for k, v in timings.items()}

@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -108,8 +109,8 @@ def _register_stage_cleanup(root: str, own_dir: str) -> None:
 def _footer_schema(path: str):
     """The pyarrow schema from one parquet footer at ``path`` (file or
     directory of part files — any one footer decides, since a table is
-    written with one schema), or ``None`` when unreadable. Cheap,
-    driver-side, once per Catalog thanks to the table cache."""
+    written with one schema), or ``None`` when unreadable. Cheap and
+    driver-side; read once per table load."""
     import pyarrow.parquet as pq
 
     probe = path
@@ -127,23 +128,57 @@ def _footer_schema(path: str):
         return None
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Names of TIMESTAMP(NANOS) columns in the parquet at ``path``.
+def _read_schema(footer) -> tuple[StructType | None, list[str]]:
+    """The explicit Spark read schema for a parquet ``footer`` (a pyarrow
+    schema or ``None``) and the names of its TIMESTAMP(NANOS) columns.
 
-    Spark's reader rejects nanos outright ([PARQUET_TYPE_ILLEGAL]), so
-    these columns need the forced-INT64 workaround below. The generator
-    behind /root/testdata has switched a column's unit between rounds
+    Reading with this schema spares Spark the schema-inference jobs a
+    bare ``spark.read.parquet`` runs, and it equals what inference
+    gives: tz-naive timestamps map to ``timestamp_ntz``, as in Spark's
+    parquet inference. Spark's reader rejects nanos outright
+    ([PARQUET_TYPE_ILLEGAL]), so those columns map to their physical
+    INT64 for the epoch-nanos re-derivation in ``Catalog._load``. The
+    test-data generator has switched a column's unit between rounds
     (events.ts: ns in r1-r3, µs in r5) — sniff, never assume. Only
     TIMESTAMP types qualify (pa.types.is_timestamp): time64/duration
     columns also expose ``unit == 'ns'`` but must NOT be forced through
-    the epoch-nanos re-derivation (r5 advisory)."""
-    import pyarrow.types as pat
+    the re-derivation (r5 advisory).
 
-    schema = _footer_schema(path)
-    if schema is None:
-        return []
-    return [f.name for f in schema
-            if pat.is_timestamp(f.type) and f.type.unit == "ns"]
+    The schema is ``None`` (infer, as Spark does) for an unreadable
+    footer and for a type the mapping cannot represent the way Spark
+    reads it: unsigned ints (no mapping), duration and null (Spark reads
+    the physical INT64/INT32) and time (Spark rejects it)."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import LongType, StructField
+
+    if footer is None:
+        return None, []
+    ns_cols = [f.name for f in footer
+               if pat.is_timestamp(f.type) and f.type.unit == "ns"]
+    try:
+        schema = StructType([
+            StructField(f.name, LongType() if f.name in ns_cols
+                        else from_arrow_type(f.type, prefer_timestamp_ntz=True))
+            for f in footer])
+    except TypeError:
+        return None, []
+    return (schema, ns_cols) if _read_as_mapped(schema) else (None, [])
+
+
+def _read_as_mapped(t: DataType) -> bool:
+    """Whether Spark's parquet reader yields ``t`` itself for every leaf
+    (see ``_read_schema``)."""
+    from pyspark.sql.types import (ArrayType, DayTimeIntervalType, MapType,
+                                   NullType, TimeType)
+
+    if isinstance(t, StructType):
+        return all(_read_as_mapped(f.dataType) for f in t.fields)
+    if isinstance(t, ArrayType):
+        return _read_as_mapped(t.elementType)
+    if isinstance(t, MapType):
+        return _read_as_mapped(t.keyType) and _read_as_mapped(t.valueType)
+    return not isinstance(t, (DayTimeIntervalType, NullType, TimeType))
 
 # Sentinel defaults per role, mirroring FieldSpec.java:52-64.
 DIMENSION_DEFAULTS = {
@@ -568,48 +603,51 @@ class Catalog:
             staged = self._should_stage(path)
             # The DataFrame OBJECT is memoized per (session, corpus,
             # stage decision), unmaterialized: every query builds a
-            # fresh Catalog, and re-resolving spark.read.parquet per
-            # build costs ~60 ms (raw single file) to ~130 ms (staged
-            # 32-file directory) of driver-side DataSource resolution —
-            # pure per-query overhead at bench time. The memoized value
-            # stays a FileScan plan (materialize=False), so pushdown /
-            # pruning / ReadSchema semantics are untouched.
+            # fresh Catalog, and even with the footer's explicit schema
+            # each load re-reads the footer and re-resolves the
+            # DataSource on the driver — per-query overhead at bench
+            # time. The memoized value stays a FileScan plan
+            # (materialize=False), so pushdown / pruning / ReadSchema
+            # semantics are untouched.
             self._cache[name] = session_memo(
                 self.spark, self.sf_dir, f"table_{name}_{int(staged)}_" + os.environ.get(STAGE_PARTS_ENV, "d"),
                 lambda: self._load(name, path, staged), materialize=False)
         return self._cache[name]
 
     def _load(self, name: str, path: str, staged: bool) -> DataFrame:
-        # A column's physical timestamp unit depends on the generator
-        # run (events.ts has shipped as both NANOS and MICROS across
-        # rounds). Spark rejects nanos outright, and assuming one
-        # encoding silently corrupts the other — sniff the footer and
-        # route EVERY table through the workaround only when needed.
-        ns_cols = _nanos_timestamp_cols(path)
-        if ns_cols:
-            df = self._read_nanos(path, ns_cols)
-        else:
-            df = self.spark.read.parquet(path)
-            if name == "events":
-                # Natural read; normalize NTZ to the session-zone
-                # timestamp the rest of the engine expects, and keep a
-                # ts_ns epoch-nanos twin so the exposed events schema
-                # is identical under both encodings. Column order is
-                # derived from the sniffed footer (ts slot becomes
-                # ts_ns, ts re-appended) — never a hardcoded list, so
-                # a generator-added column flows through both branches
-                # identically (r5 advisory).
-                footer = _footer_schema(path)
-                names = ([f.name for f in footer] if footer is not None
-                         else df.columns)
-                order = ["ts_ns" if n == "ts" else n for n in names]
-                df = (df.withColumn("ts", F.col("ts").cast("timestamp"))
-                        .withColumn(
-                            "ts_ns",
-                            (F.unix_micros(F.col("ts")) * F.lit(1000)).cast("long"))
-                        .select(*order, "ts"))
+        # One read path, driven by the table's own footer (the segment
+        # metadata): an explicit schema starts no Spark job. A column's
+        # physical timestamp unit depends on the generator run
+        # (events.ts has shipped as both NANOS and MICROS across
+        # rounds), so each TIMESTAMP(NANOS) column is read as its INT64
+        # epoch-nanos, kept as ``<col>_ns``, and a microsecond timestamp
+        # is re-derived under the original name (`div 1000` stays in
+        # long arithmetic — 1.7e18 ns doesn't survive a double; µs
+        # truncation matches what SQL engines expose for ns columns).
+        schema, ns_cols = _read_schema(_footer_schema(path))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(path)
+        for c in ns_cols:
+            df = (df.withColumnRenamed(c, f"{c}_ns")
+                    .withColumn(c, F.expr(f"timestamp_micros({c}_ns div 1000)")))
+        if name == "events" and "ts" not in ns_cols:
+            # µs encoding: normalize NTZ to the session-zone timestamp
+            # the rest of the engine expects, and keep a ts_ns
+            # epoch-nanos twin so the exposed events schema is identical
+            # under both encodings (ts slot becomes ts_ns, ts
+            # re-appended — never a hardcoded column list, so a
+            # generator-added column flows through both; r5 advisory).
+            order = ["ts_ns" if n == "ts" else n for n in df.columns]
+            df = (df.withColumn("ts", F.col("ts").cast("timestamp"))
+                    .withColumn(
+                        "ts_ns",
+                        (F.unix_micros(F.col("ts")) * F.lit(1000)).cast("long"))
+                    .select(*order, "ts"))
         if staged:
-            df = self.spark.read.parquet(self._staged_path(name, df))
+            # the staged segments are written with df's schema: no
+            # second inference either
+            df = self.spark.read.schema(df.schema).parquet(
+                self._staged_path(name, df))
         return df
 
     def _should_stage(self, path: str) -> bool:
@@ -687,33 +725,6 @@ class Catalog:
 
         return session_memo(self.spark, self.sf_dir,
                             f"segments_{name}_p{n}", build)
-
-    def _read_nanos(self, path: str, ns_cols: list[str]) -> DataFrame:
-        """Read a parquet whose ``ns_cols`` are TIMESTAMP(NANOS): force the
-        physical INT64 as epoch-nanos (kept as ``<col>_ns``) and re-derive
-        a microsecond timestamp under the original name (`div 1000` stays
-        in long arithmetic — 1.7e18 ns doesn't survive a double; µs
-        truncation matches what SQL engines expose for ns columns)."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_type
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        probe = path
-        if os.path.isdir(path):
-            parts = sorted(f for f in os.listdir(path)
-                           if f.endswith(".parquet")
-                           and not f.startswith(("_", ".")))
-            probe = os.path.join(path, parts[0])
-        fields = [
-            StructField(f.name,
-                        LongType() if f.name in ns_cols
-                        else from_arrow_type(f.type), True)
-            for f in pq.read_schema(probe)]
-        df = self.spark.read.schema(StructType(fields)).parquet(path)
-        for c in ns_cols:
-            df = (df.withColumnRenamed(c, f"{c}_ns")
-                    .withColumn(c, F.expr(f"timestamp_micros({c}_ns div 1000)")))
-        return df
 
     def config(self, name: str) -> TableConfig:
         return TABLES[name]

@@ -69,8 +69,8 @@ def session_memo(spark: SparkSession, sf_dir: str, name: str,
 
     ``materialize=False`` caches the DataFrame OBJECT without
     localCheckpoint — for plan-level reuse where the value must stay a
-    FileScan (catalog tables: re-resolving ``spark.read.parquet`` per
-    query costs ~60-130 ms of driver-side DataSource resolution, but
+    FileScan (catalog tables: re-reading the footer and re-resolving the
+    DataSource per query is driver-side overhead, but
     checkpointing would replace the scan with an ExistingRDD and lose
     pushdown/pruning)."""
     app_id = spark.sparkContext.applicationId

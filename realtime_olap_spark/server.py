@@ -24,6 +24,9 @@ from pyspark.sql import SparkSession
 
 from realtime_olap_spark.plans.pql import PQLEngine, QueryTimeout
 
+#: Largest request body the server reads (a PQL query is a few KB).
+MAX_BODY_BYTES = 1 << 20
+
 
 class PQLServer:
     """Threaded HTTP server exposing ``POST /query``.
@@ -60,16 +63,18 @@ class PQLServer:
                     return
                 try:
                     length = int(self.headers.get("Content-Length", 0))
-                    if length < 0:
+                    if not 0 <= length <= MAX_BODY_BYTES:
                         raise ValueError(length)
                 except ValueError:
-                    # in-band like every other bad request; the body
-                    # cannot be delimited, so the connection closes
+                    # in-band like every other bad request; the body is
+                    # not read (it cannot be delimited, or is over the
+                    # bound), so the connection closes
                     self.close_connection = True
                     self._reply(400, {"exceptions": [
                         {"errorCode": 100,  # JSON_PARSING_ERROR analog
                          "message": "invalid Content-Length header: "
-                                    f"{self.headers.get('Content-Length')!r}"}]})
+                                    f"{self.headers.get('Content-Length')!r}"
+                                    f" (0..{MAX_BODY_BYTES} bytes)"}]})
                     return
                 body = self.rfile.read(length).decode("utf-8", "replace")
                 tmo = default_timeout

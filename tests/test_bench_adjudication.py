@@ -16,7 +16,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from bench import (_adjudication_candidates_tagged,
                    _bench_record_paths,
                    _changed_files_since_prev_bench,
-                   _query_module_file)
+                   _query_module_file,
+                   _records)
 
 
 def test_trigger_fires_only_for_drifted_untouched_queries():
@@ -124,3 +125,20 @@ def test_high_variance_min_of_five_config():
     assert HIGH_VARIANCE_RUNS == 5
     assert {"mv_all_aggs", "bench_theta_overlap", "bench_funnel",
             "text_doc_features", "agg_topn_having"} == set(HIGH_VARIANCE)
+
+
+def test_detail_line_records_load_avg():
+    """The host load at start and end of a run goes on the detail line
+    only; the summary line keeps exactly its keys."""
+    query_runs = {"q_a": [0.3, 0.2, 0.25], "q_b": [1.0, 1.1, 0.9, 1.2, 1.0]}
+    load = {"start": [1.0, 0.5, 0.25], "end": [2.0, 1.0, 0.5]}
+    summary, detail = _records(query_runs, 3, 0.1, load)
+    assert list(summary) == [
+        "metric", "value", "unit", "queries", "sf",
+        "runs_per_query_default", "runs_per_query", "aggregation",
+        "schedule"]
+    assert summary["value"] == 1.1
+    assert summary["queries"] == {"q_a": 0.2, "q_b": 0.9}
+    assert summary["runs_per_query"] == {"q_b": 5}
+    assert detail["metric"] == "headline_suite_detail"
+    assert detail["load_avg"] == load

@@ -65,10 +65,12 @@ def test_segments_table_location_guard_is_path_exact(spark, tmp_path):
 def test_bench_records_per_query_run_counts():
     import bench
 
-    src = inspect.getsource(bench.main)
+    summary, _ = bench._records(
+        {"q_a": [0.3, 0.2, 0.25], "q_b": [1.0, 1.1, 0.9, 1.2, 1.0]}, 3, 0.1,
+        {})
     # the summary carries a default + an exceptions map keyed by query
-    assert "runs_per_query_default" in src
-    assert "len(rs) != RUNS" in src
+    assert summary["runs_per_query_default"] == 3
+    assert summary["runs_per_query"] == {"q_b": 5}
 
 
 # ---------------------------------------------------------------------------

@@ -67,25 +67,44 @@ def test_post_query_error_in_band(server):
     assert resp["exceptions"] and resp["exceptions"][0]["errorCode"] == 150
 
 
-def test_malformed_content_length_is_in_band_400(server):
-    """A non-numeric Content-Length gets a JSON 400 carrying an
-    ``exceptions`` entry — not a dropped connection — and the server keeps
-    answering well-formed queries afterwards."""
+def _raw_post(server: PQLServer, content_length: bytes) -> dict:
+    """POST ``{}`` with the given Content-Length header over a raw socket;
+    the server must answer a JSON 400 and close the connection."""
     import socket
 
     with socket.create_connection((server.host, server.port),
                                   timeout=30) as sock:
         sock.sendall(b"POST /query HTTP/1.1\r\nHost: x\r\n"
                      b"Content-Type: application/json\r\n"
-                     b"Content-Length: abc\r\n\r\n{}")
+                     b"Content-Length: " + content_length + b"\r\n\r\n{}")
         raw = b""
         while chunk := sock.recv(65536):
             raw += chunk
     head, _, body = raw.partition(b"\r\n\r\n")
     assert head.split(b"\r\n")[0].split()[1] == b"400"
-    resp = json.loads(body)
+    return json.loads(body)
+
+
+def test_malformed_content_length_is_in_band_400(server):
+    """A non-numeric Content-Length gets a JSON 400 carrying an
+    ``exceptions`` entry — not a dropped connection — and the server keeps
+    answering well-formed queries afterwards."""
+    resp = _raw_post(server, b"abc")
     assert resp["exceptions"][0]["errorCode"] == 100
     assert "Content-Length" in resp["exceptions"][0]["message"]
+    status, resp = _post(server, {"pql": "SELECT count(*) FROM orders"})
+    assert status == 200 and resp["exceptions"] == []
+    assert resp["aggregationResults"][0]["value"] > 0
+
+
+def test_oversized_body_is_in_band_400(server):
+    """A declared body over ``MAX_BODY_BYTES`` is refused in-band before
+    any of it is read, and the server keeps answering afterwards."""
+    from realtime_olap_spark.server import MAX_BODY_BYTES
+
+    resp = _raw_post(server, str(MAX_BODY_BYTES + 1).encode())
+    assert resp["exceptions"][0]["errorCode"] == 100
+    assert str(MAX_BODY_BYTES) in resp["exceptions"][0]["message"]
     status, resp = _post(server, {"pql": "SELECT count(*) FROM orders"})
     assert status == 200 and resp["exceptions"] == []
     assert resp["aggregationResults"][0]["value"] > 0
