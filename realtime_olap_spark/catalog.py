@@ -147,15 +147,24 @@ def _read_schema(footer) -> tuple[StructType | None, list[str]]:
     The schema is ``None`` (infer, as Spark does) for an unreadable
     footer and for a type the mapping cannot represent the way Spark
     reads it: unsigned ints (no mapping), duration and null (Spark reads
-    the physical INT64/INT32) and time (Spark rejects it)."""
+    the physical INT64/INT32), time (Spark rejects it) and a nested
+    TIMESTAMP(NANOS) leaf (a list element or struct field: only
+    top-level columns are re-derived, and Spark's inference rejects the
+    table at load, as it rejects any nanos column it reads)."""
     import pyarrow.types as pat
     from pyspark.sql.pandas.types import from_arrow_type
     from pyspark.sql.types import LongType, StructField
 
-    if footer is None:
+    def is_ns(t) -> bool:
+        return pat.is_timestamp(t) and t.unit == "ns"
+
+    def has_ns(t) -> bool:  # a TIMESTAMP(NANOS) leaf below ``t``
+        return any(is_ns(t.field(i).type) or has_ns(t.field(i).type)
+                   for i in range(t.num_fields))
+
+    if footer is None or any(has_ns(f.type) for f in footer):
         return None, []
-    ns_cols = [f.name for f in footer
-               if pat.is_timestamp(f.type) and f.type.unit == "ns"]
+    ns_cols = [f.name for f in footer if is_ns(f.type)]
     try:
         schema = StructType([
             StructField(f.name, LongType() if f.name in ns_cols

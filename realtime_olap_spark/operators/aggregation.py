@@ -8,10 +8,11 @@ HashAggregate is the same hierarchical-merge execution model, so every function
 here is a plain aggregate expression and Catalyst does the merging.
 
 Each function has ONE implementation: its SQL rendering (``<name>_sql``,
-argument = a SQL expression). The PQL compiler embeds the renderings in its
-one statement; ``group_by_agg`` and the Column entry points (``dsum``,
-``davg``, the percentile sketches, :meth:`AggSpec.builder`) parse them with
-``F.expr`` over column NAMES — the same Catalyst tree, one py4j round trip.
+argument = a SQL expression), resolved by name through :func:`resolve`.
+The group-by statement (``groupby.aggregate_sql``, run by the PQL compiler
+and ``group_by_agg``) embeds the renderings; the Column entry points
+``dsum``/``davg`` parse theirs with ``F.expr`` over a column NAME — the
+same Catalyst tree, one py4j round trip.
 
 Determinism note (differential testing): double addition is not associative,
 so a shuffled Spark sum and a sequential DuckDB sum can differ in the last
@@ -33,9 +34,9 @@ elements, etc. Where an element-wise fold expresses the semantics (COUNTMV,
 SUMMV, MINMV, …) we fold the array JVM-side — no explode, so the shuffle
 carries one row per record, not one per element (the 100 TB-safe shape).
 Functions that genuinely need element-level rows (DISTINCTCOUNTMV,
-PERCENTILE<N>MV) are flagged ``needs_elements``; the group-by executor
-(operators/groupby.py) and the PQL statement explode once, aggregate, and
-join back on the (small) group keys.
+PERCENTILE<N>MV) are flagged ``needs_elements``; the group-by statement
+(operators/groupby.py) explodes once, aggregates, and joins back on the
+(small) group keys.
 """
 
 from __future__ import annotations
@@ -191,17 +192,6 @@ def percentile_approx_sql(x: str, frac: str,
     return f"percentile_approx(CAST({x} AS DOUBLE), {frac}, {accuracy})"
 
 
-def agg_percentile_est(col: str, pct: float,
-                       accuracy: int = PERCENTILE_APPROX_ACCURACY) -> Column:
-    return F.expr(percentile_approx_sql(col_sql(col), f"{pct / 100.0!r}D",
-                                        accuracy))
-
-
-def agg_percentile_tdigest(col: str, pct: float,
-                           accuracy: int = PERCENTILE_APPROX_ACCURACY) -> Column:
-    return agg_percentile_est(col, pct, accuracy)
-
-
 # ---------------------------------------------------------------------------
 # Multi-value aggregations — element-wise folds (no explode needed)
 # ---------------------------------------------------------------------------
@@ -265,10 +255,6 @@ class AggSpec:
     empty_value: object = None
     pct: float | None = None
     approx: bool = False
-
-    def builder(self, col: str | None) -> Column:
-        """The aggregate over column NAME ``col`` as a Column."""
-        return F.expr(self.sql(col_sql(col) if col is not None else None))
 
 
 _SIMPLE: dict[str, tuple[Callable[[str], str], bool, object]] = {

@@ -1,15 +1,21 @@
-"""Group-by execution: keys (columns / expressions / MV), HAVING, TOP-N.
+"""Group-by execution: keys (columns / expressions / MV), aggregations,
+TOP-N.
 
 Reference pipeline: AggregationGroupByOperator.java:38 (per-segment hash
 group-by) → CombineGroupByOperator.java:53 (concurrent cross-segment merge)
 → BrokerReduceService.java:383-506 (final merge + HAVING + TOP-N trim).
 Spark's partial/final HashAggregate over a key-hash shuffle is the identical
-execution shape, so ``group_by_agg`` is a thin declarative layer.
+execution shape. ``aggregate_sql`` renders the filter → group-by →
+aggregation step as ONE SQL statement, the only implementation of it: the
+PQL compiler (``plans/pql.py``, which adds HAVING and the TOP-n trim)
+embeds it in its statement, and ``group_by_agg`` — the library entry point
+over a DataFrame, Column keys and a Column filter — runs it with one
+``spark.sql`` call.
 
 Semantics reproduced here:
 
 - **Group-by on expressions** (request.thrift:107-111): keys are arbitrary
-  Columns with aliases.
+  expressions with aliases.
 - **MV group-by** (AggregationFunction.java:87-93): a row lands in EVERY
   group of its multi-value column → explode the MV key once before grouping.
 - **Element-level MV aggregations** (DISTINCTCOUNTMV, PERCENTILE<N>MV):
@@ -20,11 +26,8 @@ Semantics reproduced here:
   (or null) still yields a group row (NULL element → count-likes 0,
   percentiles NULL), matching the reference which returns every group of the
   direct aggregates; the join-back is a null-safe LEFT join from the direct
-  part so no group can vanish.
-- **HAVING** (BrokerReduceService.java:426-460): post-aggregation filter.
-  The reference's "close policy" (intersect groups present for all agg
-  functions) is moot here because our aggregation is exact — every group is
-  present for every function; documented deviation per SURVEY.md §7 risk 4.
+  part so no group can vanish. A scalar query over one MV column fuses its
+  MV folds into the exploded aggregate instead (one scan, no join).
 - **TOP-N** (AggregationGroupByTrimmingService.java:44): the reference
   returns, per aggregation function, the top N groups ordered by that
   aggregate desc (default N=10, approximate beyond guardrails). We compute
@@ -35,6 +38,7 @@ Semantics reproduced here:
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass
 
@@ -44,7 +48,7 @@ from pyspark.sql import functions as F
 from realtime_olap_spark.operators.aggregation import (
     DEC, FX, PERCENTILE_APPROX_ACCURACY, fx_term_sql, percentile_approx_sql,
     percentile_sql, resolve, risk_ok_sql, row_risk_sql)
-from realtime_olap_spark.sqlexpr import col_sql, ident_sql
+from realtime_olap_spark.sqlexpr import col_sql, ident_sql, lit_sql
 
 DEFAULT_TOP_N = 10  # docs/pql_examples.rst:172,224
 
@@ -70,10 +74,6 @@ class Key:
     mv: bool = False
 
 
-def _kcol(k: Key) -> Column:
-    return F.col(k.expr) if isinstance(k.expr, str) else k.expr
-
-
 #: Direct MV aggregations whose array fold can be recomputed element-wise
 #: inside an already-exploded aggregate with the identical value (integer
 #: fixed-point / decimal terms are associative; min/max are order-free).
@@ -96,8 +96,7 @@ def merged_agg_sql(alist: Sequence[Agg], arg_sql=_arg_sql
     Value-identical: the array form evaluates every percentage on the
     same deterministic buffer a lone call would build. ``arg_sql`` renders
     an Agg's input (the exploded-element relations pass
-    ``lambda a: "__elem"``). The PQL statement and ``group_by_agg`` both
-    aggregate through this."""
+    ``lambda a: "__elem"``)."""
     specs = [resolve(a.fn) for a in alist]
     groups: dict[tuple[bool, str], list[int]] = {}
     for i, (a, spec) in enumerate(zip(alist, specs)):
@@ -126,20 +125,114 @@ def merged_agg_sql(alist: Sequence[Agg], arg_sql=_arg_sql
     return aggs, post
 
 
-def _merged_agg_columns(alist: Sequence[Agg], arg_sql=_arg_sql
-                        ) -> tuple[list[Column], list[Column]]:
-    """:func:`merged_agg_sql` as Columns; call sites do
-    ``.agg(*agg_cols).select(*keys, *post_projection)``."""
-    aggs, post = merged_agg_sql(alist, arg_sql)
-    return [F.expr(x) for x in aggs], [F.expr(x) for x in post]
+def aggregate_sql(src: str, keys: Sequence[tuple[str, str]],
+                  aggs: Sequence[Agg], arg_sql=_arg_sql,
+                  where: str | None = None) -> str:
+    """The one filter → group-by → aggregation statement: over relation
+    ``src`` (a view name, optionally aliased) filtered by ``where`` (SQL),
+    grouped on ``keys`` ((SQL, output name) pairs), the aggregations
+    ``aggs`` with their input rendered by ``arg_sql``. Selects the key
+    names, then the aggregations in request order. The PQL statement and
+    ``group_by_agg`` both render through this.
+
+    Direct aggregations run inline, same-column percentile families
+    merged (``merged_agg_sql``). Element-level MV aggregations
+    (``needs_elements``) run over one exploded relation per input column
+    — ``explode_outer``, so a group whose arrays are all empty or NULL
+    still yields its row — aggregated and LEFT joined back on the keys
+    null-safely (a cross join without keys); a group with no elements
+    gets the function's ``empty_value``. Without keys, with one element
+    column and direct aggregations that are all ``count`` or
+    ``_FUSED_MV`` over that column, everything runs in ONE exploded
+    aggregate instead (``_fused_sql``): one scan, no join."""
+    where = f" WHERE {where}" if where is not None else ""
+    args = {a.alias: arg_sql(a) for a in aggs}
+    element = [a for a in aggs if resolve(a.fn).needs_elements]
+    direct = [a for a in aggs if a not in element]
+    knames = [ident_sql(n) for _, n in keys]
+    group_by = f" GROUP BY {', '.join(knames)}" if keys else ""
+
+    def grouped(head: list[str], names: list[str], alist: list[Agg],
+                arg, src: str) -> str:
+        sel, post = merged_agg_sql(alist, arg)
+        body = f"SELECT {', '.join(head + sel)} FROM {src}{group_by}"
+        if len(sel) == len(post):  # no percentile family merged
+            return body
+        return f"SELECT {', '.join(names + post)} FROM ({body})"
+
+    def out(a: Agg) -> str:
+        empty = resolve(a.fn).empty_value
+        if a in element and empty is not None:
+            return (f"coalesce({ident_sql(a.alias)}, {lit_sql(empty)})"
+                    f" AS {ident_sql(a.alias)}")
+        return ident_sql(a.alias)
+
+    if not element:
+        if keys:
+            group_by = " GROUP BY " + ", ".join(e for e, _ in keys)
+        return grouped([f"{e} AS {ident_sql(n)}" for e, n in keys], knames,
+                       direct, arg_sql, f"{src}{where}")
+    ecols = list(dict.fromkeys(args[a.alias] for a in element))
+    if (not keys and direct and len(ecols) == 1
+            and all(resolve(a.fn).name == "count"
+                    or (resolve(a.fn).name in _FUSED_MV
+                        and args[a.alias] == ecols[0]) for a in direct)):
+        inner = grouped(_fused_sql(direct),
+                        [ident_sql(a.alias) for a in direct], element,
+                        lambda a: "__elem", _exploded_sql(ecols[0], src, where))
+        return f"SELECT {', '.join(out(a) for a in aggs)} FROM ({inner})"
+    # one staged column per distinct direct input and per element column
+    d_name = {e: f"__d{i}" for i, e in enumerate(dict.fromkeys(
+        args[a.alias] for a in direct if args[a.alias]))}
+    base = ([f"{e} AS {ident_sql(n)}" for e, n in keys]
+            + [f"{e} AS {c}" for e, c in d_name.items()]
+            + [f"{e} AS __e{j}" for j, e in enumerate(ecols)])
+    ctes = [f"__b AS (SELECT {', '.join(base)} FROM {src}{where})"]
+    parts = []
+    if direct:
+        direct_sql = grouped(knames, knames, direct,
+                             lambda a: d_name.get(args[a.alias]), "__b")
+        ctes.append(f"__d AS ({direct_sql})")
+        parts.append("__d")
+    for j, e in enumerate(ecols):
+        exploded = ", ".join(knames + [f"explode_outer(__e{j}) AS __elem"])
+        el_sql = grouped(knames, knames,
+                         [a for a in element if args[a.alias] == e],
+                         lambda a: "__elem", f"(SELECT {exploded} FROM __b)")
+        ctes.append(f"__e{j} AS ({el_sql})")
+        parts.append(f"__e{j}")
+    # explode_outer keeps every group in every element relation, so the
+    # first relation holds all groups and a LEFT join drops none
+    first, joins = parts[0], ""
+    for p in parts[1:]:
+        on = " AND ".join(f"{first}.{k} <=> {p}.{k}" for k in knames)
+        joins += f" LEFT JOIN {p} ON {on}" if keys else f" CROSS JOIN {p}"
+    cols = [f"{first}.{k}" for k in knames] + [out(a) for a in aggs]
+    return (f"WITH {', '.join(ctes)} SELECT {', '.join(cols)}"
+            f" FROM {first}{joins}")
 
 
-def _fused_scalar_mv(df: DataFrame, elem_col: str,
-                     direct: Sequence[Agg], alist: Sequence[Agg]) -> DataFrame:
-    """One ``posexplode_outer`` pass computing the direct MV folds AND the
-    element-level aggregations together (scalar / no-keys case).
+def _exploded_sql(arr: str, src: str, where: str) -> str:
+    """The fused path's element relation: one ``posexplode_outer`` row per
+    element of ``arr`` (one NULL-element row per empty/NULL array), each
+    carrying its source row's risk term ``__risk`` and has-NULL flag
+    ``__hn``. The per-row folds are staged BELOW the generator: a single
+    select holding both plans as Generate + Project-ABOVE, re-evaluating
+    the whole-array folds once per ELEMENT; the nested select keeps them
+    in the Generate's child projection — once per row (plan-asserted in
+    tests/test_opt_r16.py; plan audit and A/B at sf0.1 in
+    OPTIMIZATION_r16.md)."""
+    pre = (f"SELECT {row_risk_sql(arr)} AS __risk, "
+           f"exists({arr}, x -> x IS NULL) AS __hn, {arr} AS __arr "
+           f"FROM {src}{where}")
+    return (f"(SELECT __risk, __hn, posexplode_outer(__arr) AS "
+            f"(__pos, __elem) FROM ({pre}))")
 
-    Value-identity with the fold path, term by term:
+
+def _fused_sql(direct: Sequence[Agg]) -> list[str]:
+    """The direct aggregations of the fused path, recomputed over the
+    exploded elements of ``_exploded_sql`` with the identical value, term
+    by term:
 
     - ``count`` (rows): every source row yields exactly one exploded row
       with ``__pos`` 0 or NULL (empty/NULL arrays sentinel), so counting
@@ -157,19 +250,6 @@ def _fused_scalar_mv(df: DataFrame, elem_col: str,
       flag; the fx/decimal risk switch is the max of the same per-row
       risk term, carried through the explode unchanged.
     """
-    arr = col_sql(elem_col)
-    # Stage the per-row folds BELOW the explode: a single select holding
-    # both the generator and these expressions plans as Generate +
-    # Project-ABOVE, re-evaluating the whole-array folds once per
-    # ELEMENT (r16 plan audit); the two-step select keeps them in the
-    # Generate's child projection — once per row (plan-asserted in
-    # tests/test_opt_r16.py; A/B at sf0.1: exec 0.48 s → see
-    # OPTIMIZATION_r16.md).
-    pre = (df.select(F.expr(f"{row_risk_sql(arr)} AS __risk"),
-                     F.expr(f"exists({arr}, x -> x IS NULL) AS __hn"),
-                     F.expr(f"{arr} AS __arr"))
-           .select("__risk", "__hn",
-                   F.posexplode_outer("__arr").alias("__pos", "__elem")))
     eld = "CAST(__elem AS DOUBLE)"
     fx_sum = (f"CAST(sum(CAST({fx_term_sql('__elem')} AS {DEC})) AS DOUBLE)"
               f" / {float(FX)!r}D")
@@ -187,142 +267,35 @@ def _fused_scalar_mv(df: DataFrame, elem_col: str,
         "avgmv": (f"CAST(CASE WHEN {risk_ok} THEN {fx_sum} / count(__pos) "
                   f"ELSE {dec_sum} / count(__pos) END AS DOUBLE)"),
     }
-    cols = [F.expr(f"{fused[a.fn.lower()]} AS {ident_sql(a.alias)}")
+    return [f"{fused[resolve(a.fn).name]} AS {ident_sql(a.alias)}"
             for a in direct]
-    el_aggs, el_post = _merged_agg_columns(alist, lambda a: "__elem")
-    return (pre.agg(*cols, *el_aggs)
-            .select(*[a.alias for a in direct], *el_post))
 
 
 def group_by_agg(df: DataFrame, keys: Sequence[Key], aggs: Sequence[Agg],
-                 where: Column | None = None,
-                 num_groups_limit: int | None = None,
-                 grouping: str = "groupby") -> DataFrame:
+                 where: Column | None = None) -> DataFrame:
     """Execute filter → group-by → aggregations, returning one row per group
     with columns [key aliases..., agg aliases...].
 
-    ``num_groups_limit`` is the reference's opt-in cardinality guardrail
-    (InstancePlanMakerImplV2.java:57-58, default 100k there): when set, at
-    most that many groups are returned — an ARBITRARY subset, exactly like
-    the reference's first-N-encountered semantics (the values of surviving
-    groups are still exact). Off by default because this engine is exact;
-    turn it on as cheap insurance against runaway GROUP BY cardinality at
-    100× scale.
-
-    ``grouping`` selects the grouping-set shape: ``"groupby"`` (reference
-    parity), ``"cube"`` or ``"rollup"`` (deliberate beyond-parity — the
-    reference has no grouping sets, SURVEY §2.4 'absent aggregations';
-    Spark computes them in the SAME single shuffle via Expand). Only
-    direct (non-element/MV) aggregations are supported with cube/rollup."""
+    ``where`` filters ``df`` and each key is staged as a column named by
+    its alias (an MV key exploded), then the staged frame is aggregated
+    by the ``aggregate_sql`` statement in ONE ``spark.sql`` call, through
+    a fresh temp view that is dropped as soon as the call returns (the
+    statement is analyzed by then) — what ``SparkSession.sql(**kwargs)``
+    does with a DataFrame argument."""
     if where is not None:
         df = df.where(where)
-
-    # Materialize key aliases once (incl. MV key explosion).
     for k in keys:
-        if k.mv:
-            df = df.withColumn(k.alias, F.explode(_kcol(k)))
-        else:
-            df = df.withColumn(k.alias, _kcol(k))
-    key_names = [k.alias for k in keys]
-
-    direct = [a for a in aggs if not resolve(a.fn).needs_elements]
-    element = [a for a in aggs if resolve(a.fn).needs_elements]
-
-    if grouping != "groupby":
-        if element:
-            raise ValueError(
-                "cube/rollup grouping supports direct aggregations only")
-        if not key_names:
-            raise ValueError("cube/rollup grouping needs group-by keys")
-        grouped = (df.cube(*key_names) if grouping == "cube"
-                   else df.rollup(*key_names))
-        out = grouped.agg(*[resolve(a.fn).builder(a.col).alias(a.alias)
-                            for a in direct])
-        if num_groups_limit is not None:
-            out = out.limit(num_groups_limit)
-        return out.select(*key_names, *[a.alias for a in aggs])
-
-    elem_zero: dict[str, Column] = {}
-    # All element-level aggs sharing an input column run over ONE exploded
-    # relation (one explode + one aggregate), not one per function — the
-    # explode multiplies rows by array length, so this is the dominant cost
-    # at scale.
-    elem_groups: dict[str, list[Agg]] = {}
-    for a in element:
-        elem_groups.setdefault(a.col, []).append(a)
-        spec = resolve(a.fn)
-        if spec.empty_value is not None:
-            elem_zero[a.alias] = F.lit(spec.empty_value)
-
-    # Scalar fused path: a no-keys query mixing MV folds and element-level
-    # aggs over ONE array column (mv_all_aggs' shape) used to run TWO full
-    # scans — a fold aggregate plus an exploded aggregate — glued by a
-    # cross join. The element pass already visits every element, so the
-    # fold results are recomputed element-wise IN the exploded aggregate
-    # (value-identical: integer/decimal terms are associative; see
-    # _fused_scalar_mv) — one scan, one aggregate, no join.
-    if (not key_names and element and direct and len(elem_groups) == 1):
-        (elem_col, alist), = elem_groups.items()
-        if all(a.fn.lower() == "count"
-               or (a.fn.lower() in _FUSED_MV and a.col == elem_col)
-               for a in direct):
-            out = _fused_scalar_mv(df, elem_col, direct, alist)
-            fill = [F.coalesce(F.col(a.alias), elem_zero[a.alias])
-                    .alias(a.alias)
-                    if a.alias in elem_zero else a.alias for a in aggs]
-            return out.select(*fill)
-
-    parts: list[DataFrame] = []
-    if direct or not element:
-        cols, post = _merged_agg_columns(direct)
-        if not cols:  # keep group presence even if all aggs are element-level
-            cols, post = [F.count(F.lit(1)).alias("__cnt")], [F.col("__cnt")]
-        parts.append(
-            (df.groupBy(*key_names).agg(*cols) if key_names
-             else df.agg(*cols)).select(*key_names, *post))
-    for elem_col, alist in elem_groups.items():
-        # explode_outer: empty/null arrays yield a NULL element row, so the
-        # group survives (count-likes see 0 non-null elements, percentiles
-        # see none → NULL) instead of vanishing from the element relation.
-        el = df.select(*key_names, F.explode_outer(elem_col).alias("__elem"))
-        el_aggs, el_post = _merged_agg_columns(alist, lambda a: "__elem")
-        agged = ((el.groupBy(*key_names) if key_names else el.groupBy())
-                 .agg(*el_aggs).select(*key_names, *el_post))
-        parts.append(agged)
-
-    out = parts[0]
-    for p in parts[1:]:
-        if not key_names:
-            out = out.crossJoin(p)
-            continue
-        # Null-safe LEFT join from the direct part: NULL group keys match
-        # their own group, and a group can never be dropped by the join.
-        lhs, rhs = out.alias("l"), p.alias("r")
-        cond = None
-        for k in key_names:
-            c = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
-            cond = c if cond is None else (cond & c)
-        extra = [c for c in p.columns if c not in key_names]
-        out = lhs.join(rhs, cond, "left").select(
-            *[F.col(f"l.{c}") for c in out.columns],
-            *[F.col(f"r.{c}") for c in extra])
-    if "__cnt" in out.columns and all(a.alias != "__cnt" for a in aggs):
-        out = out.drop("__cnt")
-    # Count-like element aggregates default to 0 for groups with no elements.
-    fill = [F.coalesce(F.col(a.alias), elem_zero[a.alias]).alias(a.alias)
-            if a.alias in elem_zero else a.alias for a in aggs]
-    # Stable column order: keys then aggs as requested.
-    out = out.select(*key_names, *fill)
-    if num_groups_limit is not None and key_names:
-        out = out.limit(num_groups_limit)
-    return out
-
-
-def having(df: DataFrame, cond: Column) -> DataFrame:
-    """HAVING — comparison tree over final aggregates
-    (HavingClauseComparisonTree.java:32); in Spark just a filter above the
-    aggregate, which Catalyst keeps post-agg."""
-    return df.where(cond)
+        kc = F.col(k.expr) if isinstance(k.expr, str) else k.expr
+        df = df.withColumn(k.alias, F.explode(kc) if k.mv else kc)
+    view = f"__gba_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        # aliased: the plan then names the relation the same on every call
+        return df.sparkSession.sql(aggregate_sql(
+            f"{view} AS __gba", [(ident_sql(k.alias), k.alias) for k in keys],
+            aggs))
+    finally:
+        df.sparkSession.catalog.dropTempView(view)
 
 
 def top_n(df: DataFrame, agg_alias: str, n: int = DEFAULT_TOP_N,

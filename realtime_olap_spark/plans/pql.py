@@ -22,16 +22,22 @@ AND/OR (request.thrift:25-34, :60-75).
 Group-by semantics follow the reference: results are the TOP n groups
 ordered by the (first) aggregate descending (docs/pql_examples.rst:169-172,
 default 10 :224) — computed exactly, with group-key tie-break for
-determinism. Selection defaults LIMIT 10 (request.thrift:130-131).
+determinism. HAVING (BrokerReduceService.java:426-460) filters the final
+aggregates; the reference's "close policy" (intersect the groups present
+for every function) is moot because the aggregation is exact — every
+group is present for every function (SURVEY.md §7 risk 4). Selection
+defaults LIMIT 10 (request.thrift:130-131).
 
 This is a hand-written recursive-descent parser (~the size of the
 reference's ANTLR listener) producing a ``PQLQuery`` IR — our
 BrokerRequest. The compiler renders the IR as ONE Spark SQL statement
 over the table's temp view (``catalog.pql_view``) and makes one
 ``spark.sql`` call: one py4j round trip and one analysis per query, where
-a Column-API build costs a round trip per operator call. Transforms and
-aggregations render through the same SQL renderings ``group_by_agg``
-parses (``functions/transform.py``, ``operators/aggregation.py``).
+a Column-API build costs a round trip per operator call. Transforms
+render through ``functions/transform.py``; the filter → group-by →
+aggregation step is ``groupby.aggregate_sql`` — the statement
+``group_by_agg`` runs too — and this module adds HAVING and the TOP-n
+trim around it.
 """
 
 from __future__ import annotations
@@ -46,7 +52,7 @@ from realtime_olap_spark.catalog import Catalog, pql_view
 from realtime_olap_spark.functions.transform import (LITERAL_TAIL,
                                                      resolve_transform)
 from realtime_olap_spark.operators.aggregation import resolve as resolve_agg
-from realtime_olap_spark.operators.groupby import Agg, merged_agg_sql
+from realtime_olap_spark.operators.groupby import Agg, aggregate_sql
 from realtime_olap_spark.sqlexpr import col_sql, ident_sql, lit_sql
 
 DEFAULT_TOP = 10
@@ -423,17 +429,9 @@ def _pred_sql(expr, having: bool = False) -> str:
 def _aggregate_sql(q: PQLQuery, view: str) -> tuple[str, list[str], list[str]]:
     """The aggregation of ``q`` over ``view`` as one SELECT — keys, then the
     aggregation functions in request order, HAVING applied, untrimmed —
-    plus the key and function output names.
-
-    Direct aggregations run inline, same-column percentile families
-    merged (``merged_agg_sql``, shared with ``group_by_agg``).
-    Element-level MV aggregations (``needs_elements``) take
-    ``group_by_agg``'s shape: one filtered base relation, one
-    explode_outer + aggregate per input column, LEFT joined back on the
-    keys null-safely (a cross join without keys)."""
-    where = f" WHERE {_pred_sql(q.where)}" if q.where is not None else ""
+    plus the key and function output names. The filter → group-by →
+    aggregation statement is ``groupby.aggregate_sql``'s."""
     keys = [(_sql(g), _name_of(g)) for g in q.group_by]
-    key_names = [n for _, n in keys]
     aggs, args = [], {}
     for expr, _ in q.select:
         if _is_agg(expr):
@@ -441,61 +439,12 @@ def _aggregate_sql(q: PQLQuery, view: str) -> tuple[str, list[str], list[str]]:
             aggs.append(Agg(expr.name, None, alias))
             args[alias] = (None if expr.args in ((), (Ident("*"),))
                            else _sql(expr.args[0]))
-    element = [a for a in aggs if resolve_agg(a.fn).needs_elements]
-    direct = [a for a in aggs if a not in element]
-    knames = [ident_sql(n) for n in key_names]
-    group_by = f" GROUP BY {', '.join(knames)}" if keys else ""
-
-    def grouped(head: list[str], alist: list[Agg], arg_sql, src: str) -> str:
-        sel, post = merged_agg_sql(alist, arg_sql)
-        if not sel:  # keep group presence when every agg is element-level
-            sel, post = ["count(1) AS __cnt"], ["__cnt"]
-        body = f"SELECT {', '.join(head + sel)} FROM {src}{group_by}"
-        if len(sel) == len(post):  # no percentile family merged
-            return body
-        return f"SELECT {', '.join(knames + post)} FROM ({body})"
-
-    if not element:
-        if keys:
-            group_by = " GROUP BY " + ", ".join(e for e, _ in keys)
-        body = grouped([f"{e} AS {ident_sql(n)}" for e, n in keys], direct,
-                       lambda a: args[a.alias], f"{view}{where}")
-    else:
-        d_arg = {a.alias: f"__d{i}" for i, a in enumerate(direct)
-                 if args[a.alias]}
-        ecols = list(dict.fromkeys(args[a.alias] for a in element))
-        base = ([f"{e} AS {ident_sql(n)}" for e, n in keys]
-                + [f"{args[al]} AS {c}" for al, c in d_arg.items()]
-                + [f"{e} AS __e{j}" for j, e in enumerate(ecols)])
-        direct_sql = grouped(knames, direct, lambda a: d_arg.get(a.alias),
-                             "__b")
-        ctes = [f"__b AS (SELECT {', '.join(base)} FROM {view}{where})",
-                f"__d AS ({direct_sql})"]
-        joins = ""
-        for j, e in enumerate(ecols):
-            exploded = ", ".join(knames + [f"explode_outer(__e{j}) AS __elem"])
-            el_sql = grouped(knames, [a for a in element if args[a.alias] == e],
-                             lambda a: "__elem",
-                             f"(SELECT {exploded} FROM __b)")
-            ctes.append(f"__e{j} AS ({el_sql})")
-            on = " AND ".join(f"__d.{k} <=> __e{j}.{k}" for k in knames)
-            joins += (f" LEFT JOIN __e{j} ON {on}" if keys
-                      else f" CROSS JOIN __e{j}")
-
-        def out(a: Agg) -> str:
-            empty = resolve_agg(a.fn).empty_value
-            if a in element and empty is not None:
-                return (f"coalesce({ident_sql(a.alias)}, {lit_sql(empty)})"
-                        f" AS {ident_sql(a.alias)}")
-            return ident_sql(a.alias)
-
-        cols = [f"__d.{k}" for k in knames] + [out(a) for a in aggs]
-        body = (f"WITH {', '.join(ctes)} SELECT {', '.join(cols)}"
-                f" FROM __d{joins}")
+    body = aggregate_sql(view, keys, aggs, lambda a: args[a.alias],
+                         _pred_sql(q.where) if q.where is not None else None)
     if q.having_ is not None:
         body = (f"SELECT * FROM ({body}) "
                 f"WHERE {_pred_sql(q.having_, having=True)}")
-    return body, key_names, [a.alias for a in aggs]
+    return body, [n for _, n in keys], [a.alias for a in aggs]
 
 
 def _trimmed(src: str, fn: str, key_names: list[str], n: int) -> str:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from realtime_olap_spark.catalog import Catalog
 from realtime_olap_spark.operators import filters as P
-from realtime_olap_spark.operators.groupby import Agg, Key, group_by_agg, having, top_n
+from realtime_olap_spark.operators.groupby import Agg, Key, group_by_agg, top_n
 from realtime_olap_spark.suite.registry import query
 from realtime_olap_spark.suite.sqlgen import OAVG, OPCT, OSUM
 
@@ -175,7 +175,7 @@ def agg_topn_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = group_by_agg(o, keys=[Key("o_custkey", "o_custkey")],
                      aggs=[Agg("count", None, "n_orders"),
                            Agg("sum", "o_totalprice", "total")])
-    g = having(g, (F.col("n_orders") >= 8) & (F.col("total") > 800000))
+    g = g.where((F.col("n_orders") >= 8) & (F.col("total") > 800000))
     return top_n(g, "total", 10, key_names=["o_custkey"])
 
 

@@ -96,6 +96,27 @@ def test_unmappable_footer_keeps_inference(spark, tmp_path, odd):
     assert sorted(r[0] for r in orders.collect()) == [1, 2]
 
 
+@pytest.mark.parametrize("nested", [
+    pa.array([[1, 2], [3]], pa.list_(pa.timestamp("ns"))),
+    pa.array([{"a": 1}, {"a": 2}], pa.struct([("a", pa.timestamp("ns"))])),
+])
+def test_nested_nanos_timestamp_is_rejected_at_load(spark, tmp_path, nested):
+    """Only top-level TIMESTAMP(NANOS) columns are re-derived; a nested
+    one keeps Spark's inference, which rejects the table when it is
+    loaded instead of at its first query."""
+    import datetime as dt
+
+    path = f"{tmp_path}/orders.parquet"
+    pq.write_table(pa.table({
+        "o_orderkey": pa.array([1, 2], pa.int64()),
+        "o_orderdate": pa.array([dt.datetime(2024, 6, 1)] * 2,
+                                pa.timestamp("us")),
+        "o_nested": nested,
+    }), path)
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        Catalog(spark, str(tmp_path)).table("orders")
+
+
 def test_unstaged_table_load_starts_no_job(spark, tmp_path):
     sc = spark.sparkContext
     cat = Catalog(spark, _two_part_corpus(str(tmp_path)))

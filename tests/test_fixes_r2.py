@@ -131,27 +131,6 @@ def test_pql_unary_minus_executes(spark):
 
 
 # ---------------------------------------------------------------------------
-# numGroupsLimit opt-in guardrail
-# ---------------------------------------------------------------------------
-
-def test_num_groups_limit_caps_output(spark):
-    """InstancePlanMakerImplV2.java:57-58 analog: an opt-in cap on group
-    cardinality returns at most N (arbitrary, exact-valued) groups."""
-    li = Catalog(spark, SF_DIR).table("lineitem")
-    full = group_by_agg(li, keys=[Key("l_suppkey", "l_suppkey")],
-                        aggs=[Agg("count", None, "cnt")])
-    capped = group_by_agg(li, keys=[Key("l_suppkey", "l_suppkey")],
-                          aggs=[Agg("count", None, "cnt")],
-                          num_groups_limit=5)
-    assert full.count() > 5
-    rows = capped.collect()
-    assert len(rows) == 5
-    exact = {r["l_suppkey"]: r["cnt"] for r in full.collect()}
-    for r in rows:  # surviving groups keep exact values
-        assert exact[r["l_suppkey"]] == r["cnt"]
-
-
-# ---------------------------------------------------------------------------
 # Avro stream-decode seam is gated, not broken
 # ---------------------------------------------------------------------------
 
@@ -218,37 +197,6 @@ def test_trained_centroids_balance_cells(spark):
     total = sum(r["count"] for r in sizes)
     assert len(sizes) == len(CENTROIDS)  # every cell populated
     assert max(r["count"] for r in sizes) < 0.5 * total  # no dominant cell
-
-
-# ---------------------------------------------------------------------------
-# Grouping sets beyond parity: cube / rollup in one Expand shuffle
-# ---------------------------------------------------------------------------
-
-def test_cube_and_rollup_match_duckdb(spark, duck):
-    """SURVEY §2.4 lists grouping sets as absent in the reference; the
-    Spark-first engine exposes them as a grouping= knob on the same
-    group_by_agg — differential vs DuckDB GROUP BY CUBE/ROLLUP."""
-    from tests.conftest import assert_matches_oracle
-
-    li = Catalog(spark, SF_DIR).table("lineitem")
-    for grouping in ("cube", "rollup"):
-        out = group_by_agg(
-            li, keys=[Key("l_returnflag", "l_returnflag"),
-                      Key("l_linestatus", "l_linestatus")],
-            aggs=[Agg("count", None, "cnt"),
-                  Agg("min", "l_quantity", "min_qty")],
-            grouping=grouping)
-        assert_matches_oracle(
-            out, duck(SF_DIR), f"""
-            SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-                   MIN(l_quantity) AS min_qty
-            FROM lineitem GROUP BY {grouping.upper()}(l_returnflag, l_linestatus)
-            """, name=grouping)
-        # AdaptiveSparkPlan prints final + initial plans; audit the final
-        plan = (out._jdf.queryExecution().executedPlan().toString()
-                .split("== Initial Plan ==")[0])
-        assert "Expand" in plan  # grouping sets in ONE shuffle, not a union
-        assert plan.count("Exchange") <= 1
 
 
 def test_server_concurrent_queries(spark):

@@ -72,6 +72,29 @@ def test_fused_scalar_mv_single_scan_plan(mv_edge_df):
     assert "exists" not in above_generate
 
 
+def test_pql_scalar_mv_mix_takes_the_fused_plan(spark):
+    """PQL renders the group-by statement ``group_by_agg`` runs, so its
+    scalar MV mix gets the same fused plan — one Generate, no cross join
+    of two scans — and the same row."""
+    from realtime_olap_spark.catalog import Catalog
+    from realtime_olap_spark.plans.pql import PQLEngine
+    from tests.conftest import SF_DIR
+
+    pql = PQLEngine(spark, SF_DIR).dataframe(
+        "SELECT count(*), countmv(embedding), summv(embedding), "
+        "percentile50mv(embedding) FROM embeddings")
+    plan = pql._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("Generate") == 1
+    lib = group_by_agg(Catalog(spark, SF_DIR).table("embeddings"), [], [
+        Agg("count", None, "count_star"),
+        Agg("countmv", "embedding", "countmv_embedding"),
+        Agg("summv", "embedding", "summv_embedding"),
+        Agg("percentile50mv", "embedding", "percentile50mv_embedding")])
+    assert pql.columns == lib.columns
+    assert _vals(pql) == _vals(lib)
+
+
 def test_fused_path_not_taken_with_keys(spark):
     """Grouped mixed MV queries keep the join-back path (the fusion is
     scalar-only); results unchanged by the routing guard."""

@@ -1,7 +1,7 @@
 """r17 hardening pins (r16 verdict item 8 + ADVICE items 1-3).
 
 - Merged-percentile accuracy: the same-column percentile-family merge
-  (groupby._merged_agg_columns) and the unmerged est/tdigest builders
+  (groupby.merged_agg_sql) and the unmerged est/tdigest renderings
   must share ONE accuracy constant, or the merged path silently diverges
   from a lone call the first time someone retunes a default.
 - ngram_hash_set(str) treats the string as a COLUMN NAME (F.col
@@ -28,15 +28,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from pyspark.sql import functions as F  # noqa: E402
 
 from realtime_olap_spark.operators.aggregation import (  # noqa: E402
-    PERCENTILE_APPROX_ACCURACY, agg_percentile_est, agg_percentile_tdigest)
+    PERCENTILE_APPROX_ACCURACY, percentile_approx_sql, resolve)
+
+
+def _lone_est(pct: int):
+    return F.expr(resolve(f"percentileest{pct}").sql("v"))
 
 
 def test_percentile_accuracy_single_constant():
-    """Every call site's unmerged builder defaults to the SAME accuracy
+    """Every unmerged approx-percentile rendering uses the SAME accuracy
     constant the merged path uses (r16 verdict item 8)."""
-    for fn in (agg_percentile_est, agg_percentile_tdigest):
-        default = inspect.signature(fn).parameters["accuracy"].default
-        assert default == PERCENTILE_APPROX_ACCURACY, fn.__name__
+    default = inspect.signature(percentile_approx_sql).parameters[
+        "accuracy"].default
+    assert default == PERCENTILE_APPROX_ACCURACY
+    for name in ("percentileest50", "percentiletdigest50"):
+        assert resolve(name).sql("v").endswith(
+            f", {PERCENTILE_APPROX_ACCURACY})"), name
     # the merged path references the constant, not a literal
     import realtime_olap_spark.operators.groupby as G
     src = inspect.getsource(G.merged_agg_sql)
@@ -47,17 +54,17 @@ def test_percentile_accuracy_single_constant():
 def test_merged_and_unmerged_percentile_est_agree(spark):
     """Value check behind the constant pin: a merged 2-percentile family
     equals two lone est calls on the same data."""
-    from realtime_olap_spark.operators.groupby import _merged_agg_columns
-    from realtime_olap_spark.operators.groupby import Agg
+    from realtime_olap_spark.operators.groupby import Agg, merged_agg_sql
 
     df = spark.range(0, 500).select(
         (F.col("id") % 7).alias("v"))
     alist = [Agg("percentileest50", "v", "p50"),
              Agg("percentileest90", "v", "p90")]
-    agg_cols, post = _merged_agg_columns(alist)
-    merged = df.agg(*agg_cols).select(*post).first()
-    lone50 = df.agg(agg_percentile_est("v", 50).alias("x")).first()["x"]
-    lone90 = df.agg(agg_percentile_est("v", 90).alias("x")).first()["x"]
+    agg_sql, post = merged_agg_sql(alist)
+    merged = (df.agg(*[F.expr(x) for x in agg_sql])
+              .select(*[F.expr(x) for x in post]).first())
+    lone50 = df.agg(_lone_est(50).alias("x")).first()["x"]
+    lone90 = df.agg(_lone_est(90).alias("x")).first()["x"]
     assert merged["p50"] == lone50
     assert merged["p90"] == lone90
 

@@ -270,10 +270,15 @@ def test_grouped_trim_reuses_one_scan(spark):
 def test_compile_is_one_sql_call(spark, monkeypatch):
     """Compiling a PQL query makes exactly one ``spark.sql`` call and no
     DataFrame transformation — selection, scalar, grouped (first-function
-    trim), HAVING, element-level MV and the per-function trim frame."""
+    trim), HAVING, element-level MV and the per-function trim frame.
+    ``group_by_agg`` runs the same statement with one ``spark.sql`` call —
+    keyed direct, keyed element-level, the fused scalar MV mix and an MV
+    key — and leaves no temp view behind."""
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from realtime_olap_spark.catalog import Catalog
+    from realtime_olap_spark.operators.groupby import Agg, Key, group_by_agg
     from realtime_olap_spark.plans.pql import compile_pql, grouped_topn_frame
 
     cat = Catalog(spark, SF_DIR)
@@ -315,3 +320,33 @@ def test_compile_is_one_sql_call(spark, monkeypatch):
             calls.update(sql=0, df=0)
             grouped_topn_frame(q, src)
             assert calls == {"sql": 1, "df": 0}, p
+
+    orders, emb = cat.table("orders"), cat.table("embeddings")
+    part = cat.table("part")
+    group_by_aggs = {
+        "keyed direct": lambda: group_by_agg(
+            orders, [Key("o_orderstatus", "status")],
+            [Agg("count", None, "n"), Agg("sum", "o_totalprice", "total"),
+             Agg("percentile50", "o_totalprice", "p50"),
+             Agg("percentile90", "o_totalprice", "p90")],
+            where=F.col("o_totalprice") > 1000),
+        "keyed element": lambda: group_by_agg(
+            emb, [Key("label", "label")],
+            [Agg("countmv", "embedding", "countmv"),
+             Agg("percentile50mv", "embedding", "p50")]),
+        "fused scalar mv": lambda: group_by_agg(
+            emb, [], [Agg("count", None, "n"),
+                      Agg("countmv", "embedding", "countmv"),
+                      Agg("summv", "embedding", "summv"),
+                      Agg("percentile50mv", "embedding", "p50")]),
+        "mv key": lambda: group_by_agg(
+            part, [Key(F.split("p_name", " "), "word", mv=True)],
+            [Agg("count", None, "n")]),
+    }
+    views = sorted(t.name for t in spark.catalog.listTables())
+    for case, run in group_by_aggs.items():
+        for _ in range(10):
+            calls.update(sql=0)
+            run()
+            assert calls["sql"] == 1, case
+    assert sorted(t.name for t in spark.catalog.listTables()) == views
