@@ -106,13 +106,23 @@ def _register_stage_cleanup(root: str, own_dir: str) -> None:
         pass
 
 
+def _read_footer(file: str):
+    """The parquet footer (``pyarrow.parquet.FileMetaData``) of ``file``,
+    or ``None`` when unreadable — the package's one footer reader: it
+    gives both a table's schema and its segments' statistics."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_metadata(file)
+    except OSError:
+        return None
+
+
 def _footer_schema(path: str):
     """The pyarrow schema from one parquet footer at ``path`` (file or
     directory of part files — any one footer decides, since a table is
     written with one schema), or ``None`` when unreadable. Cheap and
     driver-side; read once per table load."""
-    import pyarrow.parquet as pq
-
     probe = path
     if os.path.isdir(path):
         parts = sorted(
@@ -122,10 +132,122 @@ def _footer_schema(path: str):
         if not parts:
             return None
         probe = os.path.join(path, parts[0])
+    footer = _read_footer(probe)
+    return None if footer is None else footer.schema.to_arrow_schema()
+
+
+@dataclass(frozen=True)
+class SegmentMeta:
+    """One segment's (parquet file's) footer metadata — what Pinot keeps
+    as segment metadata and the column-value pruner reads: the row count
+    and, per top-level column, ``(min, max, null count)`` over its row
+    groups. A column whose statistics are missing (or NaN, or inexact)
+    in any row group has no entry."""
+
+    rows: int
+    columns: dict
+
+
+def _leaves(t) -> int:
+    """Parquet leaf columns under an arrow type (footer column order)."""
+    import pyarrow.types as pat
+
+    if pat.is_struct(t):
+        return sum(_leaves(t.field(i).type) for i in range(t.num_fields))
+    if pat.is_map(t):
+        return _leaves(t.key_type) + _leaves(t.item_type)
+    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
+        return _leaves(t.value_type)
+    return 1
+
+
+def _segment_meta(file: str) -> SegmentMeta | None:
+    footer = _read_footer(file)
+    if footer is None:
+        return None
+    columns: dict = {}
+    groups = [footer.row_group(g) for g in range(footer.num_row_groups)]
+    leaf = 0
+    for f in footer.schema.to_arrow_schema():
+        n = _leaves(f.type)
+        stats = [g.column(leaf).statistics for g in groups] if n == 1 else []
+        if stats and all(
+                s is not None and s.has_min_max and s.has_null_count
+                and getattr(s, "is_min_value_exact", True)
+                and getattr(s, "is_max_value_exact", True)
+                and s.min == s.min and s.max == s.max  # NaN bounds
+                for s in stats):
+            columns[f.name] = (min(s.min for s in stats),
+                               max(s.max for s in stats),
+                               sum(s.null_count for s in stats))
+        leaf += n
+    return SegmentMeta(footer.num_rows, columns)
+
+
+def segment_meta(spark: SparkSession, file: str) -> SegmentMeta | None:
+    """The segment record of one local parquet ``file`` (``None`` when
+    unreadable), memoized per session under its (path, size, mtime)."""
+    from realtime_olap_spark.memo import session_memo  # noqa: PLC0415
+
     try:
-        return pq.read_schema(probe)
+        st = os.stat(file)
     except OSError:
         return None
+    return session_memo(spark, file,
+                        f"segment_meta_{st.st_size}_{st.st_mtime_ns}",
+                        lambda: _segment_meta(file))
+
+
+def segment_columns(df: DataFrame) -> dict | None:
+    """``{name: DataType}`` of the columns ``df`` passes through unchanged
+    from its parquet files, when ``df``'s analyzed plan is ``Project`` /
+    ``SubqueryAlias`` nodes over ONE parquet ``LogicalRelation`` — the
+    frames whose segment records describe their rows. ``None`` for any
+    other frame (a derived table, a filtered callable). A column
+    qualifies only if its output attribute is the relation's own: a
+    re-derived column (events' ``ts``) does not. Cached on the frame,
+    as ``pql_view`` caches its view."""
+    cols = getattr(df, "_segment_cols", False)
+    if cols is not False:
+        return cols
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() in ("Project", "SubqueryAlias"):
+        plan = plan.child()
+    cols = None
+    if plan.nodeName() == "LogicalRelation":
+        rel = plan.relation()
+        if (rel.getClass().getSimpleName() == "HadoopFsRelation"
+                and rel.fileFormat().getClass().getSimpleName()
+                == "ParquetFileFormat"):
+            own = plan.outputSet()
+            out = df._jdf.queryExecution().analyzed().output()
+            types = {f.name: f.dataType for f in df.schema.fields}
+            cols = {}
+            for i in range(out.size()):
+                a = out.apply(i)
+                if own.contains(a):
+                    cols[a.name()] = types[a.name()]
+    df._segment_cols = cols
+    return cols
+
+
+def table_segments(df: DataFrame) -> list[SegmentMeta] | None:
+    """The segment records of ``df``'s parquet files (``df.inputFiles()``),
+    or ``None`` when ``df`` is not a plain parquet relation
+    (``segment_columns``) or a file is not local and readable."""
+    from urllib.parse import unquote, urlparse
+
+    if segment_columns(df) is None:
+        return None
+    out = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        meta = (segment_meta(df.sparkSession, unquote(u.path))
+                if u.scheme in ("", "file") else None)
+        if meta is None:
+            return None
+        out.append(meta)
+    return out
 
 
 def _read_schema(footer) -> tuple[StructType | None, list[str]]:
@@ -714,16 +836,17 @@ class Catalog:
                 own, hashlib.md5(self.sf_dir.encode()).hexdigest()[:8],
                 f"{name}_p{n}")
             # Range-cluster on (sorted_column, time_column) when the
-            # table declares them: each staged file then covers a narrow
-            # key/time range, so file- and row-group stats prune range
-            # predicates — the sorted-index segment layout. Round-robin
-            # would spray every file across the full key range and
-            # defeat min/max skipping. Tables declaring neither are
-            # round-robined (no clustering to preserve).
+            # table declares them and the file has them: each staged
+            # file then covers a narrow key/time range, so file- and
+            # row-group stats prune range predicates — the sorted-index
+            # segment layout. Round-robin would spray every file across
+            # the full key range and defeat min/max skipping. Tables
+            # with neither column are round-robined (no clustering to
+            # preserve).
             cfg = TABLES.get(name)
             cluster = [c for c in
                        ((cfg.sorted_column, cfg.time_column) if cfg else ())
-                       if c is not None]
+                       if c is not None and c in df.columns]
             if cluster:
                 staged = (df.repartitionByRange(n, *cluster)
                             .sortWithinPartitions(*cluster))

@@ -50,12 +50,19 @@ from pyspark.sql import DataFrame, SparkSession
 _STORE: dict[tuple[str, str, str], Any] = {}
 _GATES: dict[tuple[str, str, str], threading.RLock] = {}
 _LOCK = threading.RLock()
+_ACTIVE_APP: list[str | None] = [None]  # the app id of the last access
 
 
 def _evict_dead(active_app_id: str) -> None:
     """Drop entries whose owning SparkContext is gone — their cached
     RDDs are already unreachable, keeping them only leaks driver memory
-    in long-lived processes that restart sessions (advice r6)."""
+    in long-lived processes that restart sessions (advice r6). Only a
+    change of the active context can leave dead entries, so the sweep
+    runs then, not on every access (a served query looks up one entry
+    per segment)."""
+    if _ACTIVE_APP[0] == active_app_id:
+        return
+    _ACTIVE_APP[0] = active_app_id
     for key in [k for k in _STORE if k[0] != active_app_id]:
         del _STORE[key]
         _GATES.pop(key, None)

@@ -38,17 +38,28 @@ render through ``functions/transform.py``; the filter → group-by →
 aggregation step is ``groupby.aggregate_sql`` — the statement
 ``group_by_agg`` runs too — and this module adds HAVING and the TOP-n
 trim around it.
+
+Like Pinot's plan maker and segment pruner, ``PQLEngine.execute`` first
+asks the table's segment records (``catalog.table_segments``: row count
+and per-column min/max/null count from each parquet footer): an
+unfiltered count-only query, and a query whose filter no segment can
+match, are answered from them with no Spark job (``_metadata_response``).
+Every other query runs its one statement unchanged.
 """
 
 from __future__ import annotations
 
 import re
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ByteType, DoubleType, FloatType, IntegerType,
+                               LongType, ShortType, StringType)
 
-from realtime_olap_spark.catalog import Catalog, pql_view
+from realtime_olap_spark.catalog import (Catalog, pql_view, segment_columns,
+                                         table_segments)
 from realtime_olap_spark.functions.transform import (LITERAL_TAIL,
                                                      resolve_transform)
 from realtime_olap_spark.operators.aggregation import resolve as resolve_agg
@@ -506,6 +517,11 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
 
     - totalDocs — rows leaving the parquet scans (post row-group/partition
       pruning); numDocsScanned — rows surviving the filter operators.
+      When no scan is left to read — AQE replaced the executed plan of a
+      filter that matched nothing with an empty relation — every field it
+      would give is ``None``; ``PQLEngine.execute`` then takes totalDocs
+      and numSegmentsQueried from the segment records and reports nothing
+      scanned or matched.
     - numEntriesScannedInFilter — Σ per Filter of (input rows × columns
       referenced by the predicate): the column-value reads the filter
       phase performed, Pinot's definition.
@@ -596,12 +612,7 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
     n_files = sum(files) if files else None
     width = max(scan_width) if scan_width else None
 
-    sc = df.sparkSession.sparkContext
-    try:
-        n_exec = max(len(sc._jsc.sc().getExecutorIds()), 1)
-    except Exception:
-        n_exec = 1
-
+    n_exec = _servers(df.sparkSession)
     stats = {
         "totalDocs": total,
         "numDocsScanned": scanned,
@@ -620,6 +631,15 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
     if total_time_ms is not None:
         stats["totalTimeMs"] = int(round(total_time_ms))
     return stats
+
+
+def _servers(spark: SparkSession) -> int:
+    """numServersQueried/Responded: the executors that host tasks (the
+    local JVM alone in local mode)."""
+    try:
+        return max(len(spark.sparkContext._jsc.sc().getExecutorIds()), 1)
+    except Exception:
+        return 1
 
 
 def exact_segments_matched(src: DataFrame, where=None) -> int:
@@ -685,6 +705,15 @@ class PQLEngine:
         """Run and shape like BrokerResponseNative: selectionResults or
         aggregationResults + stats.
 
+        The segment records answer first (``_metadata_response``): an
+        unfiltered count-only query is the sum of the segments' row
+        counts, and a filter that no segment's column statistics can
+        match gives the empty answer — both with no Spark job, the way
+        Pinot's plan maker answers COUNT(*) from segment metadata and its
+        pruner drops segments. ``exact_segments`` then needs no extra
+        scan either. Every other query runs its compiled statement
+        (``_spark_response``).
+
         Grouped aggregations trim PER FUNCTION **in Spark** — one bounded
         TakeOrderedAndProject branch per aggregation function, unioned, so
         the driver collects ≤ top × n_functions rows no matter how many
@@ -726,61 +755,250 @@ class PQLEngine:
             finally:
                 done.set()
                 sc.setLocalProperty("spark.jobGroup.id", None)
-        import time as _time
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         q = parse_pql(pql)
         src = self.catalog.table(q.table)
+        resp = _metadata_response(q, src, t0)
+        if resp is None:
+            resp = _spark_response(q, src, t0, exact_segments)
+        return resp
 
-        def finish(stats: dict) -> dict:
-            # ``exact_segments=True`` trades one extra column-pruned scan
-            # for an exact numSegmentsMatched (see exact_segments_matched);
-            # the default keeps the zero-cost bound from plan_scan_stats.
-            if exact_segments:
-                stats["numSegmentsMatched"] = exact_segments_matched(
-                    src, F.expr(_pred_sql(q.where))
-                    if q.where is not None else None)
-            return stats
 
-        if q.is_aggregation and q.group_by:
-            u, key_cols, fn_cols, n = grouped_topn_frame(q, src)
-            rows = u.collect()  # ≤ n × n_functions rows
-            stats = finish(plan_scan_stats(u, (_time.perf_counter() - t0) * 1000))
+def _elapsed_ms(t0: float) -> float:
+    return (time.perf_counter() - t0) * 1000
 
-            def per_function(c: str) -> list[dict]:
-                # same tie-break as top_n's Spark ordering: NATIVE-typed
-                # key asc, nulls first (str(key) would rank 10 before 2
-                # and could change which tied groups survive the trim)
-                sel = [r for r in rows if r["__fn"] == c]
-                sel.sort(key=lambda r: (
-                    -(r[c] if r[c] is not None else float("-inf")),
-                    tuple((r[k] is not None, r[k]) for k in key_cols)))
-                return [{"group": [r[k] for k in key_cols], "value": r[c]}
-                        for r in sel]
 
-            return {
-                "aggregationResults": [{
-                    "function": c,
-                    "groupByColumns": key_cols,
-                    "groupByResult": per_function(c),
-                } for c in fn_cols],
-                **stats,
-            }
+def _spark_response(q: PQLQuery, src: DataFrame, t0: float,
+                    exact_segments: bool = False) -> dict:
+    """The response of ``q`` over ``src`` computed by Spark: the compiled
+    statement runs, and its stats come from the executed plan."""
 
-        df = compile_pql(q, src)  # scalar aggregation or selection
-        rows = df.collect()
-        cols = df.columns
-        stats = finish(plan_scan_stats(df, (_time.perf_counter() - t0) * 1000))
-        if q.is_aggregation:
-            return {
-                "aggregationResults": [
-                    {"function": c, "value": rows[0][c] if rows else None}
-                    for c in cols],
-                **stats,
-            }
-        return {
-            "selectionResults": {
-                "columns": cols,
-                "results": [[r[c] for c in cols] for r in rows],
-            },
-            **stats,
-        }
+    def finish(df: DataFrame) -> dict:
+        stats = plan_scan_stats(df, _elapsed_ms(t0))
+        if stats["totalDocs"] is None:
+            # no scan left in the executed plan: AQE replaced a plan whose
+            # filter matched nothing with an empty relation. The queried
+            # segments still come from their records.
+            segs = table_segments(src)
+            if segs is not None:
+                stats.update(totalDocs=sum(s.rows for s in segs),
+                             numDocsScanned=0, numEntriesScannedPostFilter=0,
+                             numSegmentsQueried=len(segs),
+                             numSegmentsProcessed=len(segs),
+                             numSegmentsMatched=0)
+        # ``exact_segments=True`` trades one extra column-pruned scan
+        # for an exact numSegmentsMatched (see exact_segments_matched);
+        # the default keeps the zero-cost bound from plan_scan_stats.
+        if exact_segments:
+            stats["numSegmentsMatched"] = exact_segments_matched(
+                src, F.expr(_pred_sql(q.where))
+                if q.where is not None else None)
+        return stats
+
+    if q.is_aggregation and q.group_by:
+        u, key_cols, fn_cols, n = grouped_topn_frame(q, src)
+        rows = u.collect()  # ≤ n × n_functions rows
+        stats = finish(u)
+
+        def per_function(c: str) -> list[dict]:
+            # same tie-break as top_n's Spark ordering: NATIVE-typed
+            # key asc, nulls first (str(key) would rank 10 before 2
+            # and could change which tied groups survive the trim)
+            sel = [r for r in rows if r["__fn"] == c]
+            sel.sort(key=lambda r: (
+                -(r[c] if r[c] is not None else float("-inf")),
+                tuple((r[k] is not None, r[k]) for k in key_cols)))
+            return [{"group": [r[k] for k in key_cols], "value": r[c]}
+                    for r in sel]
+
+        return _grouped(key_cols, fn_cols, per_function, stats)
+
+    df = compile_pql(q, src)  # scalar aggregation or selection
+    rows = df.collect()
+    cols = df.columns
+    stats = finish(df)
+    if q.is_aggregation:
+        return _scalar(cols, lambda c: rows[0][c] if rows else None, stats)
+    return _selection(cols, [[r[c] for c in cols] for r in rows], stats)
+
+
+def _grouped(key_cols, fn_cols, groups, stats: dict) -> dict:
+    return {
+        "aggregationResults": [{
+            "function": c,
+            "groupByColumns": key_cols,
+            "groupByResult": groups(c),
+        } for c in fn_cols],
+        **stats,
+    }
+
+
+def _scalar(cols, value, stats: dict) -> dict:
+    return {"aggregationResults": [{"function": c, "value": value(c)}
+                                   for c in cols],
+            **stats}
+
+
+def _selection(cols, results, stats: dict) -> dict:
+    return {"selectionResults": {"columns": cols, "results": results},
+            **stats}
+
+
+# ---------------------------------------------------------------------------
+# Segment metadata: the plan maker's metadata answers and the column-value
+# segment pruner
+# ---------------------------------------------------------------------------
+
+#: the comparison a literal-first predicate (``5 < x``) states on the column
+_FLIP = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+#: predicates that are false for NaN — the one value parquet statistics
+#: leave out of a FLOAT/DOUBLE column's min/max, and one Spark ranks
+#: above every number
+_NAN_FALSE = {"=", "<", "<=", "between", "in"}
+
+
+def _as_str(v) -> str:
+    if not isinstance(v, str):
+        raise TypeError(v)
+    return v
+
+
+def _as_int(v) -> int:
+    if not isinstance(v, int) or isinstance(v, bool):
+        raise TypeError(v)
+    return v
+
+
+def _as_float(v) -> float:
+    if not isinstance(v, (int, float)) or isinstance(v, bool):
+        raise TypeError(v)
+    return float(v)
+
+
+def _domain(dtype, op: str, lits):
+    """The conversion that maps a column of ``dtype``'s statistics and the
+    predicate's literals into the domain Spark compares them in, or
+    ``None`` when the predicate keeps every segment: integer columns
+    compare with integer literals as integers and with any other numeric
+    literal as doubles; FLOAT/DOUBLE columns only under a NaN-false
+    predicate; UTF-8 string columns with string literals (byte order is
+    code-point order)."""
+    if isinstance(dtype, StringType):
+        return _as_str
+    if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
+        ints = all(isinstance(v, int) and not isinstance(v, bool)
+                   for v in lits)
+        return _as_int if ints else _as_float
+    if op not in _NAN_FALSE:
+        return None
+    if isinstance(dtype, DoubleType):
+        return _as_float
+    if isinstance(dtype, FloatType) and all(isinstance(v, float)
+                                            for v in lits):
+        return _as_float
+    return None
+
+
+def _prunes(pred, seg, cols: dict) -> bool:
+    """Whether no row of segment ``seg`` can satisfy ``pred``, from its
+    column statistics (``ColumnValueSegmentPruner``): ``= < <= > >=``,
+    BETWEEN and IN between a column and literals intersect the predicate's
+    values with the column's [min, max]; AND prunes when any operand
+    does, OR when every operand does. ``cols`` are the columns the table
+    frame passes through unchanged (``catalog.segment_columns``); any
+    other predicate keeps the segment."""
+    if isinstance(pred, BoolOp):
+        hits = [_prunes(p, seg, cols) for p in pred.operands]
+        return any(hits) if pred.op == "AND" else all(hits)
+    if isinstance(pred, Cmp) and pred.op in _FLIP:
+        if isinstance(pred.left, Ident) and isinstance(pred.right, Lit):
+            col, op, lits = pred.left, pred.op, (pred.right.value,)
+        elif isinstance(pred.left, Lit) and isinstance(pred.right, Ident):
+            col, op, lits = pred.right, _FLIP[pred.op], (pred.left.value,)
+        else:
+            return False
+    elif (isinstance(pred, Between) and isinstance(pred.low, Lit)
+          and isinstance(pred.high, Lit)):
+        col, op, lits = pred.expr, "between", (pred.low.value,
+                                               pred.high.value)
+    elif isinstance(pred, In) and not pred.negated:
+        col, op, lits = pred.expr, "in", pred.values
+    else:
+        return False
+    if (not isinstance(col, Ident) or col.name not in cols
+            or col.name not in seg.columns):
+        return False
+    conv = _domain(cols[col.name], op, lits)
+    if conv is None:
+        return False
+    lo, hi, _ = seg.columns[col.name]
+    try:
+        lo, hi, vs = conv(lo), conv(hi), [conv(v) for v in lits]
+    except (TypeError, OverflowError):
+        return False
+    if op == "in":
+        return all(v < lo or v > hi for v in vs)
+    if op == "between":
+        return vs[0] > vs[1] or vs[1] < lo or vs[0] > hi
+    v = vs[0]
+    return {"=": v < lo or v > hi, "<": lo >= v, "<=": lo > v,
+            ">": hi <= v, ">=": hi < v}[op]
+
+
+def _metadata_response(q: PQLQuery, src: DataFrame, t0: float) -> dict | None:
+    """The response of ``q`` from ``src``'s segment records, with no Spark
+    job (Pinot's ``MetadataBasedAggregationOperator`` and segment
+    pruning), or ``None`` when Spark must run it. Two cases:
+
+    - no WHERE and every select item a ``count``: the sum of the row
+      counts;
+    - a WHERE that no segment can match (``_prunes``): an empty
+      ``groupByResult`` per function for a grouped query, empty
+      ``results`` for a selection, 0 for a count-only scalar query. The
+      statement is still compiled, untrimmed (analysis runs no job), so
+      its column names and analysis errors are the Spark path's. Any
+      other scalar function keeps Spark's own empty value.
+
+    Stats follow Pinot: ``totalDocs`` and ``numSegmentsQueried`` cover
+    every segment, ``numSegmentsProcessed``/``Matched`` the surviving
+    segments that have rows, ``numDocsScanned`` the answered count, and
+    the entry counts are 0. Only a frame that is a plain parquet relation
+    (``catalog.segment_columns``) has records."""
+    count_only = (not q.group_by and q.having_ is None
+                  and all(isinstance(e, Func) and e.name == "count"
+                          for e, _ in q.select))
+    if not count_only and (q.where is None
+                           or (q.is_aggregation and not q.group_by)):
+        return None
+    segs = table_segments(src)
+    if segs is None:
+        return None
+    seg_cols = segment_columns(src)
+    live = [s for s in segs if s.rows and (
+        q.where is None or not _prunes(q.where, s, seg_cols))]
+    if q.where is not None and live:
+        return None
+    docs = sum(s.rows for s in live)
+    # count(..) renders count(1): an unfiltered count-only query cannot
+    # fail analysis, and its names are the select items'
+    cols = (compile_pql(q, src, trim=False).columns if q.where is not None
+            else [_name_of(e) for e, _ in q.select])
+    n_exec = _servers(src.sparkSession)
+    stats = {
+        "totalDocs": sum(s.rows for s in segs),
+        "numDocsScanned": docs,
+        "numEntriesScannedInFilter": 0,
+        "numEntriesScannedPostFilter": 0,
+        "numSegmentsQueried": len(segs),
+        "numSegmentsProcessed": len(live),
+        "numSegmentsMatched": len(live),
+        "numServersQueried": n_exec,
+        "numServersResponded": n_exec,
+        "totalTimeMs": int(round(_elapsed_ms(t0))),
+    }
+    if q.group_by:  # keys, then the functions (``_aggregate_sql``)
+        k = len(q.group_by)
+        return _grouped(cols[:k], cols[k:], lambda c: [], stats)
+    if q.is_aggregation:
+        return _scalar(cols, lambda c: docs, stats)
+    return _selection(cols, [], stats)

@@ -64,11 +64,13 @@ SELECT (SELECT COUNT(*) FROM lineitem) AS cnt,
 FROM part
 """)
 def agg_fastpaths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two metadata fast paths in one row: unfiltered COUNT(*) answered
-    from segment metadata (MetadataBasedAggregationOperator.java:37 →
-    Parquet footer row counts via spark.sql.parquet.aggregatePushdown) and
-    unfiltered MIN/MAX answered from the dictionary
-    (DictionaryBasedAggregationOperator.java:47 → Parquet column stats)."""
+    """The shapes of the reference's two metadata fast paths in one row:
+    unfiltered COUNT(*) (MetadataBasedAggregationOperator.java:37) and
+    unfiltered MIN/MAX (DictionaryBasedAggregationOperator.java:47). This
+    library entry point runs both as Spark scans: parquet is a V1 source
+    here, so Spark's aggregate pushdown never applies. Served PQL answers
+    an unfiltered count-only query from the segment records instead
+    (``plans/pql._metadata_response``)."""
     c = Catalog(spark, sf_dir)
     cnt = c.table("lineitem").agg(F.count(F.lit(1)).alias("cnt"))
     mm = group_by_agg(c.table("part"), keys=[], aggs=[

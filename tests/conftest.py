@@ -7,6 +7,8 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
+import uuid
 
 import duckdb
 import pytest
@@ -40,6 +42,27 @@ def duck():
         return con
 
     return connect
+
+
+def jobs_in_group(sc, group: str) -> int:
+    """Jobs started under ``group`` so far. Job starts reach the status
+    tracker through the asynchronous listener bus, in order: once a
+    marker job run after them is visible, every earlier job is too."""
+    marker = f"marker-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(marker, marker)
+    sc.parallelize([0], 1).count()
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not st.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.01)
+    return len(st.getJobIdsForGroup(group))
+
+
+def response_answer(resp: dict) -> dict:
+    """A ``PQLEngine.execute`` response without its stats: the answer."""
+    return {k: resp[k] for k in ("aggregationResults", "selectionResults")
+            if k in resp}
 
 
 def _norm(v):

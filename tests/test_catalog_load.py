@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 import uuid
 
 import pyarrow as pa
@@ -18,6 +17,7 @@ from pyspark.sql import functions as F
 
 from realtime_olap_spark.catalog import TABLES, Catalog
 from tests.conftest import SF_DIR, SF_DIR_ORACLE
+from tests.conftest import jobs_in_group as _jobs_in_group
 
 CORPORA = [SF_DIR, SF_DIR_ORACLE, "two_part"]
 
@@ -47,21 +47,6 @@ def _inferred(spark, path: str, name: str):
                                       * F.lit(1000)).cast("long"))
                 .select(*order, "ts"))
     return df
-
-
-def _jobs_in_group(sc, group: str) -> int:
-    """Jobs started under ``group`` so far. Job starts reach the status
-    tracker through the asynchronous listener bus, in order: once a
-    marker job run after them is visible, every earlier job is too."""
-    marker = f"marker-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(marker, marker)
-    sc.parallelize([0], 1).count()
-    st = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not st.getJobIdsForGroup(marker):
-        assert time.monotonic() < deadline, "marker job never reported"
-        time.sleep(0.01)
-    return len(st.getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -160,3 +145,17 @@ def test_staged_table_load_runs_only_the_staging_write(spark, tmp_path,
         assert _jobs_in_group(sc, stage_group) > 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_staging_clusters_only_on_columns_the_file_has(spark, tmp_path):
+    """``orders`` declares ``o_orderdate`` as its time column; a file
+    without it is staged on the columns it has and loads with its rows."""
+    pq.write_table(pa.table({
+        "o_orderkey": pa.array([3, 1, 2], pa.int64()),
+        "o_totalprice": pa.array([1.5, 2.5, 3.5]),
+    }), f"{tmp_path}/orders.parquet")
+    cat = Catalog(spark, str(tmp_path))
+    assert cat._should_stage(f"{tmp_path}/orders.parquet")
+    orders = cat.table("orders")
+    assert "rtolap_segments" in orders.inputFiles()[0]  # the staged copy
+    assert sorted(r["o_orderkey"] for r in orders.collect()) == [1, 2, 3]

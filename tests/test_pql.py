@@ -164,6 +164,25 @@ def test_execute_reports_full_broker_stat_block(spark):
     assert out["totalTimeMs"] >= 0
 
 
+def test_empty_result_stats_are_ints(spark):
+    """A filter that matches no row lets AQE replace the executed plan
+    with an empty relation, leaving no scan for ``plan_scan_stats`` to
+    read: the queried segments then come from their records, and nothing
+    was scanned or matched. Every stat stays an int."""
+    eng = PQLEngine(spark, SF_DIR)
+    out = eng.execute("SELECT lang, count(*) FROM documents "
+                      "WHERE REGEXP_LIKE(source, '^zzz$') GROUP BY lang")
+    assert out["aggregationResults"][0]["groupByResult"] == []
+    for k, v in out.items():
+        if k != "aggregationResults":
+            assert isinstance(v, int), (k, v)
+    src = eng.catalog.table("documents")
+    assert out["totalDocs"] == src.count()
+    assert out["numSegmentsQueried"] == len(src.inputFiles())
+    assert out["numDocsScanned"] == out["numSegmentsMatched"] == 0
+    assert out["numEntriesScannedPostFilter"] == 0
+
+
 def test_parse_is_null_rejected_with_pinot_shape():
     """IS [NOT] NULL parses (PQL2.g4 isClause) then rejects with the
     unsupported-operation message — the IR has no null predicate
