@@ -198,35 +198,46 @@ def segment_meta(spark: SparkSession, file: str) -> SegmentMeta | None:
                         lambda: _segment_meta(file))
 
 
+def parquet_relation(df: DataFrame):
+    """The parquet ``LogicalRelation`` under ``df``'s analyzed plan when
+    that plan is ``Project`` / ``SubqueryAlias`` / ``View`` nodes over ONE
+    parquet ``HadoopFsRelation`` (a temp view analyzes to ``SubqueryAlias
+    → View → LogicalRelation``), else ``None``."""
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() in ("Project", "SubqueryAlias", "View"):
+        plan = plan.child()
+    if plan.nodeName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() == "HadoopFsRelation"
+            and rel.fileFormat().getClass().getSimpleName()
+            == "ParquetFileFormat"):
+        return plan
+    return None
+
+
 def segment_columns(df: DataFrame) -> dict | None:
     """``{name: DataType}`` of the columns ``df`` passes through unchanged
-    from its parquet files, when ``df``'s analyzed plan is ``Project`` /
-    ``SubqueryAlias`` nodes over ONE parquet ``LogicalRelation`` — the
-    frames whose segment records describe their rows. ``None`` for any
-    other frame (a derived table, a filtered callable). A column
-    qualifies only if its output attribute is the relation's own: a
-    re-derived column (events' ``ts``) does not. Cached on the frame,
-    as ``pql_view`` caches its view."""
+    from its parquet files, when ``df`` is a plain parquet relation
+    (``parquet_relation``) — the frames whose segment records describe
+    their rows. ``None`` for any other frame (a derived table, a filtered
+    callable). A column qualifies only if its output attribute is the
+    relation's own: a re-derived column (events' ``ts``) does not. Cached
+    on the frame, as ``pql_view`` caches its view."""
     cols = getattr(df, "_segment_cols", False)
     if cols is not False:
         return cols
-    plan = df._jdf.queryExecution().analyzed()
-    while plan.nodeName() in ("Project", "SubqueryAlias"):
-        plan = plan.child()
+    plan = parquet_relation(df)
     cols = None
-    if plan.nodeName() == "LogicalRelation":
-        rel = plan.relation()
-        if (rel.getClass().getSimpleName() == "HadoopFsRelation"
-                and rel.fileFormat().getClass().getSimpleName()
-                == "ParquetFileFormat"):
-            own = plan.outputSet()
-            out = df._jdf.queryExecution().analyzed().output()
-            types = {f.name: f.dataType for f in df.schema.fields}
-            cols = {}
-            for i in range(out.size()):
-                a = out.apply(i)
-                if own.contains(a):
-                    cols[a.name()] = types[a.name()]
+    if plan is not None:
+        own = plan.outputSet()
+        out = df._jdf.queryExecution().analyzed().output()
+        types = {f.name: f.dataType for f in df.schema.fields}
+        cols = {}
+        for i in range(out.size()):
+            a = out.apply(i)
+            if own.contains(a):
+                cols[a.name()] = types[a.name()]
     df._segment_cols = cols
     return cols
 
@@ -234,7 +245,16 @@ def segment_columns(df: DataFrame) -> dict | None:
 def table_segments(df: DataFrame) -> list[SegmentMeta] | None:
     """The segment records of ``df``'s parquet files (``df.inputFiles()``),
     or ``None`` when ``df`` is not a plain parquet relation
-    (``segment_columns``) or a file is not local and readable."""
+    (``segment_columns``) or a file is not local and readable. Cached on
+    the frame, whose file listing is fixed: the metadata answer and the
+    Spark path's stats of one query read them once."""
+    segs = getattr(df, "_segments", False)
+    if segs is False:
+        segs = df._segments = _file_segments(df)
+    return segs
+
+
+def _file_segments(df: DataFrame) -> list[SegmentMeta] | None:
     from urllib.parse import unquote, urlparse
 
     if segment_columns(df) is None:
@@ -519,7 +539,7 @@ TABLES: dict[str, TableConfig] = {
 
 # ---------------------------------------------------------------------------
 # Derived (computed) tables — the media/curation surface exposed to the
-# PQL/SQL entry points. Each builder takes the Catalog and returns a
+# PQL entry point. Each builder takes the Catalog and returns a
 # DataFrame; results are cached per Catalog like physical tables, so
 # "SELECT video_codec, COUNT(*) FROM media_probe GROUP BY video_codec"
 # works through PQLServer without dropping to the Python API. The
@@ -621,8 +641,8 @@ _VIEW_IDS = itertools.count()
 def pql_view(df: DataFrame, name: str | None = None) -> str:
     """The temp view a PQL statement reads ``df`` through: registered once
     per DataFrame object, under a fresh ``__pql_t<n>`` name that neither a
-    second corpus in the same session nor a user view (``register_views``
-    names views exactly like the tables) can collide with. With ``name``,
+    second corpus in the same session nor a user view (a live table is a
+    view named like the table) can collide with. With ``name``,
     (re-)register ``df`` under it — how a callable derived table's fresh
     frame replaces the previous access's under one fixed name."""
     if name is None:
@@ -651,71 +671,46 @@ DERIVED_TABLES = {
 
 @dataclass
 class Catalog:
-    """Loads the star-schema tables of one scale factor and registers views.
+    """Loads the star-schema tables of one scale factor.
 
     A reference 'segment' maps to a Parquet file; a 'table' to the DataFrame
     over all its files (SURVEY.md §1.5). Queries address one table
     (README.md:27) — joins are an engine extension beyond reference parity.
     Derived tables (``DERIVED_TABLES`` + :meth:`register_derived`) expose
-    the media/curation operators to the same entry points.
+    the media/curation operators to the same entry point.
     """
 
     spark: SparkSession
     sf_dir: str = DEFAULT_SF_DIR
     _cache: dict[str, DataFrame] = field(default_factory=dict)
     _derived: dict[str, DataFrame] = field(default_factory=dict)
-    _views_registered: bool = False
     _live_views: dict[str, str] = field(default_factory=dict)
 
     def register_derived(self, name: str, df) -> None:
         """Register a session-scoped derived table addressable from the
-        PQL/SQL entry points (e.g. a probed media inventory built from
-        an external corpus). Physical table names AND the built-in
-        derived names (``DERIVED_TABLES``) are reserved. If the SQL
-        views were already registered, the new table becomes a temp
-        view immediately — no re-``register_views()`` needed.
+        PQL entry point (e.g. a probed media inventory built from an
+        external corpus). Physical table names AND the built-in derived
+        names (``DERIVED_TABLES``) are reserved.
 
-        ``df`` may also be a ZERO-ARG CALLABLE returning a DataFrame:
-        it is re-evaluated on every :meth:`table` access, so
-        catalog-backed relations inside it re-resolve per query — the
-        way to keep a served view LIVE over a growing realtime sink
-        (a plain DataFrame pins its file listing at analysis; see
-        ``streaming.realtime_segments_table``). To keep the SQL
-        surface consistent with the PQL path, the temp view for a
-        callable is RE-REGISTERED from a fresh evaluation on every
-        :meth:`table` access (every PQL query) and on
-        :meth:`refresh_derived` — call the latter after out-of-band
-        segment commits if querying only through ``spark.sql``."""
+        ``df`` may also be a ZERO-ARG CALLABLE returning a DataFrame: it
+        is re-evaluated on every :meth:`table` access, so a view inside
+        it re-resolves per query — the way to serve a live table
+        (``streaming.realtime_segments_table``), whose view
+        ``streaming.refresh_segments`` re-points after each commit while
+        a plain DataFrame keeps the file listing it was analyzed with."""
         if name in TABLES:
             raise ValueError(f"{name!r} is a physical table name")
         if name in DERIVED_TABLES:
             raise ValueError(f"{name!r} is a built-in derived table")
         self._derived[name] = df
-        if self._views_registered:
-            (df() if callable(df) else df).createOrReplaceTempView(name)
-
-    def refresh_derived(self, name: str | None = None) -> None:
-        """Re-evaluate callable-backed derived tables and re-register
-        their SQL temp views, so ``spark.sql`` sees the same live data
-        as the PQL path. ``name=None`` refreshes all of them."""
-        names = [name] if name is not None else list(self._derived)
-        for n in names:
-            obj = self._derived[n]
-            if callable(obj) and self._views_registered:
-                obj().createOrReplaceTempView(n)
 
     def table(self, name: str) -> DataFrame:
         if name in self._derived:
             obj = self._derived[name]
             if callable(obj):
                 df = obj()
-                # keep the SQL temp view in lock-step with the PQL
-                # path: a frozen snapshot view would silently serve
-                # different data than POST /query as segments land.
                 # The PQL view keeps one name per table, so live
                 # accesses replace each other instead of piling up.
-                if self._views_registered:
-                    df.createOrReplaceTempView(name)
                 pql_view(df, self._live_views.setdefault(
                     name, f"__pql_t{next(_VIEW_IDS)}"))
                 return df
@@ -860,15 +855,3 @@ class Catalog:
 
     def config(self, name: str) -> TableConfig:
         return TABLES[name]
-
-    def register_views(self) -> None:
-        """Register every table as a temp view for the SQL entry point
-        — physical tables AND the derived media/curation tables (the
-        latter stay lazy: a view registration plans nothing)."""
-        for name in TABLES:
-            self.table(name).createOrReplaceTempView(name)
-        for name in DERIVED_TABLES:
-            self.table(name).createOrReplaceTempView(name)
-        for name, df in self._derived.items():
-            (df() if callable(df) else df).createOrReplaceTempView(name)
-        self._views_registered = True

@@ -54,7 +54,6 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (ByteType, DoubleType, FloatType, IntegerType,
                                LongType, ShortType, StringType)
 
@@ -518,10 +517,11 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
     - totalDocs — rows leaving the parquet scans (post row-group/partition
       pruning); numDocsScanned — rows surviving the filter operators.
       When no scan is left to read — AQE replaced the executed plan of a
-      filter that matched nothing with an empty relation — every field it
-      would give is ``None``; ``PQLEngine.execute`` then takes totalDocs
-      and numSegmentsQueried from the segment records and reports nothing
-      scanned or matched.
+      filter that matched nothing with an empty relation — nothing was
+      scanned, and every count is 0. When the scans read no row (that
+      case, or a filter whose row-group stats ruled out every row group),
+      ``PQLEngine.execute`` takes totalDocs and numSegments{Queried,
+      Processed} from the segment records.
     - numEntriesScannedInFilter — Σ per Filter of (input rows × columns
       referenced by the predicate): the column-value reads the filter
       phase performed, Pinot's definition.
@@ -607,24 +607,19 @@ def plan_scan_stats(df: DataFrame, total_time_ms: float | None = None) -> dict:
             walk(it.next())
 
     walk(df._jdf.queryExecution().executedPlan())
-    total = sum(totals) if totals else None
+    total = sum(totals)
     scanned = sum(filtered) if filtered else total
-    n_files = sum(files) if files else None
-    width = max(scan_width) if scan_width else None
+    n_files = sum(files)
 
     n_exec = _servers(df.sparkSession)
     stats = {
         "totalDocs": total,
         "numDocsScanned": scanned,
-        "numEntriesScannedInFilter": (sum(entries_filter)
-                                      if entries_filter else 0),
-        "numEntriesScannedPostFilter": (scanned * width
-                                        if scanned is not None
-                                        and width is not None else None),
+        "numEntriesScannedInFilter": sum(entries_filter),
+        "numEntriesScannedPostFilter": scanned * max(scan_width, default=0),
         "numSegmentsQueried": n_files,
         "numSegmentsProcessed": n_files,
-        "numSegmentsMatched": (n_files if scanned else 0)
-                              if n_files is not None else None,
+        "numSegmentsMatched": n_files if scanned else 0,
         "numServersQueried": n_exec,
         "numServersResponded": n_exec,
     }
@@ -640,22 +635,6 @@ def _servers(spark: SparkSession) -> int:
         return max(len(spark.sparkContext._jsc.sc().getExecutorIds()), 1)
     except Exception:
         return 1
-
-
-def exact_segments_matched(src: DataFrame, where=None) -> int:
-    """EXACT numSegmentsMatched: parquet files ('segments') contributing at
-    least one post-filter row. Spark's scan metrics carry no per-file
-    matched-row counts, so ``plan_scan_stats`` can only bound this; when
-    the caller opts in, this runs one extra **column-pruned** scan —
-    ``input_file_name()`` captured directly above the filtered scan (before
-    any shuffle, where it is still well-defined) and a single
-    count-distinct. The extra pass reads only the predicate's columns and
-    benefits from the same row-group pruning as the query, so its cost is
-    a fraction of the query's own scan (Pinot reads the same answer off
-    per-segment metadata: BrokerResponseNative.numSegmentsMatched)."""
-    df = src.where(where) if where is not None else src
-    return df.select(F.input_file_name().alias("__seg")) \
-             .agg(F.count_distinct("__seg")).first()[0]
 
 
 def grouped_topn_frame(q: PQLQuery, src: DataFrame):
@@ -700,8 +679,7 @@ class PQLEngine:
         q = parse_pql(pql)
         return compile_pql(q, self.catalog.table(q.table))
 
-    def execute(self, pql: str, timeout_ms: int | None = None,
-                exact_segments: bool = False) -> dict:
+    def execute(self, pql: str, timeout_ms: int | None = None) -> dict:
         """Run and shape like BrokerResponseNative: selectionResults or
         aggregationResults + stats.
 
@@ -710,9 +688,8 @@ class PQLEngine:
         counts, and a filter that no segment's column statistics can
         match gives the empty answer — both with no Spark job, the way
         Pinot's plan maker answers COUNT(*) from segment metadata and its
-        pruner drops segments. ``exact_segments`` then needs no extra
-        scan either. Every other query runs its compiled statement
-        (``_spark_response``).
+        pruner drops segments. Every other query runs its compiled
+        statement (``_spark_response``).
 
         Grouped aggregations trim PER FUNCTION **in Spark** — one bounded
         TakeOrderedAndProject branch per aggregation function, unioned, so
@@ -746,7 +723,7 @@ class PQLEngine:
             t = threading.Thread(target=watchdog, daemon=True)
             t.start()
             try:
-                return self.execute(pql, exact_segments=exact_segments)
+                return self.execute(pql)
             except Exception as ex:
                 if timed_out.is_set():
                     raise QueryTimeout(
@@ -760,7 +737,7 @@ class PQLEngine:
         src = self.catalog.table(q.table)
         resp = _metadata_response(q, src, t0)
         if resp is None:
-            resp = _spark_response(q, src, t0, exact_segments)
+            resp = _spark_response(q, src, t0)
         return resp
 
 
@@ -768,31 +745,21 @@ def _elapsed_ms(t0: float) -> float:
     return (time.perf_counter() - t0) * 1000
 
 
-def _spark_response(q: PQLQuery, src: DataFrame, t0: float,
-                    exact_segments: bool = False) -> dict:
+def _spark_response(q: PQLQuery, src: DataFrame, t0: float) -> dict:
     """The response of ``q`` over ``src`` computed by Spark: the compiled
-    statement runs, and its stats come from the executed plan."""
+    statement runs, and its stats come from the executed plan. When the
+    scans read no row — AQE left no scan, or the row-group stats ruled
+    out every row group — the queried segments come from their records:
+    ``totalDocs`` is their row total, as in Pinot, not 0."""
 
     def finish(df: DataFrame) -> dict:
         stats = plan_scan_stats(df, _elapsed_ms(t0))
-        if stats["totalDocs"] is None:
-            # no scan left in the executed plan: AQE replaced a plan whose
-            # filter matched nothing with an empty relation. The queried
-            # segments still come from their records.
+        if not stats["totalDocs"]:
             segs = table_segments(src)
             if segs is not None:
                 stats.update(totalDocs=sum(s.rows for s in segs),
-                             numDocsScanned=0, numEntriesScannedPostFilter=0,
                              numSegmentsQueried=len(segs),
-                             numSegmentsProcessed=len(segs),
-                             numSegmentsMatched=0)
-        # ``exact_segments=True`` trades one extra column-pruned scan
-        # for an exact numSegmentsMatched (see exact_segments_matched);
-        # the default keeps the zero-cost bound from plan_scan_stats.
-        if exact_segments:
-            stats["numSegmentsMatched"] = exact_segments_matched(
-                src, F.expr(_pred_sql(q.where))
-                if q.where is not None else None)
+                             numSegmentsProcessed=len(segs))
         return stats
 
     if q.is_aggregation and q.group_by:

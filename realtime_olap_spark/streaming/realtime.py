@@ -36,6 +36,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from realtime_olap_spark.catalog import parquet_relation
 from realtime_olap_spark.operators.aggregation import DEC
 
 _UNIT_MS = {"MILLISECONDS": 1, "SECONDS": 1000, "MINUTES": 60_000,
@@ -265,70 +266,46 @@ def decode_avro_stream(source: DataFrame, avro_schema_json: str,
         return source.select(value_col).mapInPandas(decode, schema=out_schema)
 
 
-def _locations_match(existing: str, sink_dir: str) -> bool:
-    """Whether an already-registered table LOCATION and a requested
-    sink directory name the same storage. Compares scheme + authority
-    + normalized path — NOT the path alone (r14 ADVICE killed the
-    endswith match; r15 ADVICE: ``hdfs://namenode/data/x`` or
-    ``s3a://bucket/data/x`` must not satisfy a local ``/data/x``
-    either). Empty scheme and ``file`` are the same filesystem."""
-    from urllib.parse import urlparse  # noqa: PLC0415
-
-    ex_u = urlparse(existing)
-    want_u = urlparse(sink_dir if "://" in sink_dir
-                      else os.path.abspath(sink_dir))
-
-    def fs(u):
-        return ((u.scheme or "file").lower(), u.netloc,
-                os.path.normpath(u.path) if u.path else "")
-
-    return fs(ex_u) == fs(want_u)
-
-
 def realtime_segments_table(spark: SparkSession, name: str,
                             sink_dir: str,
                             schema: str | None = None) -> DataFrame:
-    """Expose a realtime sink directory as a LIVE catalog table.
+    """Expose a realtime sink directory as the LIVE table ``name``: a
+    session temp view over ``spark.read.parquet(sink_dir)``.
 
-    A plain ``spark.read.parquet(sink)`` DataFrame pins its file
-    listing at creation, so segments committed AFTER a downstream view
-    was registered stay invisible to it. A catalog-backed relation
-    re-lists through the session FileStatusCache at each query's
-    planning, so :func:`refresh_segments` after each segment commit
-    makes new segments visible to already-registered views — the
-    broker's routing-table-update-on-segment-commit analog
-    (BaseBrokerRequestHandler routing refresh). ``schema`` (DDL
-    string) is required when the sink may still be empty.
-
-    ``name`` and ``sink_dir`` are interpolated into SQL, so both are
-    validated (no quotes/backticks/newlines); if a table of the same
-    name already exists its LOCATION must match ``sink_dir`` — a
-    silent reuse of a different directory would serve wrong data."""
+    Once the sink has committed a batch, Spark reads it through the
+    sink's commit log (``_spark_metadata``, its MetadataLogFileIndex), so
+    the view lists exactly the committed segments, never a file of an
+    in-flight or failed batch. The listing is fixed when the view is
+    made: :func:`refresh_segments` after each segment commit re-reads the
+    sink — the broker's routing-table update on segment commit
+    (BaseBrokerRequestHandler routing refresh). A second call re-points
+    ``name`` at ``sink_dir``. ``schema`` (DDL string) is required while
+    the sink may still be empty; a missing sink directory is created.
+    ``name`` must be a plain identifier."""
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
         raise ValueError(f"invalid table name: {name!r}")
-    if any(ch in sink_dir for ch in "'\"`\n\r;"):
-        raise ValueError(f"invalid sink_dir: {sink_dir!r}")
-    if spark.catalog.tableExists(name):
-        loc = spark.sql(f"DESCRIBE TABLE EXTENDED `{name}`").where(
-            "col_name = 'Location'").collect()
-        existing = loc[0]["data_type"] if loc else None
-        if existing is not None and not _locations_match(existing,
-                                                         sink_dir):
-            raise ValueError(
-                f"table {name!r} exists with location {existing!r}, "
-                f"not {sink_dir!r}")
-    else:
-        cols = f" ({schema})" if schema else ""
-        spark.sql(f"CREATE TABLE `{name}`{cols} USING parquet "
-                  f"LOCATION '{sink_dir}'")
+    path = spark._jvm.org.apache.hadoop.fs.Path(sink_dir)
+    path.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(path)
+    reader = spark.read.schema(schema) if schema else spark.read
+    reader.parquet(sink_dir).createOrReplaceTempView(name)
     return spark.table(name)
 
 
 def refresh_segments(spark: SparkSession, name: str) -> None:
-    """Invalidate the cached file listing after a segment commit —
-    already-registered views over :func:`realtime_segments_table` see
-    the new segments on their next query."""
-    spark.sql(f"REFRESH TABLE `{name}`")
+    """Make the segments committed since the live table ``name``
+    (:func:`realtime_segments_table`) was last read visible to the next
+    query: re-register the view from a fresh read of its sink, whose
+    path and schema come from the view itself. The sink is re-read, not
+    the view's file index refreshed: a view made before the sink's first
+    commit lists the directory, and a refreshed listing would include
+    uncommitted files."""
+    view = spark.table(name)
+    rel = parquet_relation(view)
+    roots = rel.relation().location().rootPaths() if rel is not None else None
+    if roots is None or roots.size() != 1:
+        raise ValueError(f"{name!r} is not a live segments table")
+    (spark.read.schema(view.schema).parquet(roots.head().toString())
+     .createOrReplaceTempView(name))
 
 
 def time_boundary(offline: DataFrame, time_col: str,

@@ -4,12 +4,9 @@
    at 4*max_frames (previously only SHOWN frames counted — a crafted
    stream of tiny hidden altref blocks forced unbounded full-frame
    reconstructions).
-2. realtime_segments_table input validation: table name / sink_dir
-   are interpolated into SQL, so both are validated, and an existing
-   table with a DIFFERENT location raises instead of silently reusing.
-3. Callable derived tables stay consistent across entry points: the
-   SQL temp view is re-registered from a fresh evaluation on every
-   Catalog.table() access and on refresh_derived().
+2. realtime_segments_table input validation: the table name must be
+   a plain identifier.
+3. (Retired: the catalog no longer mirrors its tables as SQL views.)
 4. decode_frames APNG fallback: a PNG whose animation chunks are
    malformed falls back to the still decode (the spec's display-the-
    default-image rule) instead of nulling out.
@@ -80,55 +77,13 @@ def test_realtime_segments_table_validates_inputs(spark, tmp_path):
         realtime_segments_table(spark, "bad`name", sink, sch)
     with pytest.raises(ValueError, match="invalid table name"):
         realtime_segments_table(spark, "bad name; drop", sink, sch)
-    with pytest.raises(ValueError, match="invalid sink_dir"):
-        realtime_segments_table(spark, "ok_name", sink + "'x", sch)
     # happy path registers and reads
     df = realtime_segments_table(spark, "rt_valid_r14", sink, sch)
     assert df.count() == 1
-    # idempotent re-call with the SAME location is fine
+    # a re-call with the same sink is fine
     assert realtime_segments_table(
         spark, "rt_valid_r14", sink, sch).count() == 1
-    # same name, DIFFERENT location: refuse the silent reuse
-    other = str(tmp_path / "other")
-    spark.createDataFrame([(2,)], sch).write.parquet(other)
-    with pytest.raises(ValueError, match="exists with location"):
-        realtime_segments_table(spark, "rt_valid_r14", other, sch)
     spark.sql("DROP TABLE rt_valid_r14")
-
-
-# ---------------------------------------------------------------------------
-# 3. Callable derived tables: SQL view == PQL path
-# ---------------------------------------------------------------------------
-
-def test_callable_derived_sql_view_stays_live(spark, tmp_path):
-    """r13 ADVICE: the SQL temp view for a callable-backed derived
-    table was a frozen snapshot while the PQL path re-evaluated per
-    query. Now table() re-registers the view from a fresh evaluation,
-    and refresh_derived() does so without a PQL access."""
-    from realtime_olap_spark.catalog import Catalog
-    from tests.conftest import SF_DIR as _SF
-
-    cat = Catalog(spark, _SF)
-    cat.register_views()
-    d = str(tmp_path / "live")
-    spark.createDataFrame([(1,)], "x long").write.parquet(d)
-    cat.register_derived("live_r14", lambda: spark.read.parquet(d))
-    assert spark.sql("SELECT count(*) n FROM live_r14") \
-        .collect()[0]["n"] == 1
-    # new data lands out-of-band
-    spark.createDataFrame([(2,), (3,)], "x long") \
-        .write.mode("append").parquet(d)
-    # PQL-path access refreshes the SQL view as a side effect
-    assert cat.table("live_r14").count() == 3
-    assert spark.sql("SELECT count(*) n FROM live_r14") \
-        .collect()[0]["n"] == 3
-    # refresh_derived alone (no table() access) also syncs the view
-    spark.createDataFrame([(4,)], "x long") \
-        .write.mode("append").parquet(d)
-    cat.refresh_derived("live_r14")
-    assert spark.sql("SELECT count(*) n FROM live_r14") \
-        .collect()[0]["n"] == 4
-    spark.catalog.dropTempView("live_r14")
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,7 @@
 """Round-15 ADVICE fixes, each pinned by a regression test.
 
-1. realtime_segments_table location guard compares normalized URI
-   PATHS for equality — a registered 'file:/mnt/data/x' no longer
-   satisfies a request for '/data/x' just because the string ends
-   with it.
+1. (Retired: a live table is a session view over its sink, with no
+   catalog location to guard.)
 2. bench.py records per-query run counts (default + exceptions map)
    instead of one inaccurate scalar.
 3. media_id (xxhash64 of path) collisions are detectable
@@ -32,30 +30,6 @@ import pytest
 from realtime_olap_spark.operators import multimodal as M
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
-
-
-# ---------------------------------------------------------------------------
-# 1. Location guard: URI-path equality, not endswith
-# ---------------------------------------------------------------------------
-
-def test_segments_table_location_guard_is_path_exact(spark, tmp_path):
-    from realtime_olap_spark.streaming import realtime_segments_table
-
-    sink = str(tmp_path / "mnt" / "data" / "x")
-    spark.createDataFrame([(1,)], "a long").write.parquet(sink)
-    assert realtime_segments_table(
-        spark, "rt_uri_r15", sink, "a long").count() == 1
-    # the old endswith check ACCEPTED '/data/x' because the registered
-    # 'file:/.../mnt/data/x' ends with it — must refuse now
-    with pytest.raises(ValueError, match="exists with location"):
-        realtime_segments_table(spark, "rt_uri_r15", "/data/x", "a long")
-    # non-normalized spellings of the SAME directory still accepted
-    assert realtime_segments_table(
-        spark, "rt_uri_r15", sink + "/", "a long").count() == 1
-    assert realtime_segments_table(
-        spark, "rt_uri_r15",
-        str(tmp_path / "mnt" / "." / "data" / "x"), "a long").count() == 1
-    spark.sql("DROP TABLE rt_uri_r15")
 
 
 # ---------------------------------------------------------------------------

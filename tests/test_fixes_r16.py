@@ -5,8 +5,8 @@
    cap no longer binds ~8x early in the against-join.
 2. (directive #5 / ADVICE) `_read_or_empty` degrades to empty ONLY
    for a missing directory; corrupt state fails the batch loudly.
-3. (ADVICE) the realtime segments-table location guard compares
-   scheme+authority too: hdfs://…/data/x never satisfies /data/x.
+3. (Retired: a live table is a session view over its sink, with no
+   catalog location to guard.)
 4. (directive #3) decode-free compressed-audio content keys: a
    re-tagged copy of the same encode (MP3 ID3v2/ID3v1/APE, FLAC
    metadata blocks, Ogg comment header) collides exactly; different
@@ -89,27 +89,6 @@ def test_corrupt_state_dir_fails_loudly(spark, tmp_path):
     (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
     with pytest.raises(Exception, match="(?i)parquet|footer|corrupt"):
         ingest.signatures().count()
-
-
-# ---------------------------------------------------------------------------
-# 3. location guard: scheme + authority
-# ---------------------------------------------------------------------------
-
-def test_locations_match_compares_scheme_and_authority():
-    from realtime_olap_spark.streaming.realtime import _locations_match
-
-    # same filesystem, different spellings
-    assert _locations_match("file:/data/x", "/data/x")
-    assert _locations_match("/data/x", "/data/x/")
-    assert _locations_match("file:/data/./x", "/data/x")
-    # a remote URI must never satisfy a local path with the same tail
-    assert not _locations_match("hdfs://namenode/data/x", "/data/x")
-    assert not _locations_match("s3a://bucket/data/x", "/data/x")
-    # differing authorities are different storage
-    assert not _locations_match("hdfs://nn1/data/x", "hdfs://nn2/data/x")
-    assert _locations_match("hdfs://nn1/data/x", "hdfs://nn1/data/x")
-    # and different paths still mismatch
-    assert not _locations_match("file:/data/x", "/data/y")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ import pytest
 from realtime_olap_spark.plans.pql import (BoolOp, Between, Cmp, Func, Ident,
                                            In, Lit, PQLEngine, RegexpLike,
                                            parse_pql)
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_ORACLE
 
 
 def test_parse_selection_defaults():
@@ -183,6 +183,28 @@ def test_empty_result_stats_are_ints(spark):
     assert out["numEntriesScannedPostFilter"] == 0
 
 
+@pytest.mark.parametrize("sf_dir, table, pql", [
+    # the row-group stats rule out every row group: the scan reads no row
+    (SF_DIR_ORACLE, "lineitem",
+     "SELECT count(*) FROM lineitem WHERE l_quantity > 1000"),
+    # nothing matched: AQE leaves no scan in the executed plan
+    (SF_DIR, "documents", "SELECT lang, count(*) FROM documents "
+     "WHERE REGEXP_LIKE(source, '^zzz$') GROUP BY lang"),
+])
+def test_total_docs_are_the_queried_segments(spark, sf_dir, table, pql):
+    """A Spark-path query whose scans read no row still reports the
+    queried segments, from their records, as Pinot does: ``totalDocs`` is
+    their row total (60,000 for the lineitem query at sf0.01), and every
+    segment counts as queried and processed, none as matched."""
+    eng = PQLEngine(spark, sf_dir)
+    out = eng.execute(pql)
+    src = eng.catalog.table(table)
+    n_segs = len(src.inputFiles())
+    assert out["totalDocs"] == src.count() > 0
+    assert out["numSegmentsQueried"] == out["numSegmentsProcessed"] == n_segs
+    assert out["numDocsScanned"] == out["numSegmentsMatched"] == 0
+
+
 def test_parse_is_null_rejected_with_pinot_shape():
     """IS [NOT] NULL parses (PQL2.g4 isClause) then rejects with the
     unsupported-operation message — the IR has no null predicate
@@ -200,54 +222,6 @@ def test_parse_is_null_rejected_with_pinot_shape():
     # a malformed IS clause is still a parse error, not the rejection
     with pytest.raises(ValueError, match="expected"):
         parse_pql("SELECT count(*) FROM events WHERE props IS 3")
-
-
-def test_exact_segments_matched_opt_in(spark, tmp_path):
-    """``execute(..., exact_segments=True)`` replaces the bounded
-    numSegmentsMatched with the exact count of parquet files that produced
-    at least one post-filter row (one extra column-pruned scan with
-    input_file_name() above the filtered scan).
-
-    A 4-file table where the predicate matches rows in exactly 2 files
-    distinguishes exact from the bound: the default path reports
-    files-processed (4) when anything matched; the exact path reports 2."""
-    import os
-
-    from realtime_olap_spark.plans.pql import PQLEngine, exact_segments_matched
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "lineitem")
-    # 4 files keyed by bucket; l_returnflag matches only buckets 0 and 1
-    df = spark.range(0, 400).select(
-        (F.col("id") % 4).alias("bucket"),
-        F.when(F.col("id") % 4 < 2, F.lit("R")).otherwise(F.lit("N"))
-        .alias("l_returnflag"),
-        F.col("id").alias("l_quantity"))
-    df.repartition("bucket").write.partitionBy("bucket").parquet(path)
-    os.makedirs(str(tmp_path / "as_table"), exist_ok=True)
-    spark.read.parquet(path).write.mode("overwrite") \
-        .parquet(str(tmp_path / "as_table" / "lineitem.parquet"))
-
-    eng = PQLEngine(spark, str(tmp_path / "as_table"))
-    src = eng.catalog.table("lineitem")
-    n_files = src.select(F.input_file_name()).distinct().count()
-    assert n_files >= 2  # multi-file table, else the probe proves nothing
-
-    exact = exact_segments_matched(src, F.col("l_returnflag") == "R")
-    by_hand = (src.where(F.col("l_returnflag") == "R")
-               .select(F.input_file_name().alias("f")).distinct().count())
-    assert exact == by_hand
-    assert exact < n_files  # the bound would have said n_files
-
-    out = eng.execute(
-        "SELECT count(*) FROM lineitem WHERE l_returnflag = 'R'",
-        exact_segments=True)
-    assert out["numSegmentsMatched"] == exact
-    assert out["numSegmentsProcessed"] >= exact
-    # no predicate: every file with rows matches
-    out_all = eng.execute("SELECT count(*) FROM lineitem",
-                          exact_segments=True)
-    assert out_all["numSegmentsMatched"] == n_files
 
 
 def test_grouped_stats_count_the_scan_once(spark):

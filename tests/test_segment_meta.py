@@ -95,14 +95,6 @@ def test_unanswered_queries_run_spark(eng):
                                   time.perf_counter()) is None, pql
 
 
-def test_exact_segments_adds_no_scan(eng):
-    resp, jobs = _run(eng, "SELECT count(*) FROM lineitem",
-                      exact_segments=True)
-    assert jobs == 0
-    segs = table_segments(eng.catalog.table("lineitem"))
-    assert resp["numSegmentsMatched"] == len([s for s in segs if s.rows])
-
-
 def test_live_table_count_follows_commits(spark, tmp_path):
     """The live table's segments are its committed files: a segment
     committed through ``RealtimeIngest`` and made visible by
@@ -138,6 +130,44 @@ def test_live_table_count_follows_commits(spark, tmp_path):
         assert resp["aggregationResults"][0]["groupByResult"] == []
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_live_view_lists_only_committed_segments(spark, tmp_path):
+    """A live table made on an empty sink lists the directory; after a
+    commit, ``refresh_segments`` re-reads the sink through its commit log,
+    so a stray uncommitted parquet file stays invisible to the metadata
+    answer and to Spark alike. A second ``realtime_segments_table`` call
+    re-points the view, and ``DROP TABLE IF EXISTS`` removes it."""
+    sch = "event_id long, event_type string"
+    landing, sink = tmp_path / "landing", tmp_path / "sink"
+    landing.mkdir()
+    sink.mkdir()
+    name = f"live_{uuid.uuid4().hex[:8]}"
+    realtime_segments_table(spark, name, str(sink), sch)
+    assert spark.table(name).count() == 0
+    spark.createDataFrame([(i, "view") for i in range(6)], sch) \
+        .write.mode("append").parquet(str(landing))
+    RealtimeIngest(spark, str(tmp_path / "ckpt"), str(sink)).start_append(
+        spark.readStream.schema(sch).parquet(str(landing))
+    ).awaitTermination()
+    pq.write_table(pa.table({"event_id": pa.array([100, 101], pa.int64()),
+                             "event_type": ["stray", "stray"]}),
+                   str(sink / "part-stray.parquet"))
+    refresh_segments(spark, name)
+    eng = PQLEngine(spark, SF_DIR)
+    eng.catalog.register_derived(name, lambda: spark.table(name))
+    try:
+        resp, jobs = _run(eng, f"SELECT count(*) FROM {name}")
+        assert jobs == 0
+        assert resp["aggregationResults"][0]["value"] == 6
+        assert spark.table(name).count() == 6
+        other = str(tmp_path / "other")
+        spark.createDataFrame([(7, "click")], sch).write.parquet(other)
+        realtime_segments_table(spark, name, other, sch)
+        assert spark.table(name).collect() == [(7, "click")]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    assert not spark.catalog.tableExists(name)
 
 
 def _two_part_table(tmp_path, name: str, *parts: dict) -> str:

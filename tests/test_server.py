@@ -9,6 +9,7 @@ import urllib.error
 import urllib.request
 
 import pytest
+from pyspark.sql import functions as F
 
 from realtime_olap_spark.server import PQLServer
 from tests.conftest import SF_DIR
@@ -234,29 +235,11 @@ def test_pql_codec_inventory_over_registered_media_corpus(server):
     assert got == {"avc1": 2, "vp8": 2, "gif": 1}
 
 
-def test_sql_entry_point_sees_derived_media_views(spark):
-    """Entry point C (spark.sql over registered views) reaches the
-    derived media tables too."""
-    from realtime_olap_spark.catalog import Catalog
-    from tests.conftest import SF_DIR as _SF
-
-    cat = Catalog(spark, _SF)
-    cat.register_views()
-    row = spark.sql(
-        "SELECT COUNT(*) AS n, COUNT(DISTINCT media_type) AS k "
-        "FROM media").collect()[0]
-    assert row["n"] > 0 and row["k"] == 3
-    ent = spark.sql(
-        "SELECT MAX(byte_entropy) AS e FROM media_features"
-    ).collect()[0]["e"]
-    assert 0.0 < ent <= 8.0
-
-
 def test_register_derived_guards_and_late_view_registration(spark):
     """r13 ADVICE: the built-in DERIVED_TABLES names are reserved in
     register_derived (shadowing 'media' would silently reroute the
-    PQL media surface), and a table registered AFTER register_views()
-    becomes a SQL temp view immediately — no re-registration dance."""
+    PQL media surface), and a table registered after the catalog's
+    first use is addressable at once."""
     from realtime_olap_spark.catalog import Catalog
     from tests.conftest import SF_DIR as _SF
 
@@ -266,10 +249,9 @@ def test_register_derived_guards_and_late_view_registration(spark):
         cat.register_derived("media", one)
     with pytest.raises(ValueError, match="physical table"):
         cat.register_derived("orders", one)
-    cat.register_views()
+    cat.table("orders")
     cat.register_derived("late_tbl_r13", spark.range(3).toDF("x"))
-    assert spark.sql("SELECT count(*) AS n FROM late_tbl_r13") \
-        .collect()[0]["n"] == 3
+    assert cat.table("late_tbl_r13").count() == 3
 
 
 # ---------------------------------------------------------------------------
@@ -338,10 +320,9 @@ def test_pql_events_hourly_gapfilled_table(server):
     res = resp["aggregationResults"][0]
     grid = {g["group"][0]: int(g["value"]) for g in res["groupByResult"]}
     assert set(grid) == {"view", "click", "signup", "purchase", "error"}
-    spark = server.engine.catalog.spark
-    hourly = spark.sql(
-        "SELECT event_type, count(DISTINCT date_trunc('hour', ts)) n "
-        "FROM events GROUP BY event_type").collect()
+    hourly = (server.engine.catalog.table("events").groupBy("event_type")
+              .agg(F.count_distinct(F.date_trunc("hour", "ts")).alias("n"))
+              .collect())
     observed = {r["event_type"]: r["n"] for r in hourly}
     for et, n in grid.items():
         assert n >= observed[et], (et, n, observed[et])
